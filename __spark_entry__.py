@@ -33,6 +33,7 @@ from async_stream_processing_spark.plans.event_relation import events_relation
 from async_stream_processing_spark.sources.parquet import load_table
 from async_stream_processing_spark.sources.synthetic import timer_ticks
 from async_stream_processing_spark.streaming.replay import (
+    await_drain,
     shuffle_guard as _shuffle_guard,
 )
 
@@ -3221,7 +3222,7 @@ def q_stream_lake_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                     stats_cols=["user_id"],
                     prepare=lambda b: b.repartitionByRange(2, "user_id"),
                 )
-                q.awaitTermination(300)
+                await_drain(q, 300)
 
         _drain_into_lake(os.path.join(ck, "first"))
         # The REDELIVERY PROOF (a second fresh-checkpoint drain whose

@@ -19,7 +19,15 @@ llm/         dedup (exact/minhash/simhash/jaccard/embedding), ANN, multimodal
 streaming/   the same operators under Structured Streaming
 """
 
-from .session import get_spark
-
 __all__ = ["get_spark"]
 __version__ = "0.1.0"
+
+
+def __getattr__(name: str):
+    # Lazy (PEP 562): ``python -m async_stream_processing_spark.worker_shim``
+    # imports this package and must run before anything imports pyspark.
+    if name == "get_spark":
+        from .session import get_spark
+
+        return get_spark
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

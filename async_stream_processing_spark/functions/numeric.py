@@ -45,30 +45,3 @@ def exact_sum(col: Column | str, scale: int = 6) -> Column:
     """``SUM`` that is bit-identical regardless of evaluation order."""
     return F.sum(dec(col, scale)).cast("double")
 
-
-def exact_avg(col: Column | str, scale: int = 6) -> Column:
-    """Order-independent mean: exact decimal sum / count, divided in double."""
-    c = F.col(col) if isinstance(col, str) else col
-    return (F.sum(dec(c, scale)).cast("double") / F.count(c)).cast("double")
-
-
-def exact_dot_sum(a: Column | str, b: Column | str, scale_a: int = 6, scale_b: int = 0) -> Column:
-    """``SUM(a*b)`` with the product taken in decimal space (exact)."""
-    return F.sum(dec(a, scale_a) * dec(b, scale_b)).cast("double")
-
-
-def sql_dec(expr: str, scale: int = 6) -> str:
-    return f"CAST(({expr}) AS DECIMAL(18,{scale}))"
-
-
-def sql_exact_sum(expr: str, scale: int = 6) -> str:
-    """DuckDB-side rendering of :func:`exact_sum` for oracle queries."""
-    return f"CAST(SUM({sql_dec(expr, scale)}) AS DOUBLE)"
-
-
-def sql_exact_avg(expr: str, scale: int = 6) -> str:
-    return f"CAST(CAST(SUM({sql_dec(expr, scale)}) AS DOUBLE) / COUNT({expr}) AS DOUBLE)"
-
-
-def sql_exact_dot_sum(a: str, b: str, scale_a: int = 6, scale_b: int = 0) -> str:
-    return f"CAST(SUM({sql_dec(a, scale_a)} * {sql_dec(b, scale_b)}) AS DOUBLE)"

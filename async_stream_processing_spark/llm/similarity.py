@@ -857,10 +857,6 @@ def knn_pq_adc(
     )
 
 
-def _sql_sub(arr: str, j: int, dsub: int) -> str:
-    return f"{arr}[{j * dsub + 1}:{j * dsub + dsub}]"
-
-
 def _sql_d2q(a: str, b: str) -> str:
     return (
         f"CAST(FLOOR(list_reduce(list_transform(list_zip({a}, {b}), "

@@ -74,13 +74,6 @@ def merge_streams(*streams: DataFrame) -> DataFrame:
     return out
 
 
-def event_order(*extra: str | Column) -> list[Column]:
-    """The canonical total order: ``ts, seq`` (+ optional payload columns)."""
-    cols: list[Column] = [F.col(TS), F.col(SEQ)]
-    cols.extend(F.col(c) if isinstance(c, str) else c for c in extra)
-    return cols
-
-
 def events_relation(spark, sf_dir: str) -> DataFrame:
     """Load the driver's ``events`` table as an event relation.
 

@@ -14,6 +14,10 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: directory holding this package; Python workers import the daemon shim
+#: from here whatever their working directory
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "async-stream-processing-spark",
@@ -63,6 +67,13 @@ def get_spark(
         # recovers from 89 s back to 14 s once the cleaner fires).
         .config("spark.cleaner.periodicGC.interval",
                 os.environ.get("SPARK_GRAFT_PERIODIC_GC", "60s"))
+        # Python workers fork from a daemon that first drops the archives
+        # they need not import from (worker_shim.py): each task's
+        # importlib.invalidate_caches() otherwise re-reads the spark-core
+        # jar and pyspark.zip directories (SCALE.md, "Python workers").
+        .config("spark.python.daemon.module",
+                "async_stream_processing_spark.worker_shim")
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
     )
     if master is not None:
         builder = builder.master(master)

@@ -35,6 +35,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 
 def replay_stream(
@@ -299,6 +300,20 @@ def stream_stream_join(
     )
 
 
+def await_drain(q: StreamingQuery, timeout_s: float) -> None:
+    """Wait for a finite (``availableNow``) query to finish.  On timeout,
+    stop it and raise with its last progress: a caller must never read
+    a half-drained sink as the answer.  A failed query raises from
+    ``awaitTermination`` itself."""
+    if not q.awaitTermination(timeout_s):
+        progress = q.lastProgress
+        q.stop()
+        raise TimeoutError(
+            f"streaming query {q.name or q.id} still running after "
+            f"{timeout_s} s; stopped. lastProgress: {progress}"
+        )
+
+
 #: per-process tally of micro-batches drained (bench reads + resets
 #: this around each query so fixed micro-batch drain overhead is
 #: visible per stream query instead of being misread as operator cost
@@ -342,6 +357,9 @@ def drain(stream_df: DataFrame, output_mode: str = "complete",
         to_files = output_mode == "complete"
     if to_files:
         out_dir = tempfile.mkdtemp(prefix="asp_drain_")
+        # the temp dir lives until process exit (tiny -- it holds one
+        # aggregated result, not data), a timed-out drain's included
+        atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
 
         def _snapshot(batch_df: DataFrame, batch_id: int) -> None:
             DRAIN_BATCH_TALLY["batches"] += 1
@@ -353,12 +371,9 @@ def drain(stream_df: DataFrame, output_mode: str = "complete",
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(timeout_s)
+        await_drain(q, timeout_s)
         DRAIN_BATCH_TALLY["drains"] += 1
-        # lazy read over the snapshot files: no extra materialization
-        # pass; the temp dir lives until process exit (tiny -- it holds
-        # one aggregated result, not data)
-        atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
+        # lazy read over the snapshot files: no extra materialization pass
         return spark.read.parquet(out_dir)
     name = "drain_" + uuid.uuid4().hex[:12]
     q = (
@@ -368,7 +383,7 @@ def drain(stream_df: DataFrame, output_mode: str = "complete",
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_s)
+    await_drain(q, timeout_s)
     DRAIN_BATCH_TALLY["drains"] += 1
     # batchId is 0-based and monotone within this fresh query, so
     # lastProgress.batchId + 1 == micro-batches run; recentProgress is

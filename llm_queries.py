@@ -59,6 +59,7 @@ from async_stream_processing_spark.llm.text_analysis import (
     token_counts,
 )
 from async_stream_processing_spark.sources.parquet import load_table
+from async_stream_processing_spark.streaming.replay import await_drain
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1199,7 +1200,7 @@ def q_stream_ivfpq_upsert(spark, sf_dir):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
+        await_drain(q, 300)
         out = ivfpq_read_codes(spark, store).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(store, ignore_errors=True)
@@ -1369,7 +1370,7 @@ def q_stream_versioned_sink(spark, sf_dir):
     try:
         s = stream_table(spark, sf_dir, "documents")
         q = versioned_sink(s, lake, ck)
-        q.awaitTermination(300)
+        await_drain(q, 300)
         out = read_version(spark, lake).select(
             "doc_id", "text", "lang", "source", "n_chars"
         ).localCheckpoint(eager=True)
@@ -1480,7 +1481,7 @@ def q_stream_versioned_merge(spark, sf_dir):
         q = versioned_merge_sink(
             stream, lake, ["doc_id"], ck, delete_col="is_delete"
         )
-        q.awaitTermination(300)
+        await_drain(q, 300)
         out = read_version(spark, lake).localCheckpoint(eager=True)
     finally:
         for d in (lake, src, ck):
@@ -2208,7 +2209,7 @@ def q_stream_versioned_maintained(spark, sf_dir):
         ).option("maxFilesPerTrigger", 1).parquet(src)
         q = versioned_sink(s, lake, ck, compact_every=4,
                            compact_target_files=1, vacuum_keep=3)
-        q.awaitTermination(300)
+        await_drain(q, 300)
         out = read_version(spark, lake).select(
             "doc_id", "text", "lang", "source", "n_chars"
         ).localCheckpoint(eager=True)

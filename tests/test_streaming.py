@@ -951,3 +951,18 @@ def test_reorder_buffer_hot_key_state_bounded():
                         [rows[i][2] for i in srt],
                         [rows[i][1] for i in srt])
     assert tuple(spec) == tuple(want)
+
+
+@pytest.mark.parametrize("output_mode", ["complete", "update"])
+def test_drain_timeout_raises_and_stops_query(spark, tmp_path, output_mode):
+    """A drain that outlives its timeout must fail, not hand back a
+    partial snapshot, and must leave no stream running behind it."""
+    from async_stream_processing_spark.streaming.replay import drain
+
+    src = str(tmp_path / "src")
+    _write_events(spark, src, _rows(40), n_files=4)
+    counts = replay_stream(spark, src, EVENTS_SCHEMA,
+                           max_files_per_trigger=1).groupBy("user_id").count()
+    with pytest.raises(TimeoutError, match="lastProgress"):
+        drain(counts, output_mode=output_mode, timeout_s=0.001)
+    assert spark.streams.active == []
