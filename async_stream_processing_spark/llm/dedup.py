@@ -24,6 +24,7 @@ hashing.py; swap ``hash_mode='xxhash64'`` for production speed).
 from __future__ import annotations
 
 import re
+from contextlib import nullcontext
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -36,6 +37,7 @@ from ..functions.hashing import (
     stable_hash60,
 )
 from ..functions.text import shingles, sql_tokens, tokens
+from ..streaming.replay import shuffle_guard
 
 N_MINHASH = 16
 #: 8 bands x 2 rows: for planted near-dups at J>=0.8 the miss probability is
@@ -874,8 +876,8 @@ def connected_components(
     by re-planning and task overhead on few-row shuffles, not by data
     (A/B at sf0.1: dedup_clusters ~6.3 -> ~4.5 s warm).  A big graph
     keeps the session's settings -- the threshold, not the pin, is what
-    scales.  NOTE the pin is SESSION conf for the loop's duration
-    (restored in a finally) and so assumes the single-controller
+    scales.  NOTE the pin is SESSION conf for the loop's duration (set
+    and restored by ``shuffle_guard``) and so assumes the single-controller
     execution model this engine uses throughout -- a host application
     planning unrelated queries on the same session from another thread
     during the loop would see the pinned settings; isolate with a
@@ -886,17 +888,8 @@ def connected_components(
         edges.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
     )
     pin = edges.count() < 1_000_000
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if pin:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with shuffle_guard(spark, "8") if pin else nullcontext():
         return _cc_loop(both, max_iter)
-    finally:
-        if pin:
-            spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
 def _cc_loop(both: DataFrame, max_iter: int) -> tuple[DataFrame, int]:
@@ -1344,14 +1337,19 @@ def substring_dup_spans(
     # 2 <= occurrences <= max_occurrences reproduces the old hot-gram
     # cap (count per gram) plus the no-pair singles.  Cell cost is
     # bounded by max_occurrences^2 pairs per gram -- the same cap that
-    # bounded the old join's bucket.
+    # bounded the old join's bucket.  The cap filters on a windowed
+    # per-gram count BEFORE collect_list, so a boilerplate gram never
+    # builds its occurrence array in one aggregation buffer (the window
+    # buffer spills); the groupBy reuses the window's gram partitioning.
+    n_occ = F.count(F.lit(1)).over(Window.partitionBy("gram"))
     occ = (
         _winnowed_grams(docs, n, w, text)
+        .withColumn("__n_occ", n_occ)
+        .filter(
+            (F.col("__n_occ") >= 2) & (F.col("__n_occ") <= max_occurrences)
+        )
         .groupBy("gram")
         .agg(F.collect_list(F.struct("doc_id", "pos")).alias("os"))
-        .filter(
-            (F.size("os") >= 2) & (F.size("os") <= max_occurrences)
-        )
     )
     pairs = F.flatten(
         F.transform(

@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..plans.scale import topk_by_group
+from ..streaming.replay import shuffle_guard
 
 
 def _as_double(arr: Column) -> Column:
@@ -472,15 +473,8 @@ def kmeans_train(
     # shuffle partitions on 512-row shuffles is task overhead.  Pin both
     # for the loop, restore after; at cluster scale revisit only the
     # partition count (the agg output is k*d rows regardless of corpus).
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with shuffle_guard(spark, "8"):
         cents_rows = _train_loop(embeddings, cents_rows, n_iter)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return spark.createDataFrame(cents_rows, cent_schema)
 
 

@@ -410,18 +410,25 @@ _GUARD_LOCK = threading.RLock()
 
 @contextmanager
 def shuffle_guard(spark: SparkSession, shuffle_partitions: str):
-    """Temporarily lower ``spark.sql.shuffle.partitions`` for one drain,
-    serialized under ``_GUARD_LOCK`` so overlapping guarded sections
-    can't restore each other's temporary value (r10 ADVICE).  Use this
-    instead of inline set/restore anywhere a local-scale drain needs a
-    per-query partition count."""
+    """Temporarily lower ``spark.sql.shuffle.partitions`` and pin AQE off
+    for one local-scale section (a drain, an iterative loop), serialized
+    under ``_GUARD_LOCK`` so overlapping guarded sections can't restore
+    each other's temporary values (r10 ADVICE).  Use this instead of
+    inline set/restore anywhere a section needs a per-query partition
+    count."""
+    pinned = {
+        "spark.sql.shuffle.partitions": shuffle_partitions,
+        "spark.sql.adaptive.enabled": "false",
+    }
     with _GUARD_LOCK:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", shuffle_partitions)
+        prev = {k: spark.conf.get(k) for k in pinned}
+        for k, v in pinned.items():
+            spark.conf.set(k, v)
         try:
             yield
         finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+            for k, v in prev.items():
+                spark.conf.set(k, v)
 
 
 def drain_guarded(stream_df: DataFrame, output_mode: str = "complete",

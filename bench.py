@@ -9,6 +9,12 @@ machine-readable summary must be the LAST line and short):
 Per-query timings are also written to ``BENCH_DETAIL.json`` next to this
 file so they survive regardless of stdout capture limits.
 
+``python bench.py name [name ...]`` times only the named queries, each
+twice (cold, then warm), after the same session warmup.  It first prints
+one ``name: cold=<s> warm=<s>`` line per query; the JSON lines then carry
+the warm times.  A named run writes the side file only when
+``SPARK_GRAFT_BENCH_DETAIL`` names one.
+
 Env: ``SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1),
 ``SPARK_GRAFT_CPUS`` (default 32).  Each query is forced with a noop sink
 (full execution, zero driver collection) and timed individually.
@@ -25,12 +31,17 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
-def main() -> None:
+def main(names: list[str]) -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
     import __spark_entry__ as entrymod
     from async_stream_processing_spark import get_spark
+
+    qs = entrymod.queries()
+    unknown = [n for n in names if n not in qs]
+    if unknown:
+        sys.exit(f"unknown queries: {unknown}")
 
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -44,7 +55,6 @@ def main() -> None:
     spark.read.parquet(f"{sf_dir}/events.parquet").count()
     warm_dir = "/root/testdata/sf0.001"
     if os.path.isdir(warm_dir):
-        qs = entrymod.queries()
         # ivf_kmeans warms the Lloyd-iteration agg codegen (the plans the
         # training loop reuses via the codegen cache)
         # dedup_clusters warms the CC-loop codegen (pinned-conf joins +
@@ -78,7 +88,9 @@ def main() -> None:
 
     # test hook: SPARK_GRAFT_BENCH_LIMIT=N times only the first N queries
     # (the stdout contract is what tests/test_bench_contract.py pins)
-    items = list(entrymod.queries().items())
+    items = [
+        (n, qs[n]) for n in dict.fromkeys(names) for _ in range(2)
+    ] or list(qs.items())
     limit = int(os.environ.get("SPARK_GRAFT_BENCH_LIMIT", "0"))
     if limit:
         items = items[:limit]
@@ -94,7 +106,10 @@ def main() -> None:
         DRAIN_BATCH_TALLY["drains"] = 0
         t0 = time.time()
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        timings[name] = round(time.time() - t0, 3)
+        took = round(time.time() - t0, 3)
+        if names and name in timings:
+            print(f"{name}: cold={timings[name]} warm={took}", flush=True)
+        timings[name] = took
         if DRAIN_BATCH_TALLY["drains"]:
             # micro-batch drain overhead is per-BATCH fixed cost: a
             # 5 s stream query draining 3 batches is ~3 engine spin-ups,
@@ -124,13 +139,17 @@ def main() -> None:
     }
     # SPARK_GRAFT_BENCH_DETAIL overrides the side-file path so partial /
     # test runs (e.g. BENCH_LIMIT under pytest) never clobber the
-    # full-run BENCH_DETAIL.json the round records.
-    detail_path = os.environ.get("SPARK_GRAFT_BENCH_DETAIL") or os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
-    )
+    # full-run BENCH_DETAIL.json the round records; a named run writes
+    # only there.
+    detail_path = os.environ.get("SPARK_GRAFT_BENCH_DETAIL")
+    if not (detail_path or names):
+        detail_path = os.path.join(
+            os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
+        )
     try:
-        with open(detail_path, "w") as f:
-            json.dump(detail, f, indent=1)
+        if detail_path:
+            with open(detail_path, "w") as f:
+                json.dump(detail, f, indent=1)
     except OSError as e:  # the stdout contract survives a failed side write
         print(f"BENCH_DETAIL.json write failed: {e}", file=sys.stderr)
     # Long detail line first; SHORT summary LAST so a bounded stdout-tail
@@ -147,4 +166,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

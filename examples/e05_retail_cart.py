@@ -41,6 +41,7 @@ def main(spark):
     # live: same events through the stateful streaming fold
     from async_stream_processing_spark.streaming.cart import cart_stream
     from async_stream_processing_spark.streaming.replay import (
+        await_drain,
         process_stream,
         replay_stream,
     )
@@ -54,7 +55,7 @@ def main(spark):
             lambda b, _: out.extend(b.collect()),
             checkpoint=f"{tmp}/ckpt",
         )
-        q.awaitTermination(120)
+        await_drain(q, 120)
     print("-- e5 cart fold (live, per-event):")
     for r in sorted(out, key=lambda r: (r["user_id"], r["event_kind"])):
         print("  ", r.asDict())

@@ -42,6 +42,7 @@ def main(spark):
         versions,
     )
     from async_stream_processing_spark.sources.parquet import load_table
+    from async_stream_processing_spark.streaming.replay import await_drain
 
     docs = load_table(spark, SF_DIR, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
@@ -62,7 +63,7 @@ def main(spark):
     ).option("maxFilesPerTrigger", 1).parquet(src)
     q = versioned_sink(stream, lake, ck, compact_every=3,
                        compact_target_files=1, vacuum_keep=3)
-    q.awaitTermination(120)
+    await_drain(q, 120)
     head_files = len(
         read_version(spark, lake).inputFiles()
     )

@@ -45,6 +45,10 @@ def main(spark):
         versions,
     )
     from async_stream_processing_spark.sources.parquet import load_table
+    from async_stream_processing_spark.streaming.replay import (
+        await_drain,
+        drain,
+    )
 
     docs = load_table(spark, SF_DIR, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
@@ -91,10 +95,10 @@ def main(spark):
         ck = tempfile.mkdtemp(prefix=f"asp_recovery_ck_{app}_")
         return versioned_sink(stream, lake, ck, txn_app_id=app)
 
-    sink(src_a, "ingest-a").awaitTermination(120)
+    await_drain(sink(src_a, "ingest-a"), 120)
     # stream A committed batches 0..2; stream B's batch 0 must NOT be
     # masked by A's watermark (the pre-r9 single watermark would skip it)
-    sink(src_b, "ingest-b").awaitTermination(120)
+    await_drain(sink(src_b, "ingest-b"), 120)
     wa = last_committed_batch_id(lake, "ingest-a")
     wb = last_committed_batch_id(lake, "ingest-b")
     assert wa == 2 and wb == 0, (wa, wb)
@@ -125,7 +129,6 @@ def main(spark):
     stream = spark.readStream.schema(
         spark.read.parquet(late_dir).schema
     ).option("maxFilesPerTrigger", 1).parquet(late_dir)
-    from async_stream_processing_spark.streaming.replay import drain
 
     windows = drain(
         stream.withWatermark("ts", "30 minutes")

@@ -77,7 +77,7 @@ def q_dedup_exact(spark, sf_dir):
     return exact_dedup(_docs(spark, sf_dir))
 
 
-def q_dedup_minhash(spark, sf_dir):
+def q_dedup_minhash_lsh(spark, sf_dir):
     """MinHash(16)+LSH(8x2) near-dup pairs verified at Jaccard >= 0.25.
     Reads the session-shared verified-pair artifact (computed once,
     reused by clusters/keep_best/source_matrix)."""
@@ -88,7 +88,7 @@ def q_dedup_minhash(spark, sf_dir):
     return verified_pairs_cached(_docs(spark, sf_dir), threshold=0.25)
 
 
-def q_ngram_jaccard(spark, sf_dir):
+def q_ngram_jaccard_pairs(spark, sf_dir):
     """Exact 3-gram Jaccard pairs >= 0.25 via shingle equi-join (the
     blocking IS the shared-shingle join -- no all-pairs; intersection
     counted in the same join that discovers the pair)."""
@@ -124,7 +124,7 @@ def q_containment_pairs(spark, sf_dir):
     return containment_pairs(doc_shingle_hashes(_docs(spark, sf_dir)), 0.4)
 
 
-def q_simhash(spark, sf_dir):
+def q_simhash_fingerprint(spark, sf_dir):
     """Per-doc 32-bit SimHash fingerprint (Charikar 2002)."""
     return simhash(_docs(spark, sf_dir), bits=32)
 
@@ -144,7 +144,7 @@ def q_knn_range_search(spark, sf_dir):
     return range_search(_emb(spark, sf_dir), n_queries=10, tau=0.25)
 
 
-def q_ann_buckets(spark, sf_dir):
+def q_ann_lsh_buckets(spark, sf_dir):
     """Random-hyperplane LSH bucket per vector (6 planes -> 64 buckets)."""
     return lsh_buckets(_emb(spark, sf_dir), n_planes=6)
 
@@ -231,14 +231,14 @@ def q_embedding_dedup(spark, sf_dir):
     )
 
 
-def q_top_terms(spark, sf_dir):
+def q_top_terms_per_source(spark, sf_dir):
     """Term statistics per source (log-free TF-IDF shape)."""
     from async_stream_processing_spark.llm.sampling import top_terms_per_source
 
     return top_terms_per_source(_docs(spark, sf_dir), k=10)
 
 
-def q_repetition(spark, sf_dir):
+def q_repetition_stats(spark, sf_dir):
     """Gopher-style repetition/boilerplate signals per doc."""
     from async_stream_processing_spark.llm.sampling import repetition_stats
 
@@ -268,7 +268,7 @@ def q_token_counts(spark, sf_dir):
     return token_counts(_docs(spark, sf_dir))
 
 
-def q_fingerprints(spark, sf_dir):
+def q_doc_fingerprints(spark, sf_dir):
     return fingerprints(_docs(spark, sf_dir))
 
 
@@ -326,7 +326,7 @@ def q_redact_pii(spark, sf_dir):
     return redact(docs)
 
 
-def q_pipeline(spark, sf_dir):
+def q_pipeline_end_to_end(spark, sf_dir):
     """END-TO-END curation pipeline: quality gate -> exact dedup ->
     MinHash-LSH near-dedup -> deterministic sampling -> per-source stats,
     as ONE composed plan, oracle-checked as a whole."""
@@ -379,7 +379,7 @@ def q_multimodal_video(spark, sf_dir):
     return decode_video_header(synth_mp4_payload(_docs(spark, sf_dir)))
 
 
-def q_stream_multimodal(spark, sf_dir):
+def q_stream_multimodal_decode(spark, sf_dir):
     """Header decode EXECUTED BY THE STREAMING ENGINE: the same
     synth -> parse pipeline over a documents STREAM (stateless
     mapInPandas -- each micro-batch decodes independently, no state, so
@@ -2595,159 +2595,6 @@ def q_langid_confusion(spark, sf_dir):
     )
 
     return langid_confusion(_docs(spark, sf_dir))
-
-
-LLM_QUERIES = {
-    "lsh_s_curve": q_lsh_s_curve,
-    "kmeans_silhouette": q_kmeans_silhouette,
-    "versioned_time_travel": q_versioned_time_travel,
-    "versioned_merge": q_versioned_merge,
-    "versioned_merge_composite": q_versioned_merge_composite,
-    "versioned_merge_schema": q_versioned_merge_schema,
-    "versioned_changes_rows": q_versioned_changes_rows,
-    "stream_versioned_maintained": q_stream_versioned_maintained,
-    "versioned_clone": q_versioned_clone,
-    "versioned_restore": q_versioned_restore,
-    "versioned_history": q_versioned_history,
-    "versioned_delete": q_versioned_delete,
-    "versioned_delete_mor": q_versioned_delete_mor,
-    "versioned_mv_incremental": q_versioned_mv_incremental,
-    "versioned_update": q_versioned_update,
-    "versioned_update_mor": q_versioned_update_mor,
-    "stream_versioned_merge": q_stream_versioned_merge,
-    "versioned_compact": q_versioned_compact,
-    "versioned_changes": q_versioned_changes,
-    "versioned_prune_read": q_versioned_prune_read,
-    "versioned_point_lookup": q_versioned_point_lookup,
-    "knn_pq_rotated": q_knn_pq_rotated,
-    "pq_rotation_recall": q_pq_rotation_recall,
-    "stream_versioned_sink": q_stream_versioned_sink,
-    "perceptron_eval": q_perceptron_eval,
-    "source_token_diversity": q_source_token_diversity,
-    "vocab_growth": q_vocab_growth,
-    "unimax_mixture": q_unimax_mixture,
-    "hard_negatives": q_hard_negatives,
-    "pmi_pairs": q_pmi_pairs,
-    "langid_confusion": q_langid_confusion,
-    "sq8_codes": q_sq8_codes,
-    "knn_hamming": q_knn_hamming,
-    "matryoshka_recall": q_matryoshka_recall,
-    "versioned_compact_zorder": q_versioned_compact_zorder,
-    "hamming_recall": q_hamming_recall,
-    "knn_hamming_rerank": q_knn_hamming_rerank,
-    "hamming_rerank_recall": q_hamming_rerank_recall,
-    "stream_binary_codes": q_stream_binary_codes,
-    "knn_sq8": q_knn_sq8,
-    "stream_sq8_codes": q_stream_sq8_codes,
-    "sq8_recall": q_sq8_recall,
-    "doremi_mixture": q_doremi_mixture,
-    "bpe_coverage": q_bpe_coverage,
-    "packing_efficiency": q_packing_efficiency,
-    "length_bucketed_packing": q_length_bucketed_packing,
-    "trigram_backoff": q_trigram_backoff,
-    "stream_trigram_backoff": q_stream_trigram_backoff,
-    "source_tv_distance": q_source_tv_distance,
-    "tfidf_cosine_pairs": q_tfidf_cosine_pairs,
-    "intradoc_dedup": q_intradoc_dedup,
-    "bpe_apply": q_bpe_apply,
-    "stream_simhash": q_stream_simhash,
-    "stream_bpe_apply": q_stream_bpe_apply,
-    "filter_audit": q_filter_audit,
-    "dedup_source_matrix": q_dedup_source_matrix,
-    "bigram_predictability": q_bigram_predictability,
-    "semdedup": q_semdedup,
-    "ivfpq_recall": q_ivfpq_recall,
-    "ivfpq_upsert": q_ivfpq_upsert,
-    "knn_ivfpq_served": q_knn_ivfpq_served,
-    "stream_ivfpq_upsert": q_stream_ivfpq_upsert,
-    "knn_refine": q_knn_refine,
-    "stream_minhash_sigs": q_stream_minhash_sigs,
-    "minhash_sigs": q_minhash_sigs,
-    "dedup_keep_best": q_dedup_keep_best,
-    "temperature_mixture": q_temperature_mixture,
-    "stream_pq_codes": q_stream_pq_codes,
-    "pq_dedup_groups": q_pq_dedup_groups,
-    "bpe_merge_pairs": q_bpe_merge_pairs,
-    "ann_recall": q_ann_recall,
-    "knn_ivfpq": q_knn_ivfpq,
-    "dedup_pair_recall": q_dedup_pair_recall,
-    "rp_project": q_rp_project,
-    "line_dedup": q_line_dedup,
-    "bpe_train": q_bpe_train,
-    "pq_codes": q_pq_codes,
-    "knn_pq_adc": q_knn_pq_adc,
-    "bm25_topk": q_bm25_topk,
-    "train_val_split": q_train_val_split,
-    "epoch_shuffle": q_epoch_shuffle,
-    "cms_token_counts": q_cms_token_counts,
-    "stream_c4_quality": q_stream_c4_quality,
-    "gopher_repetition_full": q_gopher_repetition_full,
-    "c4_quality": q_c4_quality,
-    "hashed_ngram_features": q_hashed_ngram_features,
-    "dsir_score": q_dsir_score,
-    "ngram_novelty": q_ngram_novelty,
-    "source_overlap": q_source_overlap,
-    "heavy_hitters": q_heavy_hitters,
-    "incremental_dedup": q_incremental_dedup,
-    "stream_incremental_dedup": q_stream_incremental_dedup,
-    "stream_decontaminate": q_stream_decontaminate,
-    "perceptron_train": q_perceptron_train,
-    "perceptron_score": q_perceptron_score,
-    "stream_perceptron_score": q_stream_perceptron_score,
-    "substring_dups": q_substring_dups,
-    "substring_dup_spans": q_substring_dup_spans,
-    "substring_dedup_apply": q_substring_dedup_apply,
-    "inverted_index": q_inverted_index,
-    "doc_chunks": q_doc_chunks,
-    "stream_gopher_quality": q_stream_gopher_quality,
-    "gopher_repetition": q_gopher_repetition,
-    "gopher_quality": q_gopher_quality,
-    "pack_sequences": q_pack_sequences,
-    "mixture_sample": q_mixture_sample,
-    "dedup_exact": q_dedup_exact,
-    "dedup_minhash_lsh": q_dedup_minhash,
-    "dedup_clusters": q_dedup_clusters,
-    "ngram_jaccard_pairs": q_ngram_jaccard,
-    "containment_pairs": q_containment_pairs,
-    "simhash_fingerprint": q_simhash,
-    "knn_bruteforce": q_knn_bruteforce,
-    "knn_range_search": q_knn_range_search,
-    "ann_lsh_buckets": q_ann_buckets,
-    "knn_lsh": q_knn_lsh,
-    "knn_lsh_multiprobe": q_knn_lsh_multiprobe,
-    "ivf_assign": q_ivf_assign,
-    "stream_ivf_assign": q_stream_ivf_assign,
-    "ivf_kmeans_assign": q_ivf_kmeans_assign,
-    "knn_ivf": q_knn_ivf,
-    "embedding_dedup": q_embedding_dedup,
-    "top_terms_per_source": q_top_terms,
-    "repetition_stats": q_repetition,
-    "stratified_sample": q_stratified_sample,
-    "weighted_sample": q_weighted_sample,
-    "text_stats": q_text_stats,
-    "quality_score": q_quality_score,
-    "lang_id": q_lang_id,
-    "token_counts": q_token_counts,
-    "doc_fingerprints": q_fingerprints,
-    "decontaminate": q_decontaminate,
-    "redact_pii": q_redact_pii,
-    "pipeline_end_to_end": q_pipeline,
-    "multimodal_meta": q_multimodal_meta,
-    "multimodal_decode": q_multimodal_decode,
-    "multimodal_pixels": q_multimodal_pixels,
-    "multimodal_audio": q_multimodal_audio,
-    "multimodal_video": q_multimodal_video,
-    "stream_multimodal_decode": q_stream_multimodal,
-    "frame_sample": q_frame_sample,
-    "token_rarity": q_token_rarity,
-    "tfidf_top_terms": q_tfidf_top_terms,
-    "bloom_decontaminate": q_bloom_decontaminate,
-    "embedding_covariance": q_embedding_covariance,
-    "pca_project": q_pca_project,
-    "embedding_dedup_clusters": q_embedding_dedup_clusters,
-    "quality_stratified_sample": q_quality_stratified_sample,
-    "approx_quality_stratified": q_approx_quality_stratified,
-}
 
 
 # -- oracle SQL ------------------------------------------------------------

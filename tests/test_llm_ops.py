@@ -1184,10 +1184,21 @@ def test_substring_dup_spans_skew_cap(spark):
         .agg(F.max("count")).first()[0]
     )
     assert occ > cap
-    out = substring_dup_spans(docs, n=20, w=8, max_occurrences=cap).collect()
+    spans = substring_dup_spans(docs, n=20, w=8, max_occurrences=cap)
+    out = spans.collect()
     pairs = {(r["doc_a"], r["doc_b"]) for r in out}
     assert (3, 7) in pairs                       # rare pair survives
     assert all(p == (3, 7) for p in pairs), pairs  # boilerplate capped away
+    # the cap runs on a per-gram count BELOW every collect_list aggregate:
+    # a hot gram is dropped before its occurrence array is ever built
+    plan = spans._jdf.queryExecution().executedPlan().toString()
+    lines = plan.split("== Initial Plan ==")[0].splitlines()  # AQE final
+    cap_filter = [
+        i for i, ln in enumerate(lines) if "Filter" in ln and "__n_occ" in ln
+    ]
+    collects = [i for i, ln in enumerate(lines) if "collect_list" in ln]
+    assert len(cap_filter) == 1 and collects, lines
+    assert max(collects) < cap_filter[0], lines
 
 
 def test_perceptron_round1_is_label_weighted_feature_sum(spark):

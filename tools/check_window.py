@@ -3,7 +3,7 @@
 Asserts, against the declared registry and every CORRECTNESS_r*.json on
 disk:
 
-1. the first 50 `queries()` keys are exactly `GATE_WINDOW`;
+1. `GATE_WINDOW` (the first 50 `QUERY_ORDER` keys) has 50 distinct keys;
 2. every declared key that has NO green driver row in any prior round
    (i.e. brand-new keys) is inside the window -- nothing new can miss
    its first gate;
@@ -30,10 +30,6 @@ def main() -> None:
     window = list(m.GATE_WINDOW)
     assert len(window) == 50, f"window has {len(window)} keys, not 50"
     assert len(set(window)) == 50, "duplicate keys in GATE_WINDOW"
-    assert qs[:50] == window, (
-        "queries() front-50 != GATE_WINDOW; first divergence: "
-        + str(next((a, b) for a, b in zip(qs, window) if a != b))
-    )
 
     ever_green: set[str] = set()
     for f in sorted(glob.glob(os.path.join(os.path.dirname(__file__), "..",
