@@ -12,11 +12,41 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 #: directory holding this package; Python workers import the daemon shim
 #: from here whatever their working directory
 PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+#: the fork-free local Hadoop filesystem (``jvm/*.java``; rebuilt by
+#: ``tools/build_localfs_jar.py``)
+LOCALFS_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                           "jvm", "localfs.jar")
+
+
+def localfs_conf(master: str | None) -> dict[str, str]:
+    """Settings that swap in the fork-free local filesystem, or ``{}``.
+
+    Without libhadoop, Hadoop's local filesystem forks ``chmod`` for every
+    file or directory it creates and ``readlink`` for every ``FileContext``
+    rename: over a hundred forks per stateful micro-batch (SCALE.md,
+    "Local filesystem").  The jar must be on the driver's classpath when
+    the JVM starts, and executors only share it under a local master, so
+    nothing is set for another master or once a JVM is running (a reused
+    session, or a Python app that ``spark-submit`` started).
+    """
+    local = master is not None and (master == "local" or master.startswith("local["))
+    if not local or SparkContext._gateway is not None \
+            or "PYSPARK_GATEWAY_PORT" in os.environ \
+            or not os.path.exists(LOCALFS_JAR):
+        return {}
+    return {
+        "spark.driver.extraClassPath": LOCALFS_JAR,
+        "spark.hadoop.fs.file.impl": "asyncstream.localfs.NioLocalFileSystem",
+        "spark.hadoop.fs.AbstractFileSystem.file.impl":
+            "asyncstream.localfs.NioLocalFs",
+    }
 
 
 def get_spark(
@@ -75,11 +105,12 @@ def get_spark(
                 "async_stream_processing_spark.worker_shim")
         .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
     )
+    if master is None and ("SPARK_GRAFT_LOCAL" in os.environ
+                           or not os.environ.get("SPARK_MASTER")):
+        master = f"local[{cpus}]"
     if master is not None:
         builder = builder.master(master)
-    elif "SPARK_GRAFT_LOCAL" in os.environ or not os.environ.get("SPARK_MASTER"):
-        builder = builder.master(f"local[{cpus}]")
-    return builder.getOrCreate()
+    return builder.config(map=localfs_conf(master)).getOrCreate()
 
 
 TABLES = (

@@ -167,11 +167,11 @@ def process_stream(
       mid-backfill nor waits for batches that will never be redelivered
       -- the prior run's consumed files are simply already logged.
     * without a checkpoint the detection falls back to
-      ``batch_df.inputFiles()`` accumulation (works for single-source
-      streams; a union's micro-batch plan does not expose file names,
-      so pass ``checkpoint`` for merged past+live streams -- the
-      lifecycle shape that wants ``on_live_start`` should be
-      checkpointed anyway).
+      ``batch_df.inputFiles()`` accumulation until the hook fires
+      (works for single-source streams; a union's micro-batch plan
+      does not expose file names, so pass ``checkpoint`` for merged
+      past+live streams -- the lifecycle shape that wants
+      ``on_live_start`` should be checkpointed anyway).
 
     A batch that STRADDLES the boundary (last backlog file + first live
     file under one trigger) is processed before the hook -- the
@@ -204,7 +204,8 @@ def process_stream(
                     state["fired"] = True
                     on_live_start()
             callback(batch_df, batch_id)
-            seen.update(_strip_scheme(p) for p in batch_df.inputFiles())
+            if not (state["fired"] or checkpoint):
+                seen.update(_strip_scheme(p) for p in batch_df.inputFiles())
 
     else:
 
@@ -446,23 +447,3 @@ def drain_guarded(stream_df: DataFrame, output_mode: str = "complete",
     with shuffle_guard(spark, shuffle_partitions):
         return drain(stream_df, output_mode=output_mode,
                      timeout_s=timeout_s)
-
-
-def with_observed_metrics(
-    stream: DataFrame, name: str = "replay", ts_col: str = "ts"
-) -> DataFrame:
-    """Attach production observability to a streaming plan: per-micro-batch
-    row count and event-time high watermark via ``Dataset.observe`` --
-    computed inside the running plan (accumulator-backed, no extra pass,
-    no second sink) and surfaced in every StreamingQueryProgress under
-    ``observedMetrics[name]``.
-
-    This is the at-scale monitoring seam: lag = wall clock - max_event_ts,
-    throughput = n_rows / batch duration, both from the progress feed a
-    cluster already ships to its metrics system.
-    """
-    return stream.observe(
-        name,
-        F.count(F.lit(1)).alias("n_rows"),
-        F.max(F.col(ts_col)).alias("max_event_ts"),
-    )

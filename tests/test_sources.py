@@ -329,3 +329,54 @@ def test_live_start_survives_checkpoint_restart(spark, tmp_path):
         if k == "batch" and 999.0 in ev
     )
     assert kinds.index("live_start") < first_live
+
+
+def test_checkpointed_live_run_never_lists_input_files(spark, tmp_path,
+                                                       monkeypatch):
+    """With a checkpoint the drain boundary comes from the source log,
+    so no batch pays ``inputFiles()`` (a py4j round trip per batch, and
+    a set that would grow by every live file): with it patched to raise,
+    the hook still fires exactly once across two live batches."""
+    import time
+    from datetime import datetime
+
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+    from async_stream_processing_spark.streaming.replay import (
+        process_stream,
+        replay_stream,
+    )
+
+    def no_listing(self):
+        raise AssertionError("inputFiles() called on a checkpointed run")
+
+    monkeypatch.setattr(ClassicDataFrame, "inputFiles", no_listing)
+    t0 = datetime(2024, 1, 1)
+    past_dir = str(tmp_path / "past")
+    for i in range(2):
+        _write_tick(spark, past_dir, t0, i, i)
+
+    values: list[float] = []
+    fired: list[int] = []
+    q = process_stream(
+        replay_stream(spark, past_dir, "ts timestamp, value double",
+                      max_files_per_trigger=1),
+        lambda b, i: values.extend(r["value"] for r in b.collect()),
+        on_live_start=lambda: fired.append(len(values)),
+        checkpoint=str(tmp_path / "ckpt"),
+        available_now=False,
+        past_path=past_dir,
+    )
+    try:
+        deadline = time.time() + 90
+        for val in (None, 998.0, 999.0):
+            if val is not None:
+                _write_tick(spark, past_dir, t0, int(val), val)
+            while (time.time() < deadline and q.exception() is None
+                   and (val or 1.0) not in values):
+                time.sleep(0.2)
+    finally:
+        q.stop()
+    assert q.exception() is None, q.exception()
+    assert sorted(values) == [0.0, 1.0, 998.0, 999.0]
+    assert fired == [2]  # once, after the two past rows

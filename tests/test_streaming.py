@@ -496,40 +496,6 @@ def test_ivfpq_served_reads_only_probed_cells(spark, tmp_path):
     assert sorted(map(tuple, served_again.collect())) == unpruned
 
 
-def test_observed_metrics_in_progress(spark, tmp_path):
-    """observe() metrics ride the progress feed: row count and event-time
-    high watermark per micro-batch, no extra pass over the data."""
-    from datetime import datetime
-
-    from async_stream_processing_spark.streaming.replay import (
-        replay_stream,
-        with_observed_metrics,
-    )
-
-    src = str(tmp_path / "obs_in")
-    schema = "k long, ts timestamp"
-    rows = [(i, datetime(2024, 1, 1, 0, i)) for i in range(7)]
-    spark.createDataFrame(rows, schema).write.parquet(src)
-
-    s = with_observed_metrics(replay_stream(spark, src, schema), "replay")
-    q = (
-        s.writeStream.format("noop")
-        .option("checkpointLocation", str(tmp_path / "obs_ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    metrics = []
-    for rp in q.recentProgress:
-        om = rp.get("observedMetrics") if isinstance(rp, dict) else rp.observedMetrics
-        if om and "replay" in om:
-            m = om["replay"]
-            metrics.append(m if isinstance(m, dict) else m.asDict())
-    assert metrics, q.recentProgress
-    assert sum(m["n_rows"] for m in metrics) == 7
-    assert max(str(m["max_event_ts"]) for m in metrics).startswith("2024-01-01")
-
-
 def test_stateful_aggregation_resumes_from_checkpoint(spark, tmp_path):
     """Restart semantics: a keyed count over run 1's files, stopped, then
     RESTARTED as a new query on the same checkpoint after more files
