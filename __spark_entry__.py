@@ -34,7 +34,7 @@ from async_stream_processing_spark.sources.parquet import load_table
 from async_stream_processing_spark.sources.synthetic import timer_ticks
 from async_stream_processing_spark.streaming.replay import (
     await_drain,
-    shuffle_guard as _shuffle_guard,
+    shuffle_guard,
 )
 
 SF0001 = "/root/testdata/sf0.001"
@@ -990,20 +990,12 @@ def _stream_time_shuffled(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _drain_fold(spark: SparkSession, folded_stream: DataFrame) -> DataFrame:
     """Drain an applyInPandasWithState fold (append mode) and keep each
-    key's FINAL state row (max ``n`` — the cart-fold convention).  The
-    local-scale shuffle-partition knob mirrors q_stream_cart_fold."""
+    key's FINAL state row (max ``n`` — the cart-fold convention)."""
     from pyspark.sql import Window
 
-    from async_stream_processing_spark.streaming.replay import drain_guarded
+    from async_stream_processing_spark.streaming.replay import drain
 
-    # 8 partitions, not 4: an applyInPandasWithState batch pays TWO
-    # state-server round-trips per KEY (get + update) serialized within
-    # each task; measured on stream_ewma_ooo the per-batch addBatch time
-    # is 1.45-1.76 s at 4 partitions, 1.0-1.3 s at 8, flat beyond (the
-    # residual is per-batch machinery).  JVM-state drains stay at 4 --
-    # their per-key cost has no Python RPC to parallelize.
-    out = drain_guarded(folded_stream, output_mode="append",
-                        shuffle_partitions="8")
+    out = drain(folded_stream, output_mode="append")
     w = Window.partitionBy("user_id").orderBy(F.desc("n"))
     return (
         out.withColumn("__rk", F.row_number().over(w))
@@ -1105,9 +1097,7 @@ def q_stream_resample_1min(spark: SparkSession, sf_dir: str) -> DataFrame:
     drain; hash-matched against the same ANSI-SQL oracle as the batch
     query -- streaming execution under the correctness gate."""
     from async_stream_processing_spark.sources.parquet import stream_table
-    from async_stream_processing_spark.streaming.replay import (
-        drain_guarded,
-    )
+    from async_stream_processing_spark.streaming.replay import drain
 
     s = stream_table(spark, sf_dir, "events")
     agg = (
@@ -1118,7 +1108,7 @@ def q_stream_resample_1min(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("w.start").alias("bucket_start"), "n_events", "sum_value")
     )
-    return drain_guarded(agg)
+    return drain(agg)
 
 
 def q_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1128,9 +1118,7 @@ def q_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the total-order event_id are micro-batch-order-independent, so
     the drained bars hash-match the SAME oracle as the batch query."""
     from async_stream_processing_spark.sources.parquet import stream_table
-    from async_stream_processing_spark.streaming.replay import (
-        drain_guarded,
-    )
+    from async_stream_processing_spark.streaming.replay import drain
 
     s = stream_table(spark, sf_dir, "events")
     bucket = F.timestamp_micros(
@@ -1146,7 +1134,7 @@ def q_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value"
         ),
     )
-    return drain_guarded(agg)
+    return drain(agg)
 
 
 def _sessionize_drained(spark: SparkSession, source: DataFrame) -> DataFrame:
@@ -1155,9 +1143,7 @@ def _sessionize_drained(spark: SparkSession, source: DataFrame) -> DataFrame:
     previously duplicated the whole body and could drift)."""
     from pyspark.sql import Window
 
-    from async_stream_processing_spark.streaming.replay import (
-        drain_guarded,
-    )
+    from async_stream_processing_spark.streaming.replay import drain
 
     sw = (
         source.groupBy("user_id",
@@ -1168,7 +1154,7 @@ def _sessionize_drained(spark: SparkSession, source: DataFrame) -> DataFrame:
             .cast("double").alias("sum_value"),
         )
     )
-    out = drain_guarded(sw).select(
+    out = drain(sw).select(
         "user_id",
         F.col("sw.start").alias("session_start"),
         F.col("sw.end").alias("session_end"),
@@ -1211,16 +1197,14 @@ def q_stream_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch ``first_seen``.  ``min_by`` over ``struct(ts, event_id)`` is the
     deterministic tie-break -- arrival order never matters."""
     from async_stream_processing_spark.sources.parquet import stream_table
-    from async_stream_processing_spark.streaming.replay import (
-        drain_guarded,
-    )
+    from async_stream_processing_spark.streaming.replay import drain
 
     s = stream_table(spark, sf_dir, "events")
     agg = s.groupBy("user_id").agg(
         F.min("ts").alias("first_ts"),
         F.min_by("event_type", F.struct("ts", "event_id")).alias("first_event_type"),
     )
-    return drain_guarded(agg)
+    return drain(agg)
 
 
 def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1234,7 +1218,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain DISTINCT oracle applies."""
     from async_stream_processing_spark.sources.parquet import stream_table
     from async_stream_processing_spark.streaming.replay import (
-        drain_guarded,
+        drain,
         stream_dedup_within_watermark,
     )
 
@@ -1242,10 +1226,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     dd = stream_dedup_within_watermark(
         s, ["user_id", "event_type"], watermark_col="ts", delay="3650 days"
     )
-    # same local-scale knob as stream_join_1h: fewer partitions = fewer
-    # state-store instances (restored after the drain; results identical)
-    return drain_guarded(dd.select("user_id", "event_type"),
-                         output_mode="append", shuffle_partitions="8")
+    return drain(dd.select("user_id", "event_type"), output_mode="append")
 
 
 def q_stream_join_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1257,7 +1238,7 @@ def q_stream_join_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     e4_trade_pnl (B6) -- this is its live form."""
     from async_stream_processing_spark.sources.parquet import stream_table
     from async_stream_processing_spark.streaming.replay import (
-        drain_guarded,
+        drain,
         stream_stream_join,
     )
 
@@ -1280,13 +1261,7 @@ def q_stream_join_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("r.ts").alias("view_ts"),
         F.col("r.value").alias("view_value"),
     )
-    # A stream-stream join runs 4 state-store instances per shuffle
-    # partition; at local scale the store setup dominates the tiny state,
-    # so run THIS query's micro-batches on fewer partitions (restored
-    # after the drain -- partition count never changes results, only the
-    # state sharding).  On a real cluster size this to executor count.
-    # A/B at sf0.1: 4 partitions ~1.5 s faster than 8, identical rows.
-    return drain_guarded(out, output_mode="append", shuffle_partitions="4")
+    return drain(out, output_mode="append")
 
 
 def q_stream_cart_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1299,7 +1274,7 @@ def q_stream_cart_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
     from async_stream_processing_spark.sources.parquet import stream_table
     from async_stream_processing_spark.streaming.cart import cart_stream
-    from async_stream_processing_spark.streaming.replay import drain_guarded
+    from async_stream_processing_spark.streaming.replay import drain
 
     s = (
         stream_table(spark, sf_dir, "events")
@@ -1307,10 +1282,8 @@ def q_stream_cart_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("vol", F.expr(_VOL))
         .select("ts", "event_id", "user_id", "event_type", "value", "vol")
     )
-    # same local-scale knob as stream_join_1h: fewer partitions = fewer
-    # state-store instances + Python-worker Arrow channels (restored after)
-    out = drain_guarded(cart_stream(s, discount=0.9, discount_seconds=3600),
-                        output_mode="append", shuffle_partitions="8")
+    out = drain(cart_stream(s, discount=0.9, discount_seconds=3600),
+                output_mode="append")
     finals = out.filter(F.col("event_kind") != "discount_ended")
     w = Window.partitionBy("user_id").orderBy(F.desc("n_updates"))
     return (
@@ -1732,8 +1705,7 @@ def q_stream_topk_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_purchases"),
     )
     top = agg.orderBy(F.desc("total_value"), F.asc("user_id")).limit(10)
-    with _shuffle_guard(spark, "8"):
-        return drain(top, output_mode="complete")
+    return drain(top, output_mode="complete")
 
 
 def q_user_event_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1800,8 +1772,7 @@ def q_stream_pivot_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
             for k in kinds
         ])
     )
-    with _shuffle_guard(spark, "8"):
-        return drain(wide, output_mode="complete")
+    return drain(wide, output_mode="complete")
 
 
 def q_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1818,7 +1789,7 @@ def q_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_table,
     )
     from async_stream_processing_spark.streaming.replay import (
-        drain_guarded,
+        drain,
         stream_static_enrich,
     )
 
@@ -1832,7 +1803,7 @@ def q_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "ts", "user_id", "event_type", "value",
         "c_name", "c_mktsegment",
     )
-    return drain_guarded(enriched, output_mode="append")
+    return drain(enriched, output_mode="append")
 
 
 def q_stream_rank_family(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1855,8 +1826,7 @@ def q_stream_rank_family(spark: SparkSession, sf_dir: str) -> DataFrame:
          .alias("total_value"),
         F.count(F.lit(1)).alias("n_purchases"),
     )
-    with _shuffle_guard(spark, "8"):
-        totals = drain(agg, output_mode="complete")
+    totals = drain(agg, output_mode="complete")
     w_ties = Window.orderBy(F.desc("total_value"))
     w_total = Window.orderBy(F.desc("total_value"), F.asc("user_id"))
     return totals.select(
@@ -1993,19 +1963,13 @@ def _stream_outer_join(
         F.col("r.value").alias("purchase_value"),
         user_col.alias("user_id"),
     )
-    # 4 shuffle partitions locally: an outer stream-stream join keeps 4
-    # state-store instances per partition, and store setup dominates the
-    # tiny local state (A/B: 4 parts ~2.5x faster than 8, identical
-    # rows).  At scale, size by state volume / throughput instead.
     try:
-        with _shuffle_guard(spark, "4"):
-            drained = drain(out, output_mode="append")
+        drained = drain(out, output_mode="append")
     finally:
-        # the memory sink is materialized by the drain (or the drain
-        # failed); either way the sentinel files are done.  Round-11
-        # review fix: this cleanup sat AFTER a return since r8 and
-        # never ran — one leaked asp_sentinel_* temp dir per outer-join
-        # query run.
+        # the drain has written its own sink (or failed); either way
+        # the sentinel files are done.  Round-11 review fix: this
+        # cleanup sat AFTER a return since r8 and never ran — one
+        # leaked asp_sentinel_* temp dir per outer-join query run.
         shutil.rmtree(sent_dir, ignore_errors=True)
     # sentinel filter on the DRAINED result -- see docstring
     return drained.filter(F.col("user_id") >= 0)
@@ -2121,7 +2085,7 @@ def q_stream_scd2_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         scd2_intervals,
     )
     from async_stream_processing_spark.sources.parquet import stream_table
-    from async_stream_processing_spark.streaming.replay import drain_guarded
+    from async_stream_processing_spark.streaming.replay import drain
 
     dim = scd2_intervals(
         load_table(spark, sf_dir, "events"),
@@ -2146,7 +2110,7 @@ def q_stream_scd2_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "ts", "user_id", "event_type", "value",
         "version", "valid_from", "is_current",
     )
-    return drain_guarded(joined, output_mode="append")
+    return drain(joined, output_mode="append")
 
 
 def q_fuzzy_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2881,8 +2845,7 @@ def q_stream_bollinger(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("value").cast("decimal(18,2)") * 100)
         .cast("long").alias("x"),
     )
-    with _shuffle_guard(spark, "8"):
-        out = drain(bollinger_fold_stream(s), output_mode="append")
+    out = drain(bollinger_fold_stream(s), output_mode="append")
     return _bollinger_from_sums(out)
 
 
@@ -2922,8 +2885,7 @@ def q_stream_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("value").cast("decimal(18,2)") * 100)
         .cast("long").alias("x"),
     )
-    with _shuffle_guard(spark, "8"):
-        out = drain(corr_fold_stream(s), output_mode="append")
+    out = drain(corr_fold_stream(s), output_mode="append")
     return _corr_from_sums(out)
 
 
@@ -3018,11 +2980,10 @@ def q_stream_bollinger_ooo(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("value").cast("decimal(18,2)") * 100)
         .cast("long").alias("x"),
     )
-    with _shuffle_guard(spark, "8"):
-        out = drain(
-            reordered_bollinger_stream(s, delay=_REORDER_DELAY),
-            output_mode="append",
-        )
+    out = drain(
+        reordered_bollinger_stream(s, delay=_REORDER_DELAY),
+        output_mode="append",
+    )
     w = Window.partitionBy("user_id", "event_id").orderBy(F.desc("nb"))
     final_rows = (
         out.withColumn("__rk", F.row_number().over(w))
@@ -3142,11 +3103,10 @@ def q_stream_rolling_corr_ooo(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("value").cast("decimal(18,2)") * 100)
         .cast("long").alias("x"),
     )
-    with _shuffle_guard(spark, "8"):
-        out = drain(
-            reordered_corr_stream(s, delay=_REORDER_DELAY),
-            output_mode="append",
-        )
+    out = drain(
+        reordered_corr_stream(s, delay=_REORDER_DELAY),
+        output_mode="append",
+    )
     w = Window.partitionBy("user_id", "event_id").orderBy(F.desc("nb"))
     final_rows = (
         out.withColumn("__rk", F.row_number().over(w))
@@ -3214,7 +3174,7 @@ def q_stream_lake_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             # write time, micro-batches range-partitioned so file stats
             # are disjoint and the read-back prune skips files, and a
             # PERIODIC parquet manifest checkpoint every 2 commits
-            with _shuffle_guard(spark, "8"):
+            with shuffle_guard(spark):
                 q = versioned_sink(
                     _folded(), lake, checkpoint,
                     txn_app_id="lake_roundtrip",
@@ -3222,7 +3182,7 @@ def q_stream_lake_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                     stats_cols=["user_id"],
                     prepare=lambda b: b.repartitionByRange(2, "user_id"),
                 )
-                await_drain(q, 300)
+            await_drain(q, 300)
 
         _drain_into_lake(os.path.join(ck, "first"))
         # The REDELIVERY PROOF (a second fresh-checkpoint drain whose
@@ -3350,10 +3310,7 @@ def q_stream_late_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("win.start").alias("window_start"),
                 "n_events", "sum_cents")
     )
-    # local-scale shuffle-partition guard (the _drain_fold discipline):
-    # 32 state stores x 3 batches dominates this tiny stateful agg
-    with _shuffle_guard(spark, "4"):
-        return drain(agg, output_mode="append")
+    return drain(agg, output_mode="append")
 
 
 def q_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3471,14 +3428,15 @@ def q_stream_upsert_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "event_type", "value"
     )
     try:
-        with _shuffle_guard(spark, "4"):
-            await_drain(upsert_sink(
+        with shuffle_guard(spark):
+            q = upsert_sink(
                 s, lake, keys=["user_id"], version_col="event_id",
                 checkpoint=ck, n_buckets=4,
-            ), 300)
-            out = read_current(spark, lake).select(
-                "user_id", "event_id", "event_type", "value"
-            ).localCheckpoint(eager=True)
+            )
+        await_drain(q, 300)
+        out = read_current(spark, lake).select(
+            "user_id", "event_id", "event_type", "value"
+        ).localCheckpoint(eager=True)
     finally:
         # exception-safe: the temp lake/checkpoint must not leak when
         # the sink or the read raises (round-11 review fix)
@@ -3573,9 +3531,7 @@ def q_stream_sliding_2min(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The same sliding-window aggregation EXECUTED BY THE STREAMING
     ENGINE, drained and hash-matched against the identical SQL oracle."""
     from async_stream_processing_spark.sources.parquet import stream_table
-    from async_stream_processing_spark.streaming.replay import (
-        drain_guarded,
-    )
+    from async_stream_processing_spark.streaming.replay import drain
 
     s = stream_table(spark, sf_dir, "events")
     agg = (
@@ -3587,7 +3543,7 @@ def q_stream_sliding_2min(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("w.start").alias("window_start"),
                 F.col("w.end").alias("window_end"), "n_events", "sum_value")
     )
-    return drain_guarded(agg)
+    return drain(agg)
 
 
 def q_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3785,9 +3741,7 @@ def q_stream_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     execution outright."""
     from async_stream_processing_spark.operators.range_join import range_join
     from async_stream_processing_spark.sources.parquet import stream_table
-    from async_stream_processing_spark.streaming.replay import (
-        drain_guarded,
-    )
+    from async_stream_processing_spark.streaming.replay import drain
 
     s = stream_table(spark, sf_dir, "events").select("event_id", "value")
     bands = load_table(spark, sf_dir, "nation").select(
@@ -3796,7 +3750,7 @@ def q_stream_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("n_nationkey") * F.lit(17.0) + F.lit(29.0)).alias("hi"),
     )
     joined = range_join(s, bands, "value", bucket_width=20.0)
-    return drain_guarded(
+    return drain(
         joined.select("event_id", "band_id", "value"), output_mode="append"
     )
 

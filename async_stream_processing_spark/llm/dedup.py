@@ -888,7 +888,7 @@ def connected_components(
         edges.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
     )
     pin = edges.count() < 1_000_000
-    with shuffle_guard(spark, "8") if pin else nullcontext():
+    with shuffle_guard(spark) if pin else nullcontext():
         return _cc_loop(both, max_iter)
 
 

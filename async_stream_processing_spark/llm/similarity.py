@@ -473,7 +473,7 @@ def kmeans_train(
     # shuffle partitions on 512-row shuffles is task overhead.  Pin both
     # for the loop, restore after; at cluster scale revisit only the
     # partition count (the agg output is k*d rows regardless of corpus).
-    with shuffle_guard(spark, "8"):
+    with shuffle_guard(spark):
         cents_rows = _train_loop(embeddings, cents_rows, n_iter)
     return spark.createDataFrame(cents_rows, cent_schema)
 

@@ -25,6 +25,20 @@ LOCALFS_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                            "jvm", "localfs.jar")
 
 
+#: shuffle partitions ``streaming.replay.shuffle_guard`` pins, whatever
+#: the session's own count, for a drained stream's start and for the two
+#: iterative batch loops (``kmeans_train``, ``connected_components``):
+#: sections whose per-partition setup outweighs their data at local
+#: scale -- a state store per partition per stateful micro-batch (four
+#: for a stream-stream join), a task per partition per loop round.
+#: Measured on a 4-core host (bench.py warm totals, alternating
+#: fresh-process pairs, identical rows): the 21 drains that pinned 8
+#: took 121.3 s at 4 against 124.5 s (median of 5 pairs, 4 ahead in all
+#: 5), the four loop queries 20.6 s against 24.5 s (4 of 4 pairs).  On a
+#: cluster, size these to the executors instead.
+PINNED_SHUFFLE_PARTITIONS = 4
+
+
 def localfs_conf(master: str | None) -> dict[str, str]:
     """Settings that swap in the fork-free local filesystem, or ``{}``.
 

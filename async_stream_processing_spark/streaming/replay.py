@@ -37,6 +37,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ..session import PINNED_SHUFFLE_PARTITIONS
+
 
 def replay_stream(
     spark: SparkSession,
@@ -323,7 +325,7 @@ DRAIN_BATCH_TALLY = {"batches": 0, "drains": 0}
 
 
 def drain(stream_df: DataFrame, output_mode: str = "complete",
-          timeout_s: int = 300, to_files: bool | None = None) -> DataFrame:
+          timeout_s: int = 300) -> DataFrame:
     """Run a streaming plan to completion over its current source contents
     and return the final result as a batch DataFrame.
 
@@ -332,93 +334,66 @@ def drain(stream_df: DataFrame, output_mode: str = "complete",
     incremental aggregation), not the batch planner, and the drained
     result must still hash-match the oracle.
 
-    Sink choice is the scale story:
+    One partition count: the query starts at ``PINNED_SHUFFLE_PARTITIONS``
+    (``session.py``), whatever the session's own setting.  A streaming
+    query keeps the conf it had at ``start()``, so the setting covers only
+    the start and is restored right after it.
 
-    * **complete mode** (default path, ``to_files=True``): each trigger's
-      full result is written DISTRIBUTED via ``foreachBatch`` +
-      overwrite-parquet -- the last trigger's snapshot is the answer.
-      Executors write shards; nothing passes through the driver, so a
-      complete-mode rollup the size of the cluster's memory still
-      drains.  (The former memory-sink path collected the whole result
-      table into the driver -- fine at oracle scale, a named
-      scale-killer beyond it.)
-    * **append/update mode** (``to_files=False`` default): rows of these
-      modes arrive incrementally and parquet-overwrite-per-batch would
-      drop earlier batches, so they use the memory sink; append-mode
-      production jobs write a real file/table sink directly
-      (``writeStream.toTable``) and never need drain().
+    One sink: every micro-batch is written by the executors to one temp
+    parquet directory through ``foreachBatch`` -- ``overwrite`` in
+    complete mode (the last snapshot is the answer), ``append`` in the
+    other modes (the batches together are the answer).  Nothing passes
+    through the driver in any mode, so a result the size of the
+    cluster's storage still drains.  The return value is a lazy read of
+    that directory with the stream's schema (zero rows if no batch ran).
     """
     import atexit
     import shutil
     import tempfile
-    import uuid
 
     spark = stream_df.sparkSession
-    if to_files is None:
-        to_files = output_mode == "complete"
-    if to_files:
-        out_dir = tempfile.mkdtemp(prefix="asp_drain_")
-        # the temp dir lives until process exit (tiny -- it holds one
-        # aggregated result, not data), a timed-out drain's included
-        atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
+    out_dir = tempfile.mkdtemp(prefix="asp_drain_")
+    # the temp dir lives until process exit, a timed-out drain's included
+    atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
+    write_mode = "overwrite" if output_mode == "complete" else "append"
 
-        def _snapshot(batch_df: DataFrame, batch_id: int) -> None:
-            DRAIN_BATCH_TALLY["batches"] += 1
-            batch_df.write.mode("overwrite").parquet(out_dir)
+    def _write(batch_df: DataFrame, batch_id: int) -> None:
+        DRAIN_BATCH_TALLY["batches"] += 1
+        batch_df.write.mode(write_mode).parquet(out_dir)
 
+    with shuffle_guard(spark):
         q = (
-            stream_df.writeStream.foreachBatch(_snapshot)
+            stream_df.writeStream.foreachBatch(_write)
             .outputMode(output_mode)
             .trigger(availableNow=True)
             .start()
         )
-        await_drain(q, timeout_s)
-        DRAIN_BATCH_TALLY["drains"] += 1
-        # lazy read over the snapshot files: no extra materialization pass
-        return spark.read.parquet(out_dir)
-    name = "drain_" + uuid.uuid4().hex[:12]
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
     await_drain(q, timeout_s)
     DRAIN_BATCH_TALLY["drains"] += 1
-    # batchId is 0-based and monotone within this fresh query, so
-    # lastProgress.batchId + 1 == micro-batches run; recentProgress is
-    # CAPPED at spark.sql.streaming.numRecentProgressUpdates (default
-    # 100) and would silently undercount long drains (r10 ADVICE)
-    last = q.lastProgress
-    if last is not None:
-        DRAIN_BATCH_TALLY["batches"] += int(last["batchId"]) + 1
-    return stream_df.sparkSession.table(name)
+    return spark.read.schema(stream_df.schema).parquet(out_dir)
 
 
-#: serializes guarded drains: the shuffle-partition override below flips
-#: SESSION-global conf, so two overlapping guarded drains could restore
-#: each other's temporary value as the "previous" one (r10 ADVICE).  The
-#: lock makes set -> drain -> restore atomic per process.  A query
-#: running concurrently on the same session OUTSIDE drain_guarded can
-#: still observe the reduced value for already-compiled plans'
-#: NEW micro-batches -- callers that interleave guarded drains with
-#: other live stateful queries should size the session conf once
-#: instead (shuffle partitioning is per-cluster-sizing in production;
-#: this guard exists only for local[32] oracle drains).
+#: serializes the session-conf overrides below, so two overlapping
+#: guarded sections (a drain's start, a batch loop) cannot restore each
+#: other's temporary value as the "previous" one.
 _GUARD_LOCK = threading.RLock()
 
 
 @contextmanager
-def shuffle_guard(spark: SparkSession, shuffle_partitions: str):
-    """Temporarily lower ``spark.sql.shuffle.partitions`` and pin AQE off
-    for one local-scale section (a drain, an iterative loop), serialized
-    under ``_GUARD_LOCK`` so overlapping guarded sections can't restore
-    each other's temporary values (r10 ADVICE).  Use this instead of
-    inline set/restore anywhere a section needs a per-query partition
-    count."""
+def shuffle_guard(spark: SparkSession):
+    """Set ``spark.sql.shuffle.partitions`` to ``PINNED_SHUFFLE_PARTITIONS``
+    and pin AQE off for one section, under ``_GUARD_LOCK``, and restore
+    both afterwards even if the section raises.
+
+    Two kinds of section use it.  A streaming query keeps the conf it
+    had at ``start()``, so :func:`drain` -- and a caller that starts
+    another sink (``versioned_sink``, ``upsert_sink``) and awaits it with
+    :func:`await_drain` -- guards only the starting call.  The two
+    iterative batch loops (``kmeans_train``, ``connected_components``)
+    read conf at every action and so guard the whole loop.  (Spark turns
+    AQE off in a stateful micro-batch by itself.)"""
     pinned = {
-        "spark.sql.shuffle.partitions": shuffle_partitions,
+        "spark.sql.shuffle.partitions": str(PINNED_SHUFFLE_PARTITIONS),
         "spark.sql.adaptive.enabled": "false",
     }
     with _GUARD_LOCK:
@@ -431,19 +406,3 @@ def shuffle_guard(spark: SparkSession, shuffle_partitions: str):
             for k, v in prev.items():
                 spark.conf.set(k, v)
 
-
-def drain_guarded(stream_df: DataFrame, output_mode: str = "complete",
-                  shuffle_partitions: str = "4",
-                  timeout_s: int = 300) -> DataFrame:
-    """:func:`drain` under a local-scale shuffle-partition guard: a
-    stateful streaming plan creates one state store (and one task) per
-    shuffle partition PER MICRO-BATCH, so draining a small replay with
-    the session's 32 partitions pays ~8x the state-store spin-up the
-    data needs (measured: stream_decontaminate 15s -> 3.4s at sf0.1).
-    Setting restored afterwards (set/restore serialized under
-    ``_GUARD_LOCK``); a real deployment sizes this once per query via
-    spark.sql.shuffle.partitions on the cluster."""
-    spark = stream_df.sparkSession
-    with shuffle_guard(spark, shuffle_partitions):
-        return drain(stream_df, output_mode=output_mode,
-                     timeout_s=timeout_s)

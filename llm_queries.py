@@ -296,16 +296,14 @@ def q_stream_decontaminate(spark, sf_dir):
         bloom_decontaminate,
     )
     from async_stream_processing_spark.sources.parquet import stream_table
-    from async_stream_processing_spark.streaming.replay import (
-        drain_guarded,
-    )
+    from async_stream_processing_spark.streaming.replay import drain
 
     docs = _docs(spark, sf_dir)
     bench = docs.filter(F.col("doc_id") < 20).select(
         F.col("doc_id").alias("bench_id"), "text"
     )
     s = stream_table(spark, sf_dir, "documents")
-    return drain_guarded(
+    return drain(
         bloom_decontaminate(s, bench, n=8), output_mode="complete"
     )
 
@@ -759,9 +757,7 @@ def q_stream_incremental_dedup(spark, sf_dir):
     )
     from async_stream_processing_spark.plans.scale import write_bucketed
     from async_stream_processing_spark.sources.parquet import stream_table
-    from async_stream_processing_spark.streaming.replay import (
-        drain_guarded,
-    )
+    from async_stream_processing_spark.streaming.replay import drain
 
     docs = _docs(spark, sf_dir)
     store_path = tempfile.mkdtemp(prefix="asp_incr_store_")
@@ -776,9 +772,9 @@ def q_stream_incremental_dedup(spark, sf_dir):
         s = stream_table(spark, sf_dir, "documents").filter(
             F.col("doc_id") % 5 == 0
         )
-        out = drain_guarded(
+        out = drain(
             stream_incremental_dedup(s, stored, threshold=0.25),
-            output_mode="append", shuffle_partitions="8",
+            output_mode="append",
         ).localCheckpoint(eager=True)
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {table}")
@@ -2507,14 +2503,12 @@ def q_stream_trigram_backoff(spark, sf_dir):
         trigram_score_on_ingest,
     )
     from async_stream_processing_spark.sources.parquet import stream_table
-    from async_stream_processing_spark.streaming.replay import (
-        drain_guarded,
-    )
+    from async_stream_processing_spark.streaming.replay import drain
 
     docs = _docs(spark, sf_dir)
     model = trigram_model(docs.filter(F.col("doc_id") % 2 == 0))
     s = stream_table(spark, sf_dir, "documents")
-    return drain_guarded(trigram_score_on_ingest(s, model), output_mode="complete")
+    return drain(trigram_score_on_ingest(s, model), output_mode="complete")
 
 
 def q_source_tv_distance(spark, sf_dir):

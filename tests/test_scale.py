@@ -3239,13 +3239,10 @@ def test_versioned_sink_redelivery_with_stateful_upstream(spark, tmp_path):
     and leave the head untouched; also pins the new stats_cols /
     prepare sink hooks (pruned read works from commit one)."""
     from async_stream_processing_spark.plans import versioned as V
-    from async_stream_processing_spark.streaming.replay import (
-        shuffle_guard,
-    )
-
     from async_stream_processing_spark.streaming.reorder import (
         reordered_fold_stream,
     )
+    from async_stream_processing_spark.streaming.replay import shuffle_guard
 
     src = str(tmp_path / "src")
     for i in range(3):
@@ -3268,26 +3265,27 @@ def test_versioned_sink_redelivery_with_stateful_upstream(spark, tmp_path):
              .option("maxFilesPerTrigger", 1).parquet(src))
         return reordered_fold_stream(s, "cusum", delay="60 seconds")
 
-    with shuffle_guard(spark, "4"):
+    with shuffle_guard(spark):
         q = V.versioned_sink(
             _stream(), lake, str(tmp_path / "ck1"),
             txn_app_id="stateful_redeliver", stats_cols=["user_id"],
             prepare=lambda b: b.repartitionByRange(2, "user_id"),
         )
-        q.awaitTermination(240)
-        head = V.versions(lake)[-1]
-        before = sorted(
-            tuple(r) for r in V.read_version(spark, lake).collect()
-        )
-        # fresh checkpoint: every batch redelivers; the stateful plan
-        # must drain cleanly through the consume-then-skip path and
-        # leave both the head AND the content untouched (the
-        # exactly-once proof stream_lake_roundtrip ran in-gate pre-r12)
+    q.awaitTermination(240)
+    head = V.versions(lake)[-1]
+    before = sorted(
+        tuple(r) for r in V.read_version(spark, lake).collect()
+    )
+    # fresh checkpoint: every batch redelivers; the stateful plan
+    # must drain cleanly through the consume-then-skip path and
+    # leave both the head AND the content untouched (the
+    # exactly-once proof stream_lake_roundtrip ran in-gate pre-r12)
+    with shuffle_guard(spark):
         q2 = V.versioned_sink(
             _stream(), lake, str(tmp_path / "ck2"),
             txn_app_id="stateful_redeliver",
         )
-        q2.awaitTermination(240)
+    q2.awaitTermination(240)
     assert V.versions(lake)[-1] == head
     after = sorted(
         tuple(r) for r in V.read_version(spark, lake).collect()

@@ -932,3 +932,101 @@ def test_drain_timeout_raises_and_stops_query(spark, tmp_path, output_mode):
     with pytest.raises(TimeoutError, match="lastProgress"):
         drain(counts, output_mode=output_mode, timeout_s=0.001)
     assert spark.streams.active == []
+
+
+def test_drain_partitions_cover_only_start(spark, tmp_path):
+    """A drained query runs at ``PINNED_SHUFFLE_PARTITIONS`` while the session
+    keeps its own count: the override covers ``start()`` alone, and a
+    start that raises still restores the conf and leaves no stream."""
+    from pyspark.errors import AnalysisException
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from async_stream_processing_spark.session import PINNED_SHUFFLE_PARTITIONS
+    from async_stream_processing_spark.streaming.replay import drain
+
+    parts = "spark.sql.shuffle.partitions"
+    aqe = "spark.sql.adaptive.enabled"
+
+    class Probe(StreamingQueryListener):
+        def __init__(self):
+            self.seen = []
+            self.done = threading.Event()
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            self.seen.append((
+                [op.numShufflePartitions
+                 for op in event.progress.stateOperators],
+                spark.conf.get(parts),
+            ))
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            self.done.set()
+
+    src = str(tmp_path / "src")
+    _write_events(spark, src, _rows(30), n_files=3)
+    prev = {k: spark.conf.get(k) for k in (parts, aqe)}
+    probe = Probe()
+    spark.conf.set(parts, "7")
+    spark.conf.set(aqe, "true")
+    spark.streams.addListener(probe)
+    try:
+        counts = replay_stream(spark, src, EVENTS_SCHEMA,
+                               max_files_per_trigger=1
+                               ).groupBy("user_id").count()
+        got = {r.user_id: r["count"] for r in drain(counts).collect()}
+        assert got == {0: 10, 1: 10, 2: 10}
+        assert probe.done.wait(60)
+        assert probe.seen == [([PINNED_SHUFFLE_PARTITIONS], "7")] * 3
+
+        # append mode over an aggregation without a watermark: start()
+        # itself raises
+        with pytest.raises(AnalysisException):
+            drain(replay_stream(spark, src, EVENTS_SCHEMA)
+                  .groupBy("user_id").count(), output_mode="append")
+        assert spark.conf.get(parts) == "7"
+        assert spark.streams.active == []
+    finally:
+        spark.streams.removeListener(probe)
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+
+
+def test_append_drain_keeps_every_batch(spark, tmp_path):
+    """The one file sink appends each append-mode micro-batch: a 3-file
+    replay at one file per trigger returns all rows of all 3 batches."""
+    from async_stream_processing_spark.streaming.replay import (
+        DRAIN_BATCH_TALLY,
+        drain,
+    )
+
+    src = str(tmp_path / "src")
+    rows = _rows(30)
+    _write_events(spark, src, rows, n_files=3)
+    DRAIN_BATCH_TALLY["batches"] = 0
+    out = drain(replay_stream(spark, src, EVENTS_SCHEMA,
+                              max_files_per_trigger=1),
+                output_mode="append")
+    assert DRAIN_BATCH_TALLY["batches"] == 3
+    assert sorted(tuple(r) for r in out.collect()) == sorted(rows)
+
+
+def test_drain_of_empty_source_has_stream_schema(spark, tmp_path):
+    """No micro-batch runs over an empty source; the drain still returns
+    zero rows with the stream's schema."""
+    from async_stream_processing_spark.streaming.replay import drain
+
+    src = tmp_path / "empty"
+    src.mkdir()
+    stream = replay_stream(spark, str(src), EVENTS_SCHEMA)
+    for mode, plan in (("append", stream),
+                       ("complete", stream.groupBy("user_id").count())):
+        out = drain(plan, output_mode=mode)
+        assert out.count() == 0
+        assert [(f.name, f.dataType) for f in out.schema] == \
+            [(f.name, f.dataType) for f in plan.schema]

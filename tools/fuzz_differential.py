@@ -439,12 +439,7 @@ def run_spark_streaming(spark, sf_dir: str, case: dict):
         out = df.groupBy(*group_cols).agg(*agg_cols)
     else:
         out = df.groupBy().agg(*agg_cols)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        res = drain(out, output_mode="complete")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    res = drain(out, output_mode="complete")
     if case.get("having"):
         res = res.filter(eval(case["having"][0], env))
     return res.toPandas()

@@ -251,12 +251,7 @@ def _finals(spark, folded_stream, n_col: str = "n"):
 
     from async_stream_processing_spark.streaming.replay import drain
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        out = drain(folded_stream, output_mode="append")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    out = drain(folded_stream, output_mode="append")
     w = Window.partitionBy("user_id").orderBy(F.desc(n_col))
     return (
         out.withColumn("__rk", F.row_number().over(w))
@@ -361,50 +356,36 @@ def run_case(spark, rng: random.Random, sf_dir: str) -> str:
         elif kind == "bollinger":
             # per-ROW series (append mode emits each row once): compare
             # the whole rolling output, no final-row selection
-            from async_stream_processing_spark.streaming.replay import (
-                drain,
-            )
+            from async_stream_processing_spark.streaming.replay import drain
 
-            prev = spark.conf.get("spark.sql.shuffle.partitions")
-            spark.conf.set("spark.sql.shuffle.partitions", "4")
-            try:
-                s = base.select("ts", "event_id", "user_id", "x")
-                if shuffled:
-                    raw = drain(reordered_bollinger_stream(s, delay=delay),
-                                output_mode="append")
-                    got = _max_nb(raw).select(
-                        "user_id", "event_id", "n", "sx_c", "sxx_c4")
-                else:
-                    got = drain(
-                        bollinger_fold_stream(s), output_mode="append",
-                    ).select("user_id", "event_id", "n", "sx_c", "sxx_c4")
-            finally:
-                spark.conf.set("spark.sql.shuffle.partitions", prev)
+            s = base.select("ts", "event_id", "user_id", "x")
+            if shuffled:
+                raw = drain(reordered_bollinger_stream(s, delay=delay),
+                            output_mode="append")
+                got = _max_nb(raw).select(
+                    "user_id", "event_id", "n", "sx_c", "sxx_c4")
+            else:
+                got = drain(
+                    bollinger_fold_stream(s), output_mode="append",
+                ).select("user_id", "event_id", "n", "sx_c", "sxx_c4")
             want = _batch_bollinger(df, BOLLINGER_K).select(
                 "user_id", "event_id", "n", "sx_c", "sxx_c4")
             label = f"bollinger(k={BOLLINGER_K})"
         elif kind == "corr":
-            from async_stream_processing_spark.streaming.replay import (
-                drain,
-            )
+            from async_stream_processing_spark.streaming.replay import drain
 
-            prev = spark.conf.get("spark.sql.shuffle.partitions")
-            spark.conf.set("spark.sql.shuffle.partitions", "4")
-            try:
-                s = base.select("ts", "event_id", "user_id", "x")
-                if shuffled:
-                    raw = drain(reordered_corr_stream(s, delay=delay),
-                                output_mode="append")
-                    got = _max_nb(raw).select(
-                        "user_id", "event_id", "n", "sx_c", "sy_c",
-                        "sxy_c4", "sxx_c4", "syy_c4")
-                else:
-                    got = drain(
-                        corr_fold_stream(s), output_mode="append",
-                    ).select("user_id", "event_id", "n", "sx_c", "sy_c",
-                             "sxy_c4", "sxx_c4", "syy_c4")
-            finally:
-                spark.conf.set("spark.sql.shuffle.partitions", prev)
+            s = base.select("ts", "event_id", "user_id", "x")
+            if shuffled:
+                raw = drain(reordered_corr_stream(s, delay=delay),
+                            output_mode="append")
+                got = _max_nb(raw).select(
+                    "user_id", "event_id", "n", "sx_c", "sy_c",
+                    "sxy_c4", "sxx_c4", "syy_c4")
+            else:
+                got = drain(
+                    corr_fold_stream(s), output_mode="append",
+                ).select("user_id", "event_id", "n", "sx_c", "sy_c",
+                         "sxy_c4", "sxx_c4", "syy_c4")
             want = _batch_corr(df, BOLLINGER_K).select(
                 "user_id", "event_id", "n", "sx_c", "sy_c",
                 "sxy_c4", "sxx_c4", "syy_c4")

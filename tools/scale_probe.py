@@ -207,16 +207,14 @@ def main() -> None:
         from async_stream_processing_spark.streaming.reorder import (
             reordered_fold_stream,
         )
-        from async_stream_processing_spark.streaming.replay import (
-            drain_guarded,
-        )
+        from async_stream_processing_spark.streaming.replay import drain
 
         schema = spark.read.parquet(d).schema
         s = (spark.readStream.schema(schema)
              .option("maxFilesPerTrigger", 1).parquet(d))
-        return drain_guarded(
+        return drain(
             reordered_fold_stream(s, "cusum", delay="7200 seconds"),
-            output_mode="append", shuffle_partitions="4",
+            output_mode="append",
         )
 
     if not ONLY or "reorder_cusum_stream" in ONLY:
