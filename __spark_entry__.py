@@ -988,20 +988,44 @@ def _stream_time_shuffled(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _drain_fold(spark: SparkSession, folded_stream: DataFrame) -> DataFrame:
-    """Drain an applyInPandasWithState fold (append mode) and keep each
-    key's FINAL state row (max ``n`` — the cart-fold convention)."""
-    from pyspark.sql import Window
+def _fold_input(stream: DataFrame, kind: str, scale: int = 1) -> DataFrame:
+    """(ts, event_id, user_id, <value>) rows for a stream fold: the
+    event ``value`` as integer cents (times ``scale``), named as the
+    kind's kernel reads it."""
+    from async_stream_processing_spark.streaming.folds import FOLD_KINDS
 
+    cents = (F.col("value").cast("decimal(18,2)") * 100).cast("long")
+    if scale != 1:
+        cents = cents * F.lit(scale)
+    return stream.select(
+        "ts", "event_id", "user_id", cents.alias(FOLD_KINDS[kind].value),
+    )
+
+
+def _stream_fold(spark: SparkSession, sf_dir: str, kind: str,
+                 ooo: bool = False, scale: int = 1, **kw) -> DataFrame:
+    """Drain ``kind``'s fold over the events replay and keep its final
+    rows (``folds.final_rows``).  The ordered twin folds the time-split
+    replay with the zero-buffer fold; the ``ooo`` twin folds the
+    time-shuffled replay with the reorder-buffered fold at
+    ``_REORDER_DELAY``.  ``kw`` are the kernel's parameters."""
+    from async_stream_processing_spark.streaming.folds import (
+        final_rows,
+        fold_stream,
+    )
+    from async_stream_processing_spark.streaming.reorder import (
+        reordered_fold_stream,
+    )
     from async_stream_processing_spark.streaming.replay import drain
 
-    out = drain(folded_stream, output_mode="append")
-    w = Window.partitionBy("user_id").orderBy(F.desc("n"))
-    return (
-        out.withColumn("__rk", F.row_number().over(w))
-        .filter(F.col("__rk") == 1)
-        .drop("__rk")
-    )
+    if ooo:
+        s = _fold_input(_stream_time_shuffled(spark, sf_dir), kind, scale)
+        folded = reordered_fold_stream(s, kind, delay=_REORDER_DELAY, **kw)
+    else:
+        s = _fold_input(_stream_time_ordered(spark, sf_dir), kind, scale)
+        folded = fold_stream(s, kind, **kw)
+    out = drain(folded, output_mode="append")
+    return final_rows(out, kind, reordered=ooo)
 
 
 def q_stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1012,16 +1036,12 @@ def q_stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``array_sort(collect_list)`` state held the corpus).  Micro-batches
     arrive in event-time order (time-split replay); the drained final
     state hash-matches the SAME oracle as the batch query."""
-    from async_stream_processing_spark.streaming.folds import (
-        cusum_fold_stream,
-    )
+    return _cusum_from_finals(_stream_fold(spark, sf_dir, "cusum"))
 
-    s = _stream_time_ordered(spark, sf_dir).select(
-        "ts", "event_id", "user_id",
-        (F.col("value").cast("decimal(18,2)") * 100)
-        .cast("long").alias("x"),
-    )
-    finals = _drain_fold(spark, cusum_fold_stream(s))
+
+def _cusum_from_finals(finals: DataFrame) -> DataFrame:
+    """Shared CUSUM finalization for the ordered and reorder-buffered
+    stream twins and the lake round trip."""
     return finals.select(
         "user_id",
         F.col("smax").alias("max_cusum"),
@@ -2671,16 +2691,14 @@ def q_stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ewma_scaled, n) — the recurrence's sufficient statistic — instead
     of the former full-history ``collect_list`` state (r8 verdict
     item 1).  Same scaled-integer truncating recurrence, same oracle."""
-    from async_stream_processing_spark.streaming.folds import (
-        ewma_fold_stream,
+    return _ewma_from_finals(
+        _stream_fold(spark, sf_dir, "ewma", scale=1_000_000)
     )
 
-    s = _stream_time_ordered(spark, sf_dir).select(
-        "ts", "event_id", "user_id",
-        ((F.col("value").cast("decimal(18,2)") * 100).cast("long")
-         * F.lit(1_000_000)).alias("x"),
-    )
-    finals = _drain_fold(spark, ewma_fold_stream(s))
+
+def _ewma_from_finals(finals: DataFrame) -> DataFrame:
+    """Shared EWMA finalization for the ordered and reorder-buffered
+    stream twins."""
     return finals.select(
         "user_id",
         F.col("n").alias("n_events"),
@@ -2709,16 +2727,12 @@ def q_stream_rsi(spark: SparkSession, sf_dir: str) -> DataFrame:
     RSI ratio is computed Spark-side through the identical IEEE tree.
     Replaces the full-history ``collect_list`` state (r8 verdict
     item 1); hash-matches the SAME oracle as rsi_users."""
-    from async_stream_processing_spark.streaming.folds import (
-        rsi_fold_stream,
-    )
+    return _rsi_from_finals(_stream_fold(spark, sf_dir, "rsi", period=14))
 
-    s = _stream_time_ordered(spark, sf_dir).select(
-        "ts", "event_id", "user_id",
-        (F.col("value").cast("decimal(18,2)") * 100)
-        .cast("long").alias("y"),
-    )
-    finals = _drain_fold(spark, rsi_fold_stream(s, period=14))
+
+def _rsi_from_finals(finals: DataFrame) -> DataFrame:
+    """Shared RSI finalization (the batch operator's IEEE ratio tree)
+    for the ordered and reorder-buffered stream twins."""
     agg = finals.select(
         "user_id",
         (F.col("n") - 1).alias("n_diffs"),
@@ -2745,17 +2759,7 @@ def q_stream_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 1-based event-time position, carried across batches by n); the
     slope/intercept/r2 IEEE tree is identical to the batch ols_trend,
     so the drained result hash-matches the SAME oracle."""
-    from async_stream_processing_spark.streaming.folds import (
-        ols_fold_stream,
-    )
-
-    s = _stream_time_ordered(spark, sf_dir).select(
-        "ts", "event_id", "user_id",
-        (F.col("value").cast("decimal(18,2)") * 100)
-        .cast("long").alias("y"),
-    )
-    finals = _drain_fold(spark, ols_fold_stream(s))
-    return _ols_from_finals(finals)
+    return _ols_from_finals(_stream_fold(spark, sf_dir, "ols"))
 
 
 def _ols_from_finals(finals: DataFrame) -> DataFrame:
@@ -2807,16 +2811,12 @@ def q_stream_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of the former full-history ``collect_list`` state (r8
     verdict item 1).  The dollar casts run Spark-side through the same
     IEEE tree as the batch twin; hash-matches the SAME oracle."""
-    from async_stream_processing_spark.streaming.folds import (
-        drawdown_fold_stream,
-    )
+    return _drawdown_from_finals(_stream_fold(spark, sf_dir, "drawdown"))
 
-    s = _stream_time_ordered(spark, sf_dir).select(
-        "ts", "event_id", "user_id",
-        (F.col("value").cast("decimal(18,2)") * 100)
-        .cast("long").alias("x"),
-    )
-    finals = _drain_fold(spark, drawdown_fold_stream(s))
+
+def _drawdown_from_finals(finals: DataFrame) -> DataFrame:
+    """Shared drawdown finalization (cents to dollars, the batch twin's
+    IEEE tree) for the ordered and reorder-buffered stream twins."""
     return finals.select(
         "user_id",
         (F.col("dd").cast("double") / F.lit(100.0)).alias("max_drawdown"),
@@ -2835,18 +2835,7 @@ def q_stream_bollinger(spark: SparkSession, sf_dir: str) -> DataFrame:
     IEEE tree runs Spark-side, identical to the batch operator, so the
     full rolling series hash-matches the SAME oracle as
     ``bollinger_bands`` row for row."""
-    from async_stream_processing_spark.streaming.folds import (
-        bollinger_fold_stream,
-    )
-    from async_stream_processing_spark.streaming.replay import drain
-
-    s = _stream_time_ordered(spark, sf_dir).select(
-        "ts", "event_id", "user_id",
-        (F.col("value").cast("decimal(18,2)") * 100)
-        .cast("long").alias("x"),
-    )
-    out = drain(bollinger_fold_stream(s), output_mode="append")
-    return _bollinger_from_sums(out)
+    return _bollinger_from_sums(_stream_fold(spark, sf_dir, "bollinger"))
 
 
 def _bollinger_from_sums(out: DataFrame) -> DataFrame:
@@ -2875,18 +2864,7 @@ def q_stream_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pearson IEEE tree runs Spark-side identical to the batch operator,
     so the full series hash-matches the SAME oracle as
     ``rolling_corr``."""
-    from async_stream_processing_spark.streaming.folds import (
-        corr_fold_stream,
-    )
-    from async_stream_processing_spark.streaming.replay import drain
-
-    s = _stream_time_ordered(spark, sf_dir).select(
-        "ts", "event_id", "user_id",
-        (F.col("value").cast("decimal(18,2)") * 100)
-        .cast("long").alias("x"),
-    )
-    out = drain(corr_fold_stream(s), output_mode="append")
-    return _corr_from_sums(out)
+    return _corr_from_sums(_stream_fold(spark, sf_dir, "corr"))
 
 
 def _corr_from_sums(out: DataFrame) -> DataFrame:
@@ -2918,25 +2896,7 @@ def q_stream_cusum_ooo(spark: SparkSession, sf_dir: str) -> DataFrame:
     speculative state each batch — so the drained final rows
     hash-match the SAME oracle as the time-ordered ``stream_cusum``,
     with state bounded by the watermark horizon, never history."""
-    from async_stream_processing_spark.streaming.reorder import (
-        reordered_fold_stream,
-    )
-
-    s = _stream_time_shuffled(spark, sf_dir).select(
-        "ts", "event_id", "user_id",
-        (F.col("value").cast("decimal(18,2)") * 100)
-        .cast("long").alias("x"),
-    )
-    finals = _drain_fold(
-        spark, reordered_fold_stream(s, "cusum", delay=_REORDER_DELAY)
-    )
-    return finals.select(
-        "user_id",
-        F.col("smax").alias("max_cusum"),
-        "n_over",
-        F.col("alarm").alias("first_alarm_event"),
-        F.col("n").alias("n_points"),
-    ).filter(F.col("n_points") >= 10)
+    return _cusum_from_finals(_stream_fold(spark, sf_dir, "cusum", ooo=True))
 
 
 def q_stream_ols_ooo(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2945,19 +2905,7 @@ def q_stream_ols_ooo(spark: SparkSession, sf_dir: str) -> DataFrame:
     time index (the 1-based event-time position) is assigned correctly
     even though arrival interleaves — hash-matches the SAME oracle as
     the ordered ``stream_ols``."""
-    from async_stream_processing_spark.streaming.reorder import (
-        reordered_fold_stream,
-    )
-
-    s = _stream_time_shuffled(spark, sf_dir).select(
-        "ts", "event_id", "user_id",
-        (F.col("value").cast("decimal(18,2)") * 100)
-        .cast("long").alias("y"),
-    )
-    finals = _drain_fold(
-        spark, reordered_fold_stream(s, "ols", delay=_REORDER_DELAY)
-    )
-    return _ols_from_finals(finals)
+    return _ols_from_finals(_stream_fold(spark, sf_dir, "ols", ooo=True))
 
 
 def q_stream_bollinger_ooo(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2968,29 +2916,9 @@ def q_stream_bollinger_ooo(spark: SparkSession, sf_dir: str) -> DataFrame:
     value is the event's exact frame (its finalization batch, or the
     last batch if the tail never finalized).  Hash-matches the SAME
     oracle as the ordered ``stream_bollinger`` row for row."""
-    from pyspark.sql import Window
-
-    from async_stream_processing_spark.streaming.reorder import (
-        reordered_bollinger_stream,
+    return _bollinger_from_sums(
+        _stream_fold(spark, sf_dir, "bollinger", ooo=True)
     )
-    from async_stream_processing_spark.streaming.replay import drain
-
-    s = _stream_time_shuffled(spark, sf_dir).select(
-        "ts", "event_id", "user_id",
-        (F.col("value").cast("decimal(18,2)") * 100)
-        .cast("long").alias("x"),
-    )
-    out = drain(
-        reordered_bollinger_stream(s, delay=_REORDER_DELAY),
-        output_mode="append",
-    )
-    w = Window.partitionBy("user_id", "event_id").orderBy(F.desc("nb"))
-    final_rows = (
-        out.withColumn("__rk", F.row_number().over(w))
-        .filter(F.col("__rk") == 1)
-        .drop("__rk", "nb")
-    )
-    return _bollinger_from_sums(final_rows)
 
 
 def q_stream_ewma_ooo(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3000,23 +2928,8 @@ def q_stream_ewma_ooo(spark: SparkSession, sf_dir: str) -> DataFrame:
     the SAME pure ewma kernel as the ordered ``stream_ewma`` in
     event-time order, so the drained final state hash-matches the SAME
     oracle despite the ±2 h cross-batch arrival jitter."""
-    from async_stream_processing_spark.streaming.reorder import (
-        reordered_fold_stream,
-    )
-
-    s = _stream_time_shuffled(spark, sf_dir).select(
-        "ts", "event_id", "user_id",
-        ((F.col("value").cast("decimal(18,2)") * 100).cast("long")
-         * F.lit(1_000_000)).alias("x"),
-    )
-    finals = _drain_fold(
-        spark, reordered_fold_stream(s, "ewma", delay=_REORDER_DELAY)
-    )
-    return finals.select(
-        "user_id",
-        F.col("n").alias("n_events"),
-        F.col("ew").alias("ewma_scaled"),
-        (F.col("ew").cast("double") / F.lit(100_000_000.0)).alias("ewma"),
+    return _ewma_from_finals(
+        _stream_fold(spark, sf_dir, "ewma", ooo=True, scale=1_000_000)
     )
 
 
@@ -3026,33 +2939,8 @@ def q_stream_rsi_ooo(spark: SparkSession, sf_dir: str) -> DataFrame:
     reorder buffer's event-time re-sort is what keeps the drained
     result hash-matching the SAME oracle as the ordered
     ``stream_rsi``."""
-    from async_stream_processing_spark.streaming.reorder import (
-        reordered_fold_stream,
-    )
-
-    s = _stream_time_shuffled(spark, sf_dir).select(
-        "ts", "event_id", "user_id",
-        (F.col("value").cast("decimal(18,2)") * 100)
-        .cast("long").alias("y"),
-    )
-    finals = _drain_fold(
-        spark, reordered_fold_stream(s, "rsi", delay=_REORDER_DELAY,
-                                     period=14)
-    )
-    agg = finals.select(
-        "user_id",
-        (F.col("n") - 1).alias("n_diffs"),
-        F.col("ag").alias("ag_scaled"),
-        F.col("al").alias("al_scaled"),
-    ).filter(F.col("n_diffs") >= 14)
-    ag_d = F.col("ag_scaled").cast("double")
-    al_d = F.col("al_scaled").cast("double")
-    return agg.withColumn(
-        "rsi",
-        F.when(
-            F.col("ag_scaled") + F.col("al_scaled") > 0,
-            F.lit(100.0) * ag_d / (ag_d + al_d),
-        ),
+    return _rsi_from_finals(
+        _stream_fold(spark, sf_dir, "rsi", ooo=True, period=14)
     )
 
 
@@ -3062,24 +2950,8 @@ def q_stream_drawdown_ooo(spark: SparkSession, sf_dir: str) -> DataFrame:
     changes the running peak), so this is the sharpest test of the
     reorder buffer's finalize-in-order contract — hash-matches the
     SAME oracle as the ordered ``stream_max_drawdown``."""
-    from async_stream_processing_spark.streaming.reorder import (
-        reordered_fold_stream,
-    )
-
-    s = _stream_time_shuffled(spark, sf_dir).select(
-        "ts", "event_id", "user_id",
-        (F.col("value").cast("decimal(18,2)") * 100)
-        .cast("long").alias("x"),
-    )
-    finals = _drain_fold(
-        spark, reordered_fold_stream(s, "drawdown", delay=_REORDER_DELAY)
-    )
-    return finals.select(
-        "user_id",
-        (F.col("dd").cast("double") / F.lit(100.0)).alias("max_drawdown"),
-        (F.col("peak").cast("double") / F.lit(100.0)).alias("peak_equity"),
-        (F.col("eq").cast("double") / F.lit(100.0)).alias("final_equity"),
-        F.col("n").alias("n_events"),
+    return _drawdown_from_finals(
+        _stream_fold(spark, sf_dir, "drawdown", ooo=True)
     )
 
 
@@ -3091,29 +2963,7 @@ def q_stream_rolling_corr_ooo(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumer keeps max-``nb`` per (user_id, event_id) and the Pearson
     tree hash-matches the SAME oracle as the ordered
     ``stream_rolling_corr`` row for row."""
-    from pyspark.sql import Window
-
-    from async_stream_processing_spark.streaming.reorder import (
-        reordered_corr_stream,
-    )
-    from async_stream_processing_spark.streaming.replay import drain
-
-    s = _stream_time_shuffled(spark, sf_dir).select(
-        "ts", "event_id", "user_id",
-        (F.col("value").cast("decimal(18,2)") * 100)
-        .cast("long").alias("x"),
-    )
-    out = drain(
-        reordered_corr_stream(s, delay=_REORDER_DELAY),
-        output_mode="append",
-    )
-    w = Window.partitionBy("user_id", "event_id").orderBy(F.desc("nb"))
-    final_rows = (
-        out.withColumn("__rk", F.row_number().over(w))
-        .filter(F.col("__rk") == 1)
-        .drop("__rk", "nb")
-    )
-    return _corr_from_sums(final_rows)
+    return _corr_from_sums(_stream_fold(spark, sf_dir, "corr", ooo=True))
 
 
 def q_stream_lake_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3139,13 +2989,12 @@ def q_stream_lake_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from pyspark.sql import Window
-
     from async_stream_processing_spark.plans.versioned import (
         checkpoint_manifest,
         scan_version,
         versioned_sink,
     )
+    from async_stream_processing_spark.streaming.folds import final_rows
     from async_stream_processing_spark.streaming.reorder import (
         reordered_fold_stream,
     )
@@ -3155,12 +3004,11 @@ def q_stream_lake_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         # proof (reorder + exactly-once commits + checkpoint + pruned
         # read) doesn't need full volume — the 7 fold twins cover that
         # — and the scanned range [2, 9] stays complete
-        s = _stream_time_shuffled(spark, sf_dir).filter(
-            F.col("user_id") < 20
-        ).select(
-            "ts", "event_id", "user_id",
-            (F.col("value").cast("decimal(18,2)") * 100)
-            .cast("long").alias("x"),
+        s = _fold_input(
+            _stream_time_shuffled(spark, sf_dir).filter(
+                F.col("user_id") < 20
+            ),
+            "cusum",
         )
         return reordered_fold_stream(s, "cusum", delay=_REORDER_DELAY)
 
@@ -3196,19 +3044,9 @@ def q_stream_lake_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         # untouched.  The returned view stays hash-gated here.
         checkpoint_manifest(spark, lake)
         scanned = scan_version(spark, lake, "user_id", 2, 9)
-        w = Window.partitionBy("user_id").orderBy(F.desc("n"))
-        finals = (
-            scanned.withColumn("__rk", F.row_number().over(w))
-            .filter(F.col("__rk") == 1)
-            .drop("__rk")
-        )
-        out = finals.select(
-            "user_id",
-            F.col("smax").alias("max_cusum"),
-            "n_over",
-            F.col("alarm").alias("first_alarm_event"),
-            F.col("n").alias("n_points"),
-        ).filter(F.col("n_points") >= 10).localCheckpoint(eager=True)
+        out = _cusum_from_finals(
+            final_rows(scanned, "cusum")
+        ).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(lake, ignore_errors=True)
         shutil.rmtree(ck, ignore_errors=True)

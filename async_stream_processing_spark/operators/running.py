@@ -15,7 +15,7 @@ window functions so Catalyst plans a single sort per partition.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.numeric import dec
@@ -64,15 +64,3 @@ def spread(
     return merged.withColumn(
         "spread", (dec("ask", 2) - dec("bid", 2)).cast("double")
     ).filter(F.col("bid").isNotNull() & F.col("ask").isNotNull())
-
-
-def cumulative(
-    df: DataFrame,
-    exprs: dict[str, Column],
-    partition_by: list[str] | None = None,
-) -> DataFrame:
-    """Generic running aggregates in strict event order (ts, seq)."""
-    w = _cum_window(partition_by)
-    for name, col in exprs.items():
-        df = df.withColumn(name, col.over(w))
-    return df

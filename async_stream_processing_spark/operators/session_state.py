@@ -13,7 +13,7 @@ Two implementations, deliberately:
   oracle-checkable, scales as a keyed aggregation.
 * :func:`cart_fold` -- the faithful FIFO state machine as ``applyInPandas``
   over user partitions, the batch analog of the streaming
-  ``transformWithStateInPandas`` handler in ``streaming/cart.py``.  This is
+  ``applyInPandasWithState`` fold in ``streaming/cart.py``.  This is
   the pattern to reach for when semantics genuinely can't be expressed
   relationally; state stays bounded per key and keys are distributed.
 """

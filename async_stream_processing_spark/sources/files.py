@@ -1,4 +1,4 @@
-"""Uniform batch/stream readers for the lake formats.
+"""Uniform batch readers for the lake formats.
 
 The reference has no file sources at all (its examples inline data --
 SURVEY §2 checklist); a complete engine reads the standard formats with the
@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .parquet import load_table  # re-export: the primary reader
 
-__all__ = ["load_table", "read_csv", "read_json", "stream_csv", "stream_json"]
+__all__ = ["load_table", "read_csv", "read_json"]
 
 
 def read_csv(
@@ -25,13 +25,3 @@ def read_csv(
 
 def read_json(spark: SparkSession, path: str, schema: str, **options) -> DataFrame:
     return spark.read.options(**options).schema(schema).json(path)
-
-
-def stream_csv(
-    spark: SparkSession, path: str, schema: str, header: bool = True, **options
-) -> DataFrame:
-    return spark.readStream.options(header=header, **options).schema(schema).csv(path)
-
-
-def stream_json(spark: SparkSession, path: str, schema: str, **options) -> DataFrame:
-    return spark.readStream.options(**options).schema(schema).json(path)

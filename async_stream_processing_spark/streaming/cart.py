@@ -2,21 +2,17 @@
 
 ``CartManager`` (``/root/reference/examples/csp/01_basics/
 e5_retail_cart.py:34-68``) holds a per-user cart and arms a timer that
-flips the discount off 60 s after start (e5:106-108).  Two Spark-native
-implementations:
+flips the discount off 60 s after start (e5:106-108).
+:func:`cart_stream` implements it with ``applyInPandasWithState``
+(GroupState API): keyed state + ``EventTimeTimeout`` as the timer.  It
+needs nothing beyond pyspark itself.  (Spark 4's
+``transformWithStateInPandas`` offers finer state primitives, but its
+Python state-server protocol imports ``google.protobuf``, which this
+environment does not install.)
 
-* :func:`cart_stream` -- ``applyInPandasWithState`` (GroupState API):
-  keyed state + ``EventTimeTimeout`` as the timer.  This is the default
-  path; it needs nothing beyond pyspark itself.
-* :class:`CartProcessor` -- the Spark 4 ``transformWithStateInPandas``
-  StatefulProcessor (value state + ``registerTimer``), the forward path
-  with finer state primitives.  Its Python state-server protocol requires
-  ``protobuf``, absent in this container, so it is exported but
-  auto-selected only when importable (``HAS_TWS``).
-
-Both apply the discount by comparing each event's time to the per-user
-deadline (event-time exact even when the whole history lands in one
-micro-batch) and use the timer/timeout to emit a ``discount_ended`` marker
+The fold applies the discount by comparing each event's time to the
+per-user deadline (event-time exact even when the whole history lands in
+one micro-batch) and uses the timeout to emit a ``discount_ended`` marker
 when the watermark crosses the deadline -- the observable analog of the
 reference's timer callback.  State is keyed by user: the state store
 shards across executors (RocksDB provider for 100 TB runs).
@@ -28,13 +24,6 @@ import json
 from collections.abc import Iterator
 
 import pandas as pd
-
-try:  # transformWithStateInPandas needs the protobuf state-server protocol
-    from google.protobuf import descriptor  # noqa: F401
-
-    HAS_TWS = True
-except ImportError:  # pragma: no cover
-    HAS_TWS = False
 
 #: Output schema: one row per processed event (running totals) plus a
 #: marker row when the discount timer fires.  ``n_updates`` is the per-user
@@ -135,76 +124,5 @@ def cart_stream(stream, discount: float = 0.9, discount_seconds: int = 60,
             stateStructType=CART_STATE_SCHEMA,
             outputMode="append",
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-class CartProcessor:
-    """``transformWithStateInPandas`` StatefulProcessor variant (Spark 4).
-
-    Selected via :func:`cart_stream_tws` when protobuf is available
-    (``HAS_TWS``); same fold, value-state + ``registerTimer`` primitives.
-    """
-
-    def __init__(self, discount: float = 0.9, discount_seconds: int = 60):
-        self.discount = discount
-        self.discount_seconds = discount_seconds
-
-    def init(self, handle) -> None:
-        from pyspark.sql.types import StringType, StructField, StructType
-
-        self.handle = handle
-        self.state = handle.getValueState(
-            "cart", StructType([StructField("blob", StringType(), True)])
-        )
-
-    def _load(self) -> dict:
-        if self.state.exists():
-            return json.loads(self.state.get()[0])
-        return {"items": [], "t0": None}
-
-    def handleInputRows(self, key, rows, timer_values) -> Iterator[pd.DataFrame]:
-        st = self._load()
-        first_event = st["t0"] is None
-        out: list[tuple] = []
-        for pdf in rows:
-            out.extend(_fold_events(st, pdf, self.discount, self.discount_seconds))
-        self.state.update((json.dumps(st),))
-        if first_event and st["t0"] is not None:
-            self.handle.registerTimer(
-                st["t0"] // 1000 + self.discount_seconds * 1000
-            )
-        yield pd.DataFrame(
-            out,
-            columns=["user_id", "event_kind", "n_updates", "cart_qty", "cart_value"],
-        )
-
-    def handleExpiredTimer(self, key, timer_values, expired_timer_info):
-        st = self._load()
-        yield pd.DataFrame(
-            [(int(key[0]), "discount_ended", st.get("n", 0), *_summary(st))],
-            columns=["user_id", "event_kind", "n_updates", "cart_qty", "cart_value"],
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def cart_stream_tws(stream, discount: float = 0.9, discount_seconds: int = 60,
-                    watermark: str = "0 seconds"):  # pragma: no cover
-    """Spark 4 transformWithStateInPandas wiring (requires protobuf)."""
-    if not HAS_TWS:
-        raise ImportError(
-            "transformWithStateInPandas needs the 'protobuf' package; "
-            "use cart_stream (applyInPandasWithState) in this container"
-        )
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=CartProcessor(discount, discount_seconds),
-            outputStructType=CART_OUTPUT_SCHEMA,
-            outputMode="Append",
-            timeMode="EventTime",
         )
     )

@@ -17,13 +17,32 @@ order and folded into the carried statistics; the watermark bounds how
 late a row may arrive (the reference itself has NO late tolerance —
 SURVEY §2 — so any watermark is strictly more forgiving).
 
+ONE TABLE, :data:`FOLD_KINDS`, holds every fact about each of the seven
+kinds: its state DDL (the checkpoint format), the input value column,
+its kernel, the core a key starts from, how a core packs into and out
+of the state row, and — for the per-event kinds — the DDL of the rows
+it emits.  :func:`fold_stream` drives the ordered path from it, the
+reorder-buffered path in :mod:`streaming.reorder` drives its twin from
+the same entries, and :func:`final_rows` keeps a drained fold's final
+rows by the kind's convention.  Two families share the table:
+
+* per-key (cusum, ewma, rsi, ols, drawdown): O(1) state; each batch
+  emits ONE row per key carrying the state plus ``user_id``, and the
+  drained final row per key is the one with max ``n`` (the cart-fold
+  convention).
+* per-event (bollinger, corr): O(k) state, the k-1 most recent values
+  of a k-row frame (k = ``BOLLINGER_K``, fixed so the state stays a
+  fixed-width scalar-long struct); each batch emits ONE row per event —
+  the rolling series, not a per-key reduction.
+
 Exactness discipline: every recurrence runs in the SAME scaled-integer
 arithmetic as its batch twin (``operators/analytics.py``,
 ``operators/windows.py``), including Spark's truncate-toward-zero
 integer division, so the drained stream still hash-matches the
 batch/DuckDB oracle bit-for-bit.  All float math (RSI ratio, OLS
-slope/r2, drawdown dollars) happens AFTER the fold, Spark-side, through
-the identical IEEE expression trees the batch twins use.
+slope/r2, drawdown dollars, band and Pearson trees) happens AFTER the
+fold, Spark-side, through the identical IEEE expression trees the
+batch twins use.
 
 Ordering contract: an incremental fold here is exact when each key's
 rows arrive across micro-batches in non-decreasing (ts, event_id)
@@ -36,8 +55,9 @@ For sources that interleave rows out of time order ACROSS batches, the
 reorder-buffered twins in :mod:`streaming.reorder` remove this
 contract entirely (exact for any disorder within the watermark delay)
 by holding rows in state until the watermark passes — these ordered
-folds remain the zero-buffer fast path.  Both paths share the pure
-kernels below, so the recurrences cannot drift.
+folds remain the zero-buffer fast path.  Both paths call the pure
+kernels below through the same table entry, so the recurrences cannot
+drift.
 
 The reference's analog is a per-key Python accumulator in a callback
 (``/root/reference/src/async_stream_processing/processor.py:185-194``
@@ -47,80 +67,43 @@ engine-managed keyed state that shards across executors.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable
+from typing import Any, NamedTuple
 
 import pandas as pd
 
 __all__ = [
-    "cusum_fold_stream",
-    "ewma_fold_stream",
-    "rsi_fold_stream",
-    "ols_fold_stream",
-    "drawdown_fold_stream",
-    "bollinger_fold_stream",
-    "corr_fold_stream",
+    "FOLD_KINDS",
     "STATE_SCHEMAS",
+    "fold_stream",
+    "final_rows",
 ]
 
-#: Frame width of the O(k) rolling fold's state (bollinger, k-1 carried
-#: values).  Fixed at module level so the state schema stays a
+#: Frame width of the O(k) rolling folds' state (bollinger, corr: k-1
+#: carried values).  Fixed at module level so the state schema stays a
 #: FIXED-WIDTH struct of scalar longs — the same structural boundedness
 #: guarantee as the O(1) folds, for k known at plan time.
 BOLLINGER_K = 20
 
-#: State schemas are fixed-width scalar structs ONLY — the boundedness
-#: claim is structural and pytest-asserted (no ArrayType/MapType/String).
-STATE_SCHEMAS = {
-    "cusum": (
-        "anchor BIGINT, c BIGINT, m BIGINT, smax BIGINT, "
-        "n_over BIGINT, alarm BIGINT, n BIGINT"
-    ),
-    "ewma": "ew BIGINT, n BIGINT",
-    "rsi": "prev_y BIGINT, ag BIGINT, al BIGINT, n BIGINT",
-    "ols": "n BIGINT, sy BIGINT, sxy BIGINT, syy BIGINT",
-    "drawdown": "eq BIGINT, peak BIGINT, dd BIGINT, n BIGINT",
-    # O(k) rolling frame: cnt + the (k-1) most recent values, oldest
-    # first, unused tail NULL — still a fixed-width scalar-long struct
-    "bollinger": "cnt BIGINT, " + ", ".join(
-        f"v{i} BIGINT" for i in range(BOLLINGER_K - 1)
-    ),
-    # O(k) rolling (x, lag-x) pairs + the carried previous value; y is
-    # NULL only for a key's very first row
-    "corr": "cnt BIGINT, prev_x BIGINT, " + ", ".join(
-        f"x{i} BIGINT, y{i} BIGINT" for i in range(BOLLINGER_K - 1)
-    ),
-}
-
-
-def _sorted_values(pdfs: Iterator[pd.DataFrame], cols: list[str]):
-    """Concatenate a key's micro-batch chunks and yield ``cols`` as
-    numpy arrays in (ts, event_id) event-time order — arrival order
-    within the batch is irrelevant by construction."""
-    pdf = pd.concat(list(pdfs), ignore_index=True)
-    pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort")
-    return [pdf[c].to_numpy() for c in cols]
-
 
 # ---------------------------------------------------------------------------
-# Pure recurrence kernels.  Each consumes a core tuple plus event-time
-# ordered values and returns the advanced core (and, for the per-event
-# family, the emitted rows).  They are the SINGLE definition of every
-# recurrence — the ordered folds below and the reorder-buffered
-# wrappers in streaming/reorder.py both call them, so the two paths
-# cannot drift (differential-tested besides).
+# Pure recurrence kernels.  Each consumes a core plus event-time ordered
+# values and returns the advanced core (and, for the per-event family,
+# the emitted rows).  They are the SINGLE definition of every
+# recurrence — the ordered folds below and the reorder-buffered folds
+# in streaming/reorder.py both call them through FOLD_KINDS, so the two
+# paths cannot drift (differential-tested besides).
 # ---------------------------------------------------------------------------
-
-CORE_INIT = {
-    "cusum": (0, 0, 0, 0, 0, None, 0),
-    "ewma": (0, 0),
-    "rsi": (0, 0, 0, 0),
-    "ols": (0, 0, 0, 0),
-    "drawdown": (0, 0, 0, 0),
-}
-
 
 def cusum_kernel(core, xs, eids, slack: int = 50,
                  threshold: int = 2000) -> tuple:
+    """Page's one-sided CUSUM with O(1) state: (anchor, c, m, smax,
+    n_over, alarm, n) — the sufficient statistics of
+    ``operators/analytics.cusum_drift``'s reflected-walk form: c =
+    cumsum(x - anchor - slack), m = min(0, running-min c), statistic
+    s = c - m.  The alarm id is the MIN alarming event_id (order-free,
+    same as the batch MIN(CASE...)).  ``xs`` are integer cents, computed
+    Spark-side."""
     anchor, c, m, smax, n_over, alarm, n = core
     for x, eid in zip(xs, eids):
         if n == 0:
@@ -141,6 +124,11 @@ def cusum_kernel(core, xs, eids, slack: int = 50,
 
 def ewma_kernel(core, xs, w_old: int = 7, w_new: int = 3,
                 den: int = 10) -> tuple:
+    """EWMA (alpha = w_new/den; default 0.3 — the x7/x3 scaled-integer
+    dialect of ``operators/windows.ewma_exact``) with O(1) state (ew, n).
+    The recurrence ``ew = trunc((ew*w_old + x*w_new) / den)`` matches
+    Spark's ``(y - y % den) / den`` truncate-toward-zero division for
+    any sign (the fuzz grammar exercises non-default weights)."""
     ew, n = core
     for x in xs:
         if n == 0:
@@ -153,6 +141,12 @@ def ewma_kernel(core, xs, w_old: int = 7, w_new: int = 3,
 
 
 def rsi_kernel(core, ys, period: int = 14) -> tuple:
+    """Wilder RSI smoothing with O(1) state: the previous value (to
+    derive the diff across the batch boundary) and the two Wilder
+    accumulators (avg gain/loss, x1e6 scaled ints).  Seed = the FIRST
+    gain/loss (the recursive-seed dialect of
+    ``operators/windows.rsi_wilder``); thereafter
+    ``acc = trunc((acc*(p-1) + v) / p)``."""
     prev_y, ag, al, n = core
     for y in ys:
         if n >= 1:
@@ -170,6 +164,12 @@ def rsi_kernel(core, ys, period: int = 14) -> tuple:
 
 
 def ols_kernel(core, ys) -> tuple:
+    """Per-key OLS over (index, y) with O(1) state: the FOUR carried
+    integer sums (n, sy, sxy, syy); sx/sxx come closed-form from n
+    downstream (``n(n+1)/2``, ``n(n+1)(2n+1)/6`` — exact integer
+    ``div``), exactly as the batch ``ols_trend``.  The time index is the
+    1-based event-time position, so the carried ``n`` numbers the first
+    row of each batch correctly."""
     n, sy, sxy, syy = core
     for y in ys:
         n += 1
@@ -180,6 +180,9 @@ def ols_kernel(core, ys) -> tuple:
 
 
 def drawdown_kernel(core, xs) -> tuple:
+    """Equity/peak/drawdown recurrence with O(1) state in integer cents:
+    eq = running sum, peak = running max(eq), dd = max(peak-eq).  First
+    value SEEDS the equity (same as the batch fold's init)."""
     eq, peak, dd, n = core
     for x in xs:
         if n == 0:
@@ -198,9 +201,17 @@ def drawdown_kernel(core, xs) -> tuple:
 
 def bollinger_kernel(core: list, uid, ts_list, eids, xs,
                      k_carry: int = BOLLINGER_K - 1):
-    """Rolling frame-sum kernel: ``core`` is the list of the k-1 most
-    recent values (oldest first).  Returns (new core, emitted rows) —
-    rows are (user_id, ts, event_id, n, sx_c, sxx_c4)."""
+    """Rolling k-row Bollinger frame sums with O(k) state — the
+    bounded-WINDOW case of the family (CUSUM/EWMA/OLS carry O(1)
+    scalars; a rows-frame statistic needs the k-1 most recent values to
+    retire the departing element, and nothing more — never the event
+    history).  ``core`` is the list of the k-1 most recent values
+    (oldest first).  Returns (new core, emitted rows) — ONE row per
+    event, (user_id, ts, event_id, n, sx_c, sxx_c4): the EXACT integer
+    frame sums (n, sum-cents, sum-cents²·1e-4) of the last k values in
+    (ts, event_id) order.  The mean/±2σ IEEE tree runs Spark-side
+    downstream, identical to ``operators/windows.bollinger_bands``, so
+    the drained series hash-matches the batch oracle row for row."""
     buf = list(core)
     rows = []
     run_sx = sum(buf)
@@ -221,9 +232,16 @@ def bollinger_kernel(core: list, uid, ts_list, eids, xs,
 
 def corr_kernel(core: tuple, uid, ts_list, eids, xs,
                 k_carry: int = BOLLINGER_K - 1):
-    """Rolling lag-1 Pearson kernel: ``core`` = (prev_x, buf of (x,
-    lag-x) pairs).  Returns (new core, rows) — rows are (user_id, ts,
-    event_id, n, sx_c, sy_c, sxy_c4, sxx_c4, syy_c4)."""
+    """Rolling lag-1 Pearson frame sums with O(k) state — the
+    two-series member of the bounded-window family: ``core`` = (prev_x,
+    buf of the k-1 most recent (x, lag-x) pairs); the lag crosses the
+    micro-batch boundary through ``prev_x``.  Returns (new core, rows)
+    — one row per event, (user_id, ts, event_id, n, sx_c, sy_c,
+    sxy_c4, sxx_c4, syy_c4): the exact integer frame sums over the
+    frame's lag-valid rows (the cents/cents² discipline of
+    ``operators/windows.rolling_corr``); the Pearson IEEE tree runs
+    Spark-side downstream.  Running sums retire the departing pair: O(1)
+    per event."""
     prev_x, buf = core
     buf = list(buf)
     rows = []
@@ -262,235 +280,207 @@ def corr_kernel(core: tuple, uid, ts_list, eids, xs,
     return (prev_x, buf), rows
 
 
-def _emit(state, values: tuple, columns: list[str]) -> pd.DataFrame:
-    """Update state and emit ONE row carrying it (per key per batch).
-    The drained final row per key is the one with max ``n`` — the same
-    final-state-row convention as the cart fold."""
-    state.update(values)
-    return pd.DataFrame([values], columns=columns, dtype=object)
+def _ts_back(t_ns: list) -> list:
+    """Epoch-nanosecond ints back to the timestamps a per-event row
+    carries (exact round-trip with pandas datetime64[ns])."""
+    return [pd.Timestamp(t) for t in t_ns]
 
 
-def _apply(stream, fold_fn, out_schema: str, state_key: str):
+def _keyed(core: tuple, uid) -> tuple:
+    """A per-key kernel's result as (core, rows): its one emitted row
+    is the state plus ``user_id``."""
+    return core, [(*core, uid)]
+
+
+def _pack_frame(buf: list) -> tuple:
+    """bollinger core -> state row: cnt + the k-1 most recent values,
+    oldest first, unused tail NULL."""
+    return (len(buf), *buf, *([None] * (BOLLINGER_K - 1 - len(buf))))
+
+
+def _unpack_frame(st) -> list:
+    return list(st[1:1 + st[0]])
+
+
+def _pack_pairs(core: tuple) -> tuple:
+    """corr core -> state row: cnt, the carried previous value, then the
+    k-1 most recent (x, lag-x) pairs flattened, unused tail NULL."""
+    prev_x, buf = core
+    flat = [v for pair in buf for v in pair]
+    return (len(buf), prev_x, *flat,
+            *([None] * (2 * (BOLLINGER_K - 1 - len(buf)))))
+
+
+def _unpack_pairs(st) -> tuple:
+    return st[1], [(st[2 + 2 * i], st[3 + 2 * i]) for i in range(st[0])]
+
+
+class FoldKind(NamedTuple):
+    """Everything the ordered and reorder-buffered paths know about one
+    fold kind."""
+
+    #: state DDL — the checkpoint format; fixed-width scalar longs ONLY
+    #: (the boundedness claim is structural and pytest-asserted)
+    state: str
+    #: input column the kernel folds, beside ts / event_id / user_id
+    value: str
+    #: (core, user_id, ts_ns, event_ids, values, kw) -> (core', rows),
+    #: values in (ts, event_id) order; rows are what a batch emits
+    kernel: Callable
+    #: the core before a key's first row
+    init: Any
+    #: per-event kinds: DDL of each emitted row; "" for per-key kinds,
+    #: whose one row per key per batch is the state plus ``user_id``
+    rows: str = ""
+    #: core -> state-row fields, and back
+    pack: Callable = tuple
+    unpack: Callable = tuple
+
+    @property
+    def output(self) -> str:
+        """DDL of the ordered fold's output rows."""
+        return self.rows or self.state + ", user_id BIGINT"
+
+    @property
+    def width(self) -> int:
+        """Number of state-row fields the core packs into."""
+        return len(self.state.split(", "))
+
+
+#: The fold kinds, in the order ``tools/fuzz_folds.py`` draws them.
+FOLD_KINDS = {
+    "cusum": FoldKind(
+        "anchor BIGINT, c BIGINT, m BIGINT, smax BIGINT, "
+        "n_over BIGINT, alarm BIGINT, n BIGINT",
+        "x",
+        lambda core, uid, t, e, v, kw: _keyed(
+            cusum_kernel(core, v, e, **kw), uid),
+        (0, 0, 0, 0, 0, None, 0),
+    ),
+    "ewma": FoldKind(
+        "ew BIGINT, n BIGINT", "x",
+        lambda core, uid, t, e, v, kw: _keyed(
+            ewma_kernel(core, v, **kw), uid),
+        (0, 0),
+    ),
+    "rsi": FoldKind(
+        "prev_y BIGINT, ag BIGINT, al BIGINT, n BIGINT", "y",
+        lambda core, uid, t, e, v, kw: _keyed(
+            rsi_kernel(core, v, **kw), uid),
+        (0, 0, 0, 0),
+    ),
+    "ols": FoldKind(
+        "n BIGINT, sy BIGINT, sxy BIGINT, syy BIGINT", "y",
+        lambda core, uid, t, e, v, kw: _keyed(
+            ols_kernel(core, v, **kw), uid),
+        (0, 0, 0, 0),
+    ),
+    "drawdown": FoldKind(
+        "eq BIGINT, peak BIGINT, dd BIGINT, n BIGINT", "x",
+        lambda core, uid, t, e, v, kw: _keyed(
+            drawdown_kernel(core, v, **kw), uid),
+        (0, 0, 0, 0),
+    ),
+    # O(k) rolling frame: cnt + the (k-1) most recent values, oldest
+    # first, unused tail NULL — still a fixed-width scalar-long struct
+    "bollinger": FoldKind(
+        "cnt BIGINT, " + ", ".join(
+            f"v{i} BIGINT" for i in range(BOLLINGER_K - 1)
+        ),
+        "x",
+        lambda core, uid, t, e, v, kw: bollinger_kernel(
+            core, uid, _ts_back(t), e, v, **kw),
+        (),
+        "user_id BIGINT, ts TIMESTAMP, event_id BIGINT, "
+        "n BIGINT, sx_c BIGINT, sxx_c4 BIGINT",
+        _pack_frame,
+        _unpack_frame,
+    ),
+    # O(k) rolling (x, lag-x) pairs + the carried previous value; y is
+    # NULL only for a key's very first row
+    "corr": FoldKind(
+        "cnt BIGINT, prev_x BIGINT, " + ", ".join(
+            f"x{i} BIGINT, y{i} BIGINT" for i in range(BOLLINGER_K - 1)
+        ),
+        "x",
+        lambda core, uid, t, e, v, kw: corr_kernel(
+            core, uid, _ts_back(t), e, v, **kw),
+        (None, ()),
+        "user_id BIGINT, ts TIMESTAMP, event_id BIGINT, n BIGINT, "
+        "sx_c BIGINT, sy_c BIGINT, sxy_c4 BIGINT, sxx_c4 BIGINT, "
+        "syy_c4 BIGINT",
+        _pack_pairs,
+        _unpack_pairs,
+    ),
+}
+
+STATE_SCHEMAS = {name: kind.state for name, kind in FOLD_KINDS.items()}
+
+
+def ddl_columns(ddl: str) -> list[str]:
+    """Field names of a flat DDL string."""
+    return [field.split(" ", 1)[0] for field in ddl.split(", ")]
+
+
+def apply_fold(stream, fold, output: str, state: str, delay: str):
+    """Key ``stream`` by user and run ``fold`` under a ``delay``
+    watermark: append mode, no timeout."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     return (
-        stream.withWatermark("ts", "0 seconds")
+        stream.withWatermark("ts", delay)
         .groupBy("user_id")
         .applyInPandasWithState(
-            fold_fn,
-            outputStructType=out_schema,
-            stateStructType=STATE_SCHEMAS[state_key],
+            fold,
+            outputStructType=output,
+            stateStructType=state,
             outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
 
 
-def cusum_fold_stream(stream, slack: int = 50, threshold: int = 2000):
-    """Page's one-sided CUSUM as an O(1)-state incremental fold.
-
-    State: (anchor, c, m, smax, n_over, alarm, n) — the sufficient
-    statistics of ``operators/analytics.cusum_drift``'s reflected-walk
-    form: c = cumsum(x - anchor - slack), m = min(0, running-min c),
-    statistic s = c - m.  The alarm id is the MIN alarming event_id
-    (order-free, same as the batch MIN(CASE...)).  Input rows carry
-    ``x`` = integer cents, computed Spark-side."""
-
-    def fold(key, pdfs, state):
-        uid = int(key[0])
-        core = tuple(state.get) if state.exists else CORE_INIT["cusum"]
-        xs, eids = _sorted_values(pdfs, ["x", "event_id"])
-        core = cusum_kernel(core, xs.tolist(), eids.tolist(),
-                            slack, threshold)
-        yield _emit(
-            state, core,
-            ["anchor", "c", "m", "smax", "n_over", "alarm", "n"],
-        ).assign(user_id=uid)
-
-    out_schema = (
-        "anchor BIGINT, c BIGINT, m BIGINT, smax BIGINT, n_over BIGINT, "
-        "alarm BIGINT, n BIGINT, user_id BIGINT"
-    )
-    return _apply(stream, fold, out_schema, "cusum")
-
-
-def ewma_fold_stream(stream, w_old: int = 7, w_new: int = 3,
-                     den: int = 10):
-    """EWMA (alpha = w_new/den; default 0.3 — the x7/x3 scaled-integer
-    dialect of ``operators/windows.ewma_exact``) as an O(1)-state fold.
-    The recurrence ``ew = trunc((ew*w_old + x*w_new) / den)`` matches
-    Spark's ``(y - y % den) / den`` truncate-toward-zero division for
-    any sign (the fuzz grammar exercises non-default weights)."""
+def fold_stream(stream, kind: str, **kw):
+    """The ordered, zero-buffer fold of ``kind`` over a (ts, event_id,
+    user_id, <value>) stream; ``kw`` are the kernel's parameters.  Each
+    batch sorts a key's rows in (ts, event_id) order, advances the
+    carried core over them and emits the kind's rows (see the module
+    docstring for the ordering contract)."""
+    k = FOLD_KINDS[kind]
+    cols = ddl_columns(k.output)
 
     def fold(key, pdfs, state):
         uid = int(key[0])
-        core = tuple(state.get) if state.exists else CORE_INIT["ewma"]
-        (xs,) = _sorted_values(pdfs, ["x"])
-        core = ewma_kernel(core, xs.tolist(), w_old, w_new, den)
-        yield _emit(state, core, ["ew", "n"]).assign(user_id=uid)
-
-    return _apply(stream, fold, "ew BIGINT, n BIGINT, user_id BIGINT", "ewma")
-
-
-def rsi_fold_stream(stream, period: int = 14):
-    """Wilder RSI smoothing as an O(1)-state fold: state carries the
-    previous value (to derive the diff across the batch boundary) and
-    the two Wilder accumulators (avg gain/loss, x1e6 scaled ints).
-    Seed = the FIRST gain/loss (the recursive-seed dialect of
-    ``operators/windows.rsi_wilder``); thereafter
-    ``acc = trunc((acc*(p-1) + v) / p)``."""
-
-    def fold(key, pdfs, state):
-        uid = int(key[0])
-        core = tuple(state.get) if state.exists else CORE_INIT["rsi"]
-        (ys,) = _sorted_values(pdfs, ["y"])
-        core = rsi_kernel(core, ys.tolist(), period)
-        yield _emit(
-            state, core, ["prev_y", "ag", "al", "n"]
-        ).assign(user_id=uid)
-
-    out_schema = "prev_y BIGINT, ag BIGINT, al BIGINT, n BIGINT, user_id BIGINT"
-    return _apply(stream, fold, out_schema, "rsi")
-
-
-def ols_fold_stream(stream):
-    """Per-key OLS over (index, y) as an O(1)-state fold: the FOUR
-    carried integer sums (n, sy, sxy, syy); sx/sxx come closed-form
-    from n downstream (``n(n+1)/2``, ``n(n+1)(2n+1)/6`` — exact
-    integer ``div``), exactly as the batch ``ols_trend``.  The time
-    index is the 1-based event-time position, so the carried ``n``
-    numbers the first row of each batch correctly."""
-
-    def fold(key, pdfs, state):
-        uid = int(key[0])
-        core = tuple(state.get) if state.exists else CORE_INIT["ols"]
-        (ys,) = _sorted_values(pdfs, ["y"])
-        core = ols_kernel(core, ys.tolist())
-        yield _emit(
-            state, core, ["n", "sy", "sxy", "syy"]
-        ).assign(user_id=uid)
-
-    out_schema = "n BIGINT, sy BIGINT, sxy BIGINT, syy BIGINT, user_id BIGINT"
-    return _apply(stream, fold, out_schema, "ols")
-
-
-def bollinger_fold_stream(stream, n_rows: int = BOLLINGER_K):
-    """Rolling ``n_rows``-row Bollinger frame sums as an O(k)-state fold
-    — the bounded-WINDOW case of the family (CUSUM/EWMA/OLS carry O(1)
-    scalars; a rows-frame statistic needs the k-1 most recent values to
-    retire the departing element, and nothing more — never the event
-    history).  Per row it emits the EXACT integer frame sums (n,
-    sum-cents, sum-cents²·1e-4) of the last ``n_rows`` values in
-    (ts, event_id) order; the mean/±2σ IEEE tree runs Spark-side
-    downstream, identical to ``operators/windows.bollinger_bands``, so
-    the drained series hash-matches the batch oracle row for row.
-
-    Output mode is append with ONE row per event (the rolling series,
-    not a per-key reduction), so no final-row selection applies."""
-    if n_rows != BOLLINGER_K:
-        raise ValueError(
-            f"state schema is fixed-width for k={BOLLINGER_K}; "
-            f"got n_rows={n_rows}"
-        )
-    k_carry = n_rows - 1
-
-    def fold(key, pdfs, state):
-        uid = int(key[0])
-        if state.exists:
-            st = state.get
-            cnt = st[0]
-            buf = [v for v in st[1:1 + cnt]]
-        else:
-            buf = []
+        core = k.unpack(state.get) if state.exists else k.init
         pdf = pd.concat(list(pdfs), ignore_index=True)
         pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort")
-        buf, rows = bollinger_kernel(
-            buf, uid, pdf["ts"].tolist(), pdf["event_id"].tolist(),
-            pdf["x"].tolist(), k_carry,
+        core, rows = k.kernel(
+            core, uid, pdf["ts"].astype("int64").tolist(),
+            pdf["event_id"].tolist(), pdf[k.value].tolist(), kw,
         )
-        state.update(
-            (len(buf), *buf, *([None] * (k_carry - len(buf))))
-        )
-        yield pd.DataFrame(
-            rows,
-            columns=["user_id", "ts", "event_id", "n", "sx_c", "sxx_c4"],
-            dtype=object,
-        )
+        state.update(k.pack(core))
+        yield pd.DataFrame(rows, columns=cols, dtype=object)
 
-    out_schema = (
-        "user_id BIGINT, ts TIMESTAMP, event_id BIGINT, "
-        "n BIGINT, sx_c BIGINT, sxx_c4 BIGINT"
+    return apply_fold(stream, fold, k.output, k.state, "0 seconds")
+
+
+def final_rows(out, kind: str, reordered: bool = False):
+    """A drained fold's final rows.  Per-key kinds: each key's max-``n``
+    row, its final state.  Per-event kinds emit each event once on the
+    ordered path; their reorder-buffered twin re-emits pending events,
+    and the max-``nb`` row per (user_id, event_id) is the event's exact
+    value."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    if not FOLD_KINDS[kind].rows:
+        w = Window.partitionBy("user_id").orderBy(F.desc("n"))
+    elif reordered:
+        w = Window.partitionBy("user_id", "event_id").orderBy(F.desc("nb"))
+    else:
+        return out
+    return (
+        out.withColumn("__rk", F.row_number().over(w))
+        .filter(F.col("__rk") == 1)
+        .drop("__rk", "nb")
     )
-    return _apply(stream, fold, out_schema, "bollinger")
-
-
-def corr_fold_stream(stream, n_rows: int = BOLLINGER_K):
-    """Rolling lag-1 Pearson frame sums as an O(k)-state fold — the
-    two-series member of the bounded-window family: state is the k-1
-    most recent (x, lag-x) pairs plus the carried previous value (the
-    lag crosses the micro-batch boundary through ``prev_x``).  Emits
-    each event's exact integer frame sums over the frame's lag-valid
-    rows (n, Sx, Sy, Sxy, Sxx, Syy — the cents/cents² discipline of
-    ``operators/windows.rolling_corr``); the Pearson IEEE tree runs
-    Spark-side downstream, so the drained series hash-matches the batch
-    oracle row for row.  Running sums retire the departing pair: O(1)
-    per event."""
-    if n_rows != BOLLINGER_K:
-        raise ValueError(
-            f"state schema is fixed-width for k={BOLLINGER_K}; "
-            f"got n_rows={n_rows}"
-        )
-    k_carry = n_rows - 1
-
-    def fold(key, pdfs, state):
-        uid = int(key[0])
-        if state.exists:
-            st = state.get
-            cnt, prev_x = st[0], st[1]
-            flat = st[2:2 + 2 * cnt]
-            buf = [(flat[2 * i], flat[2 * i + 1]) for i in range(cnt)]
-        else:
-            prev_x = None
-            buf = []
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort")
-        (prev_x, buf), rows = corr_kernel(
-            (prev_x, buf), uid, pdf["ts"].tolist(),
-            pdf["event_id"].tolist(), pdf["x"].tolist(), k_carry,
-        )
-        flat_out: list = []
-        for a, b in buf:
-            flat_out.extend((a, b))
-        flat_out.extend([None] * (2 * (k_carry - len(buf))))
-        state.update((len(buf), prev_x, *flat_out))
-        yield pd.DataFrame(
-            rows,
-            columns=["user_id", "ts", "event_id", "n",
-                     "sx_c", "sy_c", "sxy_c4", "sxx_c4", "syy_c4"],
-            dtype=object,
-        )
-
-    out_schema = (
-        "user_id BIGINT, ts TIMESTAMP, event_id BIGINT, n BIGINT, "
-        "sx_c BIGINT, sy_c BIGINT, sxy_c4 BIGINT, sxx_c4 BIGINT, "
-        "syy_c4 BIGINT"
-    )
-    return _apply(stream, fold, out_schema, "corr")
-
-
-def drawdown_fold_stream(stream):
-    """Equity/peak/drawdown recurrence as an O(1)-state fold in integer
-    cents: eq = running sum, peak = running max(eq), dd = max(peak-eq).
-    First value SEEDS the equity (same as the batch fold's init)."""
-
-    def fold(key, pdfs, state):
-        uid = int(key[0])
-        core = tuple(state.get) if state.exists else CORE_INIT["drawdown"]
-        (xs,) = _sorted_values(pdfs, ["x"])
-        core = drawdown_kernel(core, xs.tolist())
-        yield _emit(
-            state, core, ["eq", "peak", "dd", "n"]
-        ).assign(user_id=uid)
-
-    out_schema = "eq BIGINT, peak BIGINT, dd BIGINT, n BIGINT, user_id BIGINT"
-    return _apply(stream, fold, out_schema, "drawdown")

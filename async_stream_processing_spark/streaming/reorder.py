@@ -33,6 +33,14 @@ the still-pending ones, each tagged with a per-key emission sequence
 with the highest ``nb`` — an event's last emission is its exact value
 (its finalization batch, or the final batch if it never finalized).
 
+One table: every kind comes from ``streaming.folds.FOLD_KINDS``, so
+one :func:`reorder_step` and one :func:`reordered_fold_stream` serve
+all seven.  The state schema is DERIVED from the ordered fold's: its
+fixed-width core, then ``nb`` for the per-event kinds, then the
+pending-row parallel arrays (``_BUF_FIELDS``, bounded by the watermark
+horizon).  Output rows match the ordered fold's (plus ``nb`` for the
+per-event kinds), so the same oracles and ``folds.final_rows`` apply.
+
 Exactness: both paths call the SAME pure kernels as the ordered folds
 (``streaming/folds.py``), so the recurrences cannot drift; the
 differential tests replay time-shuffled batches through the reorder
@@ -45,70 +53,27 @@ from bisect import bisect_left
 
 import pandas as pd
 
-from .folds import (
-    BOLLINGER_K,
-    CORE_INIT,
-    bollinger_kernel,
-    corr_kernel,
-    cusum_kernel,
-    drawdown_kernel,
-    ewma_kernel,
-    ols_kernel,
-    rsi_kernel,
-)
+from .folds import FOLD_KINDS, apply_fold, ddl_columns
 
 __all__ = [
     "reordered_fold_stream",
-    "reordered_bollinger_stream",
-    "reordered_corr_stream",
     "REORDER_STATE_SCHEMAS",
 ]
 
 _BUF_FIELDS = "bt ARRAY<BIGINT>, be ARRAY<BIGINT>, bv ARRAY<BIGINT>"
 
-#: reorder-buffered state schemas: the ordered fold's fixed-width core
-#: plus the pending-row parallel arrays (bounded by the watermark
-#: horizon) — and, for the per-event family, the emission counter.
-REORDER_STATE_SCHEMAS = {
-    "cusum": (
-        "anchor BIGINT, c BIGINT, m BIGINT, smax BIGINT, "
-        "n_over BIGINT, alarm BIGINT, n BIGINT, " + _BUF_FIELDS
-    ),
-    "ewma": "ew BIGINT, n BIGINT, " + _BUF_FIELDS,
-    "rsi": "prev_y BIGINT, ag BIGINT, al BIGINT, n BIGINT, " + _BUF_FIELDS,
-    "ols": "n BIGINT, sy BIGINT, sxy BIGINT, syy BIGINT, " + _BUF_FIELDS,
-    "drawdown": "eq BIGINT, peak BIGINT, dd BIGINT, n BIGINT, "
-                + _BUF_FIELDS,
-    "bollinger": "cnt BIGINT, " + ", ".join(
-        f"v{i} BIGINT" for i in range(BOLLINGER_K - 1)
-    ) + ", nb BIGINT, " + _BUF_FIELDS,
-    "corr": "cnt BIGINT, prev_x BIGINT, " + ", ".join(
-        f"x{i} BIGINT, y{i} BIGINT" for i in range(BOLLINGER_K - 1)
-    ) + ", nb BIGINT, " + _BUF_FIELDS,
-}
 
-#: (kernel(core, ts_ns, eids, vals, kw) -> core, output columns, value col)
-_STATE_KINDS = {
-    "cusum": (
-        lambda core, t, e, v, kw: cusum_kernel(core, v, e, **kw),
-        ["anchor", "c", "m", "smax", "n_over", "alarm", "n"], "x",
-    ),
-    "ewma": (
-        lambda core, t, e, v, kw: ewma_kernel(core, v, **kw),
-        ["ew", "n"], "x",
-    ),
-    "rsi": (
-        lambda core, t, e, v, kw: rsi_kernel(core, v, **kw),
-        ["prev_y", "ag", "al", "n"], "y",
-    ),
-    "ols": (
-        lambda core, t, e, v, kw: ols_kernel(core, v),
-        ["n", "sy", "sxy", "syy"], "y",
-    ),
-    "drawdown": (
-        lambda core, t, e, v, kw: drawdown_kernel(core, v),
-        ["eq", "peak", "dd", "n"], "x",
-    ),
+def _nb(kind) -> str:
+    """The emission-counter field the per-event kinds add."""
+    return ", nb BIGINT" if kind.rows else ""
+
+
+#: reorder-buffered state schemas: the ordered fold's fixed-width core,
+#: the per-event kinds' emission counter, then the pending-row parallel
+#: arrays (bounded by the watermark horizon).
+REORDER_STATE_SCHEMAS = {
+    name: kind.state + _nb(kind) + ", " + _BUF_FIELDS
+    for name, kind in FOLD_KINDS.items()
 }
 
 
@@ -135,197 +100,59 @@ def _merge_pending(state_tail, pdf: pd.DataFrame, vcol: str):
     return bt, be, bv
 
 
-def reorder_step(kind: str, core, buf, pdf: pd.DataFrame, wm_ns: int,
-                 kw: dict):
-    """Pure reorder step for the state-emission folds — exposed for
-    Spark-free differential testing.  Returns (core', buf', emit_row):
-    finalized rows folded into core, speculative row = fold over
-    core' ⊕ pending."""
-    kernel, cols, vcol = _STATE_KINDS[kind]
-    bt, be, bv = _merge_pending(buf, pdf, vcol)
+def reorder_step(kind: str, core, nb, buf, pdf: pd.DataFrame,
+                 wm_ns: int, uid, kw: dict):
+    """Pure reorder step — exposed for Spark-free differential testing.
+    Merges the batch into the pending buffer, folds the rows older than
+    the watermark into ``core``, and returns (core', nb', buf', rows).
+    Per-key kinds emit one speculative row: the fold over core' ⊕
+    pending, plus ``user_id``.  Per-event kinds emit final rows for the
+    newly-finalized prefix plus speculative rows for the pending tail,
+    each tagged with the emission sequence ``nb'`` — the drained
+    consumer keeps max-``nb`` per event.  ``nb`` passes through
+    untouched for per-key kinds."""
+    k = FOLD_KINDS[kind]
+    bt, be, bv = _merge_pending(buf, pdf, k.value)
     cut = bisect_left(bt, wm_ns)
+    final: list = []
     if cut:
-        core = kernel(core, bt[:cut], be[:cut], bv[:cut], kw)
+        core, final = k.kernel(core, uid, bt[:cut], be[:cut], bv[:cut], kw)
         bt, be, bv = bt[cut:], be[cut:], bv[cut:]
-    spec = kernel(core, bt, be, bv, kw)
-    return core, (bt, be, bv), spec
+    _, rows = k.kernel(core, uid, bt, be, bv, kw)
+    if k.rows:
+        nb += 1
+        rows = [r + (nb,) for r in final + rows]
+    return core, nb, (bt, be, bv), rows
 
 
 def reordered_fold_stream(stream, kind: str, delay: str = "10 minutes",
                           **kw):
-    """Reorder-buffered twin of the O(1) state-emission folds
-    (``cusum`` / ``ewma`` / ``rsi`` / ``ols`` / ``drawdown``): exact for
-    any cross-batch arrival disorder within ``delay``.  Output schema
-    and the max-``n`` drained-final-row convention match the ordered
-    fold, so the same oracle applies."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    kernel, cols, vcol = _STATE_KINDS[kind]
-    init = CORE_INIT[kind]
-    width = len(init)
-
-    def fold(key, pdfs, state):
-        uid = int(key[0])
-        if state.exists:
-            st = state.get
-            core, tail = tuple(st[:width]), st[width:width + 3]
-        else:
-            core, tail = init, (None, None, None)
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        core, (bt, be, bv), spec = reorder_step(
-            kind, core, tail, pdf,
-            state.getCurrentWatermarkMs() * 1_000_000, kw,
-        )
-        state.update((*core, bt, be, bv))
-        yield pd.DataFrame(
-            [spec], columns=cols, dtype=object
-        ).assign(user_id=uid)
-
-    out_schema = ", ".join(
-        f"{c} BIGINT" for c in cols
-    ) + ", user_id BIGINT"
-    return (
-        stream.withWatermark("ts", delay)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fold,
-            outputStructType=out_schema,
-            stateStructType=REORDER_STATE_SCHEMAS[kind],
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def _ts_back(t_ns: list) -> list:
-    return [pd.Timestamp(t) for t in t_ns]
-
-
-def reorder_rows_step(kind: str, core, nb: int, buf, pdf: pd.DataFrame,
-                      wm_ns: int, uid: int):
-    """Pure reorder step for the per-event folds (``bollinger`` /
-    ``corr``).  Returns (core', nb', buf', rows): final rows for the
-    newly-finalized prefix + speculative rows for the pending tail,
-    each tagged with the emission sequence ``nb'`` — the drained
-    consumer keeps max-``nb`` per event."""
-    bt, be, bv = _merge_pending(buf, pdf, "x")
-    cut = bisect_left(bt, wm_ns)
-    if kind == "bollinger":
-        core, rows_final = bollinger_kernel(
-            core, uid, _ts_back(bt[:cut]), be[:cut], bv[:cut])
-        _, rows_spec = bollinger_kernel(
-            core, uid, _ts_back(bt[cut:]), be[cut:], bv[cut:])
-    elif kind == "corr":
-        core, rows_final = corr_kernel(
-            core, uid, _ts_back(bt[:cut]), be[:cut], bv[:cut])
-        _, rows_spec = corr_kernel(
-            core, uid, _ts_back(bt[cut:]), be[cut:], bv[cut:])
-    else:  # pragma: no cover - guarded by callers
-        raise ValueError(kind)
-    nb += 1
-    rows = [r + (nb,) for r in rows_final + rows_spec]
-    return core, nb, (bt[cut:], be[cut:], bv[cut:]), rows
-
-
-def reordered_bollinger_stream(stream, delay: str = "10 minutes"):
-    """Reorder-buffered twin of ``bollinger_fold_stream``.  Emits the
-    exact integer frame sums per event tagged with ``nb``; keep the
-    max-``nb`` row per (user_id, event_id) after draining."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    k_carry = BOLLINGER_K - 1
+    """Reorder-buffered twin of ``folds.fold_stream(stream, kind, **kw)``
+    for any of the seven kinds: exact for any cross-batch arrival
+    disorder within ``delay``.  Output rows are the ordered fold's, plus
+    ``nb`` for the per-event kinds; keep the final rows with
+    ``folds.final_rows(out, kind, reordered=True)``."""
+    k = FOLD_KINDS[kind]
+    width = k.width
+    output = k.output + _nb(k)
+    cols = ddl_columns(output)
 
     def fold(key, pdfs, state):
         uid = int(key[0])
         if state.exists:
             st = state.get
-            cnt = st[0]
-            core = [v for v in st[1:1 + cnt]]
-            nb = st[1 + k_carry]
-            tail = st[2 + k_carry:5 + k_carry]
+            core, buf = k.unpack(st[:width]), st[-3:]
+            nb = st[width] if k.rows else 0
         else:
-            core, nb, tail = [], 0, (None, None, None)
+            core, nb, buf = k.init, 0, (None, None, None)
         pdf = pd.concat(list(pdfs), ignore_index=True)
-        core, nb, (bt, be, bv), rows = reorder_rows_step(
-            "bollinger", core, nb, tail, pdf,
-            state.getCurrentWatermarkMs() * 1_000_000, uid,
+        core, nb, (bt, be, bv), rows = reorder_step(
+            kind, core, nb, buf, pdf,
+            state.getCurrentWatermarkMs() * 1_000_000, uid, kw,
         )
-        state.update((
-            len(core), *core, *([None] * (k_carry - len(core))),
-            nb, bt, be, bv,
-        ))
-        yield pd.DataFrame(
-            rows,
-            columns=["user_id", "ts", "event_id", "n", "sx_c", "sxx_c4",
-                     "nb"],
-            dtype=object,
-        )
+        state.update((*k.pack(core), *((nb,) if k.rows else ()),
+                      bt, be, bv))
+        yield pd.DataFrame(rows, columns=cols, dtype=object)
 
-    out_schema = (
-        "user_id BIGINT, ts TIMESTAMP, event_id BIGINT, "
-        "n BIGINT, sx_c BIGINT, sxx_c4 BIGINT, nb BIGINT"
-    )
-    return (
-        stream.withWatermark("ts", delay)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fold,
-            outputStructType=out_schema,
-            stateStructType=REORDER_STATE_SCHEMAS["bollinger"],
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def reordered_corr_stream(stream, delay: str = "10 minutes"):
-    """Reorder-buffered twin of ``corr_fold_stream`` (same drained
-    max-``nb`` convention as :func:`reordered_bollinger_stream`)."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    k_carry = BOLLINGER_K - 1
-
-    def fold(key, pdfs, state):
-        uid = int(key[0])
-        if state.exists:
-            st = state.get
-            cnt, prev_x = st[0], st[1]
-            flat = st[2:2 + 2 * cnt]
-            buf = [(flat[2 * i], flat[2 * i + 1]) for i in range(cnt)]
-            nb = st[2 + 2 * k_carry]
-            tail = st[3 + 2 * k_carry:6 + 2 * k_carry]
-        else:
-            prev_x, buf, nb, tail = None, [], 0, (None, None, None)
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        (prev_x, buf), nb, (bt, be, bv), rows = reorder_rows_step(
-            "corr", (prev_x, buf), nb, tail, pdf,
-            state.getCurrentWatermarkMs() * 1_000_000, uid,
-        )
-        flat_out: list = []
-        for a, b in buf:
-            flat_out.extend((a, b))
-        flat_out.extend([None] * (2 * (k_carry - len(buf))))
-        state.update((len(buf), prev_x, *flat_out, nb, bt, be, bv))
-        yield pd.DataFrame(
-            rows,
-            columns=["user_id", "ts", "event_id", "n",
-                     "sx_c", "sy_c", "sxy_c4", "sxx_c4", "syy_c4", "nb"],
-            dtype=object,
-        )
-
-    out_schema = (
-        "user_id BIGINT, ts TIMESTAMP, event_id BIGINT, n BIGINT, "
-        "sx_c BIGINT, sy_c BIGINT, sxy_c4 BIGINT, sxx_c4 BIGINT, "
-        "syy_c4 BIGINT, nb BIGINT"
-    )
-    return (
-        stream.withWatermark("ts", delay)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fold,
-            outputStructType=out_schema,
-            stateStructType=REORDER_STATE_SCHEMAS["corr"],
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    return apply_fold(stream, fold, output, REORDER_STATE_SCHEMAS[kind],
+                      delay)

@@ -20,7 +20,7 @@ from common import get_example_spark, show
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def main(spark):
+def _main(spark, tmp: str):
     from async_stream_processing_spark.llm.multimodal import (
         decode_audio_header,
         decode_image_header,
@@ -38,7 +38,7 @@ def main(spark):
     audio = decode_audio_header(synth_wav_payload(docs))
     show(audio, n=5, label="WAV headers parsed from raw bytes")
 
-    lake = tempfile.mkdtemp(prefix="media_lake_")
+    lake = tempfile.mkdtemp(prefix="media_lake_", dir=tmp)
     write_partitioned_lake(
         images, lake, partition_by=["format"], cluster_by=["width"],
     )
@@ -51,7 +51,12 @@ def main(spark):
         ),
         n=2, label="format-pruned lake readback",
     )
-    return pngs
+    return pngs.localCheckpoint()
+
+
+def main(spark):
+    with tempfile.TemporaryDirectory(prefix="e12_") as tmp:
+        return _main(spark, tmp)
 
 
 if __name__ == "__main__":

@@ -19,7 +19,7 @@ from common import get_example_spark, show
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def main(spark):
+def _main(spark, tmp: str):
     from async_stream_processing_spark.llm.dedup import (
         doc_shingle_hashes,
         jaccard_pairs_direct,
@@ -33,7 +33,7 @@ def main(spark):
     from async_stream_processing_spark.sources.parquet import load_table
 
     docs = load_table(spark, SF_DIR, "documents")
-    lake = tempfile.mkdtemp(prefix="asp_versioned_corpus_")
+    lake = tempfile.mkdtemp(prefix="asp_versioned_corpus_", dir=tmp)
 
     # v1: the initial crawl (say, the first 4/5 of the corpus)
     v1 = commit_append(docs.filter(F.col("doc_id") % 5 != 0), lake)
@@ -61,7 +61,12 @@ def main(spark):
           f"versions now {versions(lake)}")
     head_rows = read_version(spark, lake)
     assert head_rows.count() == docs.count()
-    return head_rows.select("doc_id").limit(5)
+    return head_rows.select("doc_id").limit(5).localCheckpoint()
+
+
+def main(spark):
+    with tempfile.TemporaryDirectory(prefix="e22_") as tmp:
+        return _main(spark, tmp)
 
 
 if __name__ == "__main__":

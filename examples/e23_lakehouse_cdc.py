@@ -21,7 +21,7 @@ from common import get_example_spark, show
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def main(spark):
+def _main(spark, tmp: str):
     from async_stream_processing_spark.plans.versioned import (
         commit_append,
         compact,
@@ -37,7 +37,7 @@ def main(spark):
     docs = load_table(spark, SF_DIR, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
-    lake = tempfile.mkdtemp(prefix="asp_lakehouse_cdc_")
+    lake = tempfile.mkdtemp(prefix="asp_lakehouse_cdc_", dir=tmp)
 
     # v1..v2: two stat-tracked appends (footer min/max in the manifest)
     n = docs.count()
@@ -83,7 +83,12 @@ def main(spark):
         (F.col("doc_id") % 9 == 0) & (F.col("doc_id") % 18 == 0)
     ).count()
     assert head.count() == n - deleted
-    return head.select("doc_id").limit(5)
+    return head.select("doc_id").limit(5).localCheckpoint()
+
+
+def main(spark):
+    with tempfile.TemporaryDirectory(prefix="e23_") as tmp:
+        return _main(spark, tmp)
 
 
 if __name__ == "__main__":

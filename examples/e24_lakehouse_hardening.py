@@ -27,7 +27,7 @@ from common import get_example_spark, show
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def main(spark):
+def _main(spark, tmp: str):
     from async_stream_processing_spark.llm.similarity import (
         hamming_recall,
         knn_hamming,
@@ -47,9 +47,9 @@ def main(spark):
     docs = load_table(spark, SF_DIR, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
-    lake = tempfile.mkdtemp(prefix="asp_lake_hardening_")
-    src = tempfile.mkdtemp(prefix="asp_lake_hardening_src_")
-    ck = tempfile.mkdtemp(prefix="asp_lake_hardening_ck_")
+    lake = tempfile.mkdtemp(prefix="asp_lake_hardening_", dir=tmp)
+    src = tempfile.mkdtemp(prefix="asp_lake_hardening_src_", dir=tmp)
+    ck = tempfile.mkdtemp(prefix="asp_lake_hardening_ck_", dir=tmp)
 
     # --- streaming ingest with the maintenance policy: 8 micro-batches,
     # compaction every 3 commits, history vacuumed to the last 3
@@ -128,6 +128,11 @@ def main(spark):
         "needle_rows": needle.count(),
         "mean_recall_at_5": recall_row.first()["mean_recall_at_5"],
     }
+
+
+def main(spark):
+    with tempfile.TemporaryDirectory(prefix="e24_") as tmp:
+        return _main(spark, tmp)
 
 
 if __name__ == "__main__":

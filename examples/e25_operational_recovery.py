@@ -34,7 +34,7 @@ from common import get_example_spark, show
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def main(spark):
+def _main(spark, tmp: str):
     from async_stream_processing_spark.plans.versioned import (
         commit_append,
         last_committed_batch_id,
@@ -55,7 +55,7 @@ def main(spark):
     )
 
     # --- 1. bad merge -> RESTORE -> good merge --------------------------
-    lake = tempfile.mkdtemp(prefix="asp_recovery_lake_")
+    lake = tempfile.mkdtemp(prefix="asp_recovery_lake_", dir=tmp)
     commit_append(docs, lake)
     bad = docs.select(
         "doc_id", F.lit("CORRUPTED").alias("text"),
@@ -81,8 +81,8 @@ def main(spark):
     )
 
     # --- 2. two streaming sinks, independent batch-id watermarks --------
-    src_a = tempfile.mkdtemp(prefix="asp_recovery_srcA_")
-    src_b = tempfile.mkdtemp(prefix="asp_recovery_srcB_")
+    src_a = tempfile.mkdtemp(prefix="asp_recovery_srcA_", dir=tmp)
+    src_b = tempfile.mkdtemp(prefix="asp_recovery_srcB_", dir=tmp)
     for p in range(3):
         docs.filter(F.col("doc_id") % 3 == p).coalesce(1) \
             .write.mode("append").parquet(src_a)
@@ -92,7 +92,7 @@ def main(spark):
         stream = spark.readStream.schema(
             spark.read.parquet(src).schema
         ).option("maxFilesPerTrigger", 1).parquet(src)
-        ck = tempfile.mkdtemp(prefix=f"asp_recovery_ck_{app}_")
+        ck = tempfile.mkdtemp(prefix=f"asp_recovery_ck_{app}_", dir=tmp)
         return versioned_sink(stream, lake, ck, txn_app_id=app)
 
     await_drain(sink(src_a, "ingest-a"), 120)
@@ -110,7 +110,7 @@ def main(spark):
 
     # --- 3. late data through a real watermark --------------------------
     ev = load_table(spark, SF_DIR, "events")
-    late_dir = tempfile.mkdtemp(prefix="asp_recovery_late_")
+    late_dir = tempfile.mkdtemp(prefix="asp_recovery_late_", dir=tmp)
     slices = [
         (ev.filter((F.col("event_id") % 10 != 7)
                    & (F.col("event_id") % 2 == 0)), 0),
@@ -180,6 +180,11 @@ def main(spark):
         "stream_cusum_rows": stream_cusum.count(),
         "mean_rerank_recall": recall.first()["mean_recall_at_5"],
     }
+
+
+def main(spark):
+    with tempfile.TemporaryDirectory(prefix="e25_") as tmp:
+        return _main(spark, tmp)
 
 
 if __name__ == "__main__":

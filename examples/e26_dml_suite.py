@@ -37,7 +37,7 @@ from common import get_example_spark, show
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def main(spark):
+def _main(spark, tmp: str):
     from async_stream_processing_spark.llm.sampling import epoch_shuffle
     from async_stream_processing_spark.operators.analytics import (
         grouping_sets_agg,
@@ -58,7 +58,7 @@ def main(spark):
     docs = load_table(spark, SF_DIR, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
-    lake = tempfile.mkdtemp(prefix="asp_dml_lake_")
+    lake = tempfile.mkdtemp(prefix="asp_dml_lake_", dir=tmp)
     commit_append(
         docs.repartitionByRange(8, "doc_id"), lake,
         stats_cols=["doc_id", "n_chars"],
@@ -122,8 +122,13 @@ def main(spark):
     )
     show(marginals.orderBy("grouping_id", "source", "lang").limit(8),
          label="per-source and per-lang marginals (one shuffle)")
-    return marginals
+    return marginals.localCheckpoint()
+
+
+def main(spark):
+    with tempfile.TemporaryDirectory(prefix="e26_") as tmp:
+        return _main(spark, tmp)
 
 
 if __name__ == "__main__":
-    main(get_example_spark("e26_dml_suite"))
+    main(get_example_spark())

@@ -23,7 +23,6 @@ import tempfile
 
 
 def main(spark):
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     sys.path.insert(0, ".")
@@ -37,8 +36,9 @@ def main(spark):
     )
     from async_stream_processing_spark.sources.parquet import load_table
     from async_stream_processing_spark.streaming.folds import (
-        CORE_INIT,
+        FOLD_KINDS,
         cusum_kernel,
+        final_rows,
     )
     from async_stream_processing_spark.streaming.reorder import (
         reordered_fold_stream,
@@ -55,11 +55,9 @@ def main(spark):
     )
     out = drain(reordered_fold_stream(s, "cusum", delay=_REORDER_DELAY),
                 output_mode="append")
-    w = Window.partitionBy("user_id").orderBy(F.desc("n"))
     finals = {
         r["user_id"]: (r["smax"], r["n_over"], r["n"])
-        for r in out.withColumn("rk", F.row_number().over(w))
-        .filter("rk = 1").collect()
+        for r in final_rows(out, "cusum").collect()
     }
     # batch truth straight through the shared kernel
     rows = load_table(spark, sf, "events").select(
@@ -71,7 +69,7 @@ def main(spark):
     for r in rows:
         per.setdefault(r["user_id"], []).append((r["x"], r["event_id"]))
     for uid, vs in per.items():
-        c = cusum_kernel(CORE_INIT["cusum"], [a for a, _ in vs],
+        c = cusum_kernel(FOLD_KINDS["cusum"].init, [a for a, _ in vs],
                          [b for _, b in vs])
         assert finals[uid] == (c[3], c[4], c[6]), uid
     print(f"out-of-order CUSUM exact for {len(per)} keys "

@@ -34,3 +34,21 @@ def test_value_mismatch_still_caught():
     s = pd.DataFrame({"n": pd.array([1, 2], dtype="int64")})
     o = pd.DataFrame({"n": pd.array([1, 3], dtype="int64")})
     assert compare("t", s, o)
+
+
+def test_unknown_query_name_fails_before_any_query_runs(
+        monkeypatch, capsys):
+    import async_stream_processing_spark as pkg
+    from tools import check_oracle
+
+    def no_session(*a, **kw):
+        raise AssertionError("a session started for an unknown name")
+
+    monkeypatch.setattr(pkg, "get_spark", no_session, raising=False)
+    monkeypatch.setattr(
+        "sys.argv", ["check_oracle.py", "/root/testdata/sf0.01",
+                     "stream_cusum", "stream_cusm"])
+    assert check_oracle.main() != 0
+    out = capsys.readouterr().out
+    assert "unknown query names: ['stream_cusm']" in out
+    assert "PASS" not in out

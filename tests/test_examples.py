@@ -4,7 +4,9 @@ examples are not CI-gated -- SURVEY §5 -- ours are)."""
 from __future__ import annotations
 
 import importlib
+import os
 import sys
+import tempfile
 from pathlib import Path
 
 import pytest
@@ -44,8 +46,21 @@ EXAMPLES = [
 sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "examples"))
 
 
+#: Temp entries that outlive one example by design and go at process
+#: exit: the replay fixtures ``__spark_entry__`` caches, each
+#: ``drain()``'s sink directory (its result is a lazy read of it), and
+#: the artifact directory and native libraries the JVM unpacks on first
+#: use.
+PROCESS_LIFETIME = ("asp_tsplit_", "asp_tshuf_", "asp_drain_",
+                    "artifacts-", "liblz4-java-", "snappy-")
+
+
 @pytest.mark.parametrize("name", EXAMPLES)
 def test_example_runs(spark, name):
+    before = set(os.listdir(tempfile.gettempdir()))
     mod = importlib.import_module(name)
     result = mod.main(spark)
     assert result is not None
+    left = {e for e in set(os.listdir(tempfile.gettempdir())) - before
+            if not e.startswith(PROCESS_LIFETIME)}
+    assert not left, f"{name} left temp entries: {sorted(left)}"

@@ -118,8 +118,8 @@ def test_stream_dedup_within_watermark(spark, tmp_path):
 
 
 def test_cart_stream_stateful_fold(spark, tmp_path):
-    """B7 live: transformWithStateInPandas keeps per-user FIFO cart state
-    across events; discount applies inside the 60 s window."""
+    """B7 live: the applyInPandasWithState fold keeps per-user FIFO cart
+    state across events; discount applies inside the 60 s window."""
     src = str(tmp_path / "src")
     rows = [
         (T0, 1, "click", 10.0, 2),                          # +2 @ 9.0 (disc)
@@ -561,6 +561,106 @@ def test_fold_state_schemas_are_fixed_width(spark):
             )
 
 
+_BUF = "bt ARRAY<BIGINT>, be ARRAY<BIGINT>, bv ARRAY<BIGINT>"
+_BOLLINGER_STATE = "cnt BIGINT, " + ", ".join(
+    f"v{i} BIGINT" for i in range(19))
+_CORR_STATE = "cnt BIGINT, prev_x BIGINT, " + ", ".join(
+    f"x{i} BIGINT, y{i} BIGINT" for i in range(19))
+_BOLLINGER_ROWS = ("user_id BIGINT, ts TIMESTAMP, event_id BIGINT, "
+                   "n BIGINT, sx_c BIGINT, sxx_c4 BIGINT")
+_CORR_ROWS = ("user_id BIGINT, ts TIMESTAMP, event_id BIGINT, n BIGINT, "
+              "sx_c BIGINT, sy_c BIGINT, sxy_c4 BIGINT, sxx_c4 BIGINT, "
+              "syy_c4 BIGINT")
+
+#: kind -> (ordered state, ordered output, reorder state, reorder
+#: output), as the per-kind wrappers wrote them before the fold table.
+#: The state DDL is the checkpoint format: it must stay byte-identical.
+FOLD_SCHEMAS = {
+    "cusum": (
+        "anchor BIGINT, c BIGINT, m BIGINT, smax BIGINT, "
+        "n_over BIGINT, alarm BIGINT, n BIGINT",
+        "anchor BIGINT, c BIGINT, m BIGINT, smax BIGINT, n_over BIGINT, "
+        "alarm BIGINT, n BIGINT, user_id BIGINT",
+        "anchor BIGINT, c BIGINT, m BIGINT, smax BIGINT, "
+        "n_over BIGINT, alarm BIGINT, n BIGINT, " + _BUF,
+        "anchor BIGINT, c BIGINT, m BIGINT, smax BIGINT, n_over BIGINT, "
+        "alarm BIGINT, n BIGINT, user_id BIGINT",
+    ),
+    "ewma": (
+        "ew BIGINT, n BIGINT",
+        "ew BIGINT, n BIGINT, user_id BIGINT",
+        "ew BIGINT, n BIGINT, " + _BUF,
+        "ew BIGINT, n BIGINT, user_id BIGINT",
+    ),
+    "rsi": (
+        "prev_y BIGINT, ag BIGINT, al BIGINT, n BIGINT",
+        "prev_y BIGINT, ag BIGINT, al BIGINT, n BIGINT, user_id BIGINT",
+        "prev_y BIGINT, ag BIGINT, al BIGINT, n BIGINT, " + _BUF,
+        "prev_y BIGINT, ag BIGINT, al BIGINT, n BIGINT, user_id BIGINT",
+    ),
+    "ols": (
+        "n BIGINT, sy BIGINT, sxy BIGINT, syy BIGINT",
+        "n BIGINT, sy BIGINT, sxy BIGINT, syy BIGINT, user_id BIGINT",
+        "n BIGINT, sy BIGINT, sxy BIGINT, syy BIGINT, " + _BUF,
+        "n BIGINT, sy BIGINT, sxy BIGINT, syy BIGINT, user_id BIGINT",
+    ),
+    "drawdown": (
+        "eq BIGINT, peak BIGINT, dd BIGINT, n BIGINT",
+        "eq BIGINT, peak BIGINT, dd BIGINT, n BIGINT, user_id BIGINT",
+        "eq BIGINT, peak BIGINT, dd BIGINT, n BIGINT, " + _BUF,
+        "eq BIGINT, peak BIGINT, dd BIGINT, n BIGINT, user_id BIGINT",
+    ),
+    "bollinger": (
+        _BOLLINGER_STATE,
+        _BOLLINGER_ROWS,
+        _BOLLINGER_STATE + ", nb BIGINT, " + _BUF,
+        _BOLLINGER_ROWS + ", nb BIGINT",
+    ),
+    "corr": (
+        _CORR_STATE,
+        _CORR_ROWS,
+        _CORR_STATE + ", nb BIGINT, " + _BUF,
+        _CORR_ROWS + ", nb BIGINT",
+    ),
+}
+
+
+def test_fold_schemas_pinned_on_both_paths(spark, tmp_path, monkeypatch):
+    """Every kind on both paths hands ``applyInPandasWithState`` the
+    pinned state DDL and output schema, and the folded stream has that
+    output schema."""
+    from pyspark.sql.group import GroupedData
+    from pyspark.sql.types import StructType
+
+    from async_stream_processing_spark.streaming.folds import (
+        FOLD_KINDS,
+        fold_stream,
+    )
+    from async_stream_processing_spark.streaming.reorder import (
+        reordered_fold_stream,
+    )
+
+    seen = []
+    real = GroupedData.applyInPandasWithState
+
+    def record(self, func, outputStructType, stateStructType, *a, **kw):
+        seen.append((stateStructType, outputStructType))
+        return real(self, func, outputStructType, stateStructType, *a, **kw)
+
+    monkeypatch.setattr(GroupedData, "applyInPandasWithState", record)
+    s = spark.readStream.schema(
+        "ts TIMESTAMP, event_id BIGINT, user_id BIGINT, x BIGINT, y BIGINT"
+    ).parquet(str(tmp_path))
+    assert list(FOLD_KINDS) == list(FOLD_SCHEMAS)
+    for kind, (state, out, r_state, r_out) in FOLD_SCHEMAS.items():
+        folded = fold_stream(s, kind)
+        assert seen.pop() == (state, out), kind
+        assert folded.schema == StructType.fromDDL(out), kind
+        folded = reordered_fold_stream(s, kind, delay="1 hour")
+        assert seen.pop() == (r_state, r_out), kind
+        assert folded.schema == StructType.fromDDL(r_out), kind
+
+
 def test_incremental_folds_carry_state_across_batches(spark):
     """The time-split replay really delivers MULTIPLE micro-batches per
     key (cross-batch state carry is exercised, not vacuous), and the
@@ -568,13 +668,10 @@ def test_incremental_folds_carry_state_across_batches(spark):
     import sys
 
     sys.path.insert(0, ".")
-    from __spark_entry__ import (
-        _drain_fold,
-        _stream_time_ordered,
-        q_cusum_drift,
-    )
+    from __spark_entry__ import _stream_time_ordered, q_cusum_drift
     from async_stream_processing_spark.streaming.folds import (
-        cusum_fold_stream,
+        final_rows,
+        fold_stream,
     )
     from pyspark.sql import functions as F
 
@@ -584,7 +681,7 @@ def test_incremental_folds_carry_state_across_batches(spark):
         (F.col("value").cast("decimal(18,2)") * 100)
         .cast("long").alias("x"),
     )
-    folded = cusum_fold_stream(s)
+    folded = fold_stream(s, "cusum")
     # drain WITHOUT the final-row filter: one emitted row per key per
     # batch in which the key had events -- >1 row per key proves the
     # fold consumed the key across multiple micro-batches
@@ -594,7 +691,9 @@ def test_incremental_folds_carry_state_across_batches(spark):
     per_key = raw.groupBy("user_id").count()
     assert per_key.agg(F.max("count")).first()[0] >= 2
 
-    finals = _drain_fold(spark, cusum_fold_stream(s)).select(
+    finals = final_rows(
+        drain(fold_stream(s, "cusum"), output_mode="append"), "cusum"
+    ).select(
         "user_id",
         F.col("smax").alias("max_cusum"),
         "n_over",
@@ -627,12 +726,12 @@ def _replay_reorder_state(kind, rows, batches, delay_ns, kw=None):
     < b minus delay (Spark's one-batch watermark lag)."""
     import pandas as pd
 
-    from async_stream_processing_spark.streaming.folds import CORE_INIT
+    from async_stream_processing_spark.streaming.folds import FOLD_KINDS
     from async_stream_processing_spark.streaming.reorder import (
         reorder_step,
     )
 
-    core = CORE_INIT[kind]
+    core = FOLD_KINDS[kind].init
     buf = (None, None, None)
     wm_ns, seen_max = 0, 0
     spec = None
@@ -643,8 +742,9 @@ def _replay_reorder_state(kind, rows, batches, delay_ns, kw=None):
              "x": [rows[i][2] for i in batch],
              "y": [rows[i][2] for i in batch]},
         )
-        core, (bt, be, bv), spec = reorder_step(
-            kind, core, buf, pdf, wm_ns, kw or {})
+        core, _, (bt, be, bv), emitted = reorder_step(
+            kind, core, 0, buf, pdf, wm_ns, 0, kw or {})
+        spec = emitted[0][:-1]  # the speculative state, without user_id
         buf = (bt, be, bv)
         # boundedness: every pending row sits inside the horizon
         assert all(t >= wm_ns for t in bt)
@@ -661,7 +761,7 @@ def test_reorder_step_differential_all_state_kinds():
     import random
 
     from async_stream_processing_spark.streaming.folds import (
-        CORE_INIT,
+        FOLD_KINDS,
         cusum_kernel,
         drawdown_kernel,
         ewma_kernel,
@@ -669,13 +769,13 @@ def test_reorder_step_differential_all_state_kinds():
         rsi_kernel,
     )
 
+    init = {name: k.init for name, k in FOLD_KINDS.items()}
     direct = {
-        "cusum": lambda t, e, v: cusum_kernel(CORE_INIT["cusum"], v, e),
-        "ewma": lambda t, e, v: ewma_kernel(CORE_INIT["ewma"], v),
-        "rsi": lambda t, e, v: rsi_kernel(CORE_INIT["rsi"], v),
-        "ols": lambda t, e, v: ols_kernel(CORE_INIT["ols"], v),
-        "drawdown": lambda t, e, v: drawdown_kernel(
-            CORE_INIT["drawdown"], v),
+        "cusum": lambda t, e, v: cusum_kernel(init["cusum"], v, e),
+        "ewma": lambda t, e, v: ewma_kernel(init["ewma"], v),
+        "rsi": lambda t, e, v: rsi_kernel(init["rsi"], v),
+        "ols": lambda t, e, v: ols_kernel(init["ols"], v),
+        "drawdown": lambda t, e, v: drawdown_kernel(init["drawdown"], v),
     }
     rng = random.Random(20260816)
     for trial in range(4):
@@ -717,7 +817,7 @@ def test_reorder_rows_step_differential():
         corr_kernel,
     )
     from async_stream_processing_spark.streaming.reorder import (
-        reorder_rows_step,
+        reorder_step,
     )
 
     rng = random.Random(20260817)
@@ -744,8 +844,8 @@ def test_reorder_rows_step_differential():
                  "event_id": [rows[i][1] for i in batch],
                  "x": [rows[i][2] for i in batch]},
             )
-            core, nb, buf, emitted = reorder_rows_step(
-                kind, core, nb, buf, pdf, wm_ns, uid=7)
+            core, nb, buf, emitted = reorder_step(
+                kind, core, nb, buf, pdf, wm_ns, 7, {})
             assert all(t >= wm_ns for t in buf[0])
             for r in emitted:
                 eid = r[2]
@@ -813,7 +913,7 @@ def test_reordered_corr_stream_matches_batch_kernel(spark):
     from async_stream_processing_spark.sources.parquet import load_table
     from async_stream_processing_spark.streaming.folds import corr_kernel
     from async_stream_processing_spark.streaming.reorder import (
-        reordered_corr_stream,
+        reordered_fold_stream,
     )
     from async_stream_processing_spark.streaming.replay import drain
 
@@ -823,7 +923,7 @@ def test_reordered_corr_stream_matches_batch_kernel(spark):
         (F.col("value").cast("decimal(18,2)") * 100)
         .cast("long").alias("x"),
     )
-    out = drain(reordered_corr_stream(s, delay=_REORDER_DELAY),
+    out = drain(reordered_fold_stream(s, "corr", delay=_REORDER_DELAY),
                 output_mode="append")
     w = Window.partitionBy("user_id", "event_id").orderBy(F.desc("nb"))
     finals = out.withColumn("rk", F.row_number().over(w)) \
@@ -866,7 +966,7 @@ def test_reorder_buffer_hot_key_state_bounded():
     import pandas as pd
 
     from async_stream_processing_spark.streaming.folds import (
-        CORE_INIT,
+        FOLD_KINDS,
         cusum_kernel,
     )
     from async_stream_processing_spark.streaming.reorder import (
@@ -893,7 +993,8 @@ def test_reorder_buffer_hot_key_state_bounded():
                       key=lambda i: -rows[i][0])
                for b in range(n_batches)]
 
-    core, buf = CORE_INIT["cusum"], (None, None, None)
+    init = FOLD_KINDS["cusum"].init
+    core, buf = init, (None, None, None)
     wm_ns, seen_max, spec = 0, 0, None
     horizon_rows = delay_ns // step_ns + 1
     for batch in batches:
@@ -902,8 +1003,9 @@ def test_reorder_buffer_hot_key_state_bounded():
              "event_id": [rows[i][1] for i in batch],
              "x": [rows[i][2] for i in batch]},
         )
-        core, (bt, be, bv), spec = reorder_step(
-            "cusum", core, buf, pdf, wm_ns, {})
+        core, _, (bt, be, bv), emitted = reorder_step(
+            "cusum", core, 0, buf, pdf, wm_ns, 0, {})
+        spec = emitted[0][:-1]
         buf = (bt, be, bv)
         # O(horizon) bound: pending <= rows inside the horizon + the
         # batch that has not yet seen its own watermark advance
@@ -913,7 +1015,7 @@ def test_reorder_buffer_hot_key_state_bounded():
         seen_max = max([seen_max] + [rows[i][0] for i in batch])
         wm_ns = max(wm_ns, seen_max - delay_ns)
     srt = sorted(range(n), key=lambda i: (rows[i][0], rows[i][1]))
-    want = cusum_kernel(CORE_INIT["cusum"],
+    want = cusum_kernel(init,
                         [rows[i][2] for i in srt],
                         [rows[i][1] for i in srt])
     assert tuple(spec) == tuple(want)

@@ -109,6 +109,15 @@ def main() -> int:
     only = set(sys.argv[2:])
 
     import __spark_entry__ as entrymod
+
+    registry = entrymod.queries()
+    unknown = sorted(only - set(registry))
+    if unknown:
+        print(f"FAIL unknown query names: {unknown}")
+        return 2
+    queries = {n: fn for n, fn in registry.items() if not only or n in only}
+    oracles = entrymod.oracle_sql()
+
     from async_stream_processing_spark import get_spark
 
     spark = get_spark("oracle-check")
@@ -116,12 +125,8 @@ def main() -> int:
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
-    queries = entrymod.queries()
-    oracles = entrymod.oracle_sql()
     failures = 0
     for name, fn in queries.items():
-        if only and name not in only:
-            continue
         t0 = time.time()
         try:
             spark_pdf = fn(spark, sf_dir).toPandas()
@@ -145,7 +150,7 @@ def main() -> int:
             print(f"FAIL {name}: " + "; ".join(errs))
         else:
             print(f"ok   {name}: rows={len(spark_pdf)} exact-match [{time.time()-t0:.1f}s]")
-    extra = set(oracles) - set(queries)
+    extra = set(oracles) - set(registry)
     if extra:
         failures += 1
         print(f"FAIL oracle_sql has keys missing from queries(): {sorted(extra)}")

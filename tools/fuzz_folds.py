@@ -35,6 +35,10 @@ sys.path.insert(0, ".")
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from async_stream_processing_spark.streaming.folds import (  # noqa: E402
+    BOLLINGER_K,
+)
+
 CENTS = "CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)"
 
 
@@ -234,31 +238,6 @@ def _batch_drawdown(df):
     )
 
 
-def _max_nb(out):
-    """Per-(user, event) row with the highest emission sequence -- the
-    reorder twins' drained-final-row convention."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id", "event_id").orderBy(F.desc("nb"))
-    return (
-        out.withColumn("__rk", F.row_number().over(w))
-        .filter(F.col("__rk") == 1).drop("__rk", "nb")
-    )
-
-
-def _finals(spark, folded_stream, n_col: str = "n"):
-    from pyspark.sql import Window
-
-    from async_stream_processing_spark.streaming.replay import drain
-
-    out = drain(folded_stream, output_mode="append")
-    w = Window.partitionBy("user_id").orderBy(F.desc(n_col))
-    return (
-        out.withColumn("__rk", F.row_number().over(w))
-        .filter(F.col("__rk") == 1).drop("__rk")
-    )
-
-
 PREDS = [
     ("all", "true"),
     ("low_value", "value < 80"),
@@ -269,32 +248,61 @@ PREDS = [
 ]
 
 
+def _case(kind: str, rng: random.Random, df):
+    """Draw ``kind``'s kernel parameters; return (kernel kw, label,
+    batch oracle, projection of the drained final rows onto it)."""
+    if kind == "cusum":
+        slack = rng.choice([0, 10, 50, 200])
+        th = rng.choice([500, 1000, 2000, 5000])
+        return ({"slack": slack, "threshold": th},
+                f"cusum(slack={slack},th={th})",
+                _batch_cusum(df, slack, th),
+                lambda g: g.select("user_id", "smax", "n_over", "alarm", "n"))
+    if kind == "ewma":
+        w_old, w_new, den = rng.choice(
+            [(7, 3, 10), (9, 1, 10), (1, 1, 2), (3, 1, 4)])
+        return ({"w_old": w_old, "w_new": w_new, "den": den},
+                f"ewma({w_old},{w_new},{den})",
+                _batch_ewma(df, w_old, w_new, den),
+                lambda g: g.select("user_id", "ew", "n"))
+    if kind == "rsi":
+        period = rng.choice([3, 7, 14, 21])
+        return ({"period": period}, f"rsi(period={period})",
+                _batch_rsi(df, period).select(
+                    "user_id", "n_diffs", "ag", "al"),
+                lambda g: g.filter(F.col("n") >= 2).select(
+                    "user_id", (F.col("n") - 1).alias("n_diffs"),
+                    "ag", "al"))
+    if kind == "ols":
+        return ({}, "ols", _batch_ols(df),
+                lambda g: g.select("user_id", "n", "sy", "sxy", "syy"))
+    if kind == "drawdown":
+        return ({}, "drawdown", _batch_drawdown(df),
+                lambda g: g.select("user_id", "eq", "peak", "dd", "n"))
+    # per-ROW series: compare the whole rolling output
+    sums = (["n", "sx_c", "sxx_c4"] if kind == "bollinger" else
+            ["n", "sx_c", "sy_c", "sxy_c4", "sxx_c4", "syy_c4"])
+    batch = _batch_bollinger if kind == "bollinger" else _batch_corr
+    return ({}, f"{kind}(k={BOLLINGER_K})",
+            batch(df, BOLLINGER_K).select("user_id", "event_id", *sums),
+            lambda g: g.select("user_id", "event_id", *sums))
+
+
 def run_case(spark, rng: random.Random, sf_dir: str) -> str:
     from async_stream_processing_spark.sources.parquet import load_table
     from async_stream_processing_spark.streaming.folds import (
-        cusum_fold_stream,
-        drawdown_fold_stream,
-        ewma_fold_stream,
-        ols_fold_stream,
-        rsi_fold_stream,
+        FOLD_KINDS,
+        final_rows,
+        fold_stream,
     )
-
-    from async_stream_processing_spark.streaming.folds import (
-        BOLLINGER_K,
-        bollinger_fold_stream,
-        corr_fold_stream,
-    )
-
     from async_stream_processing_spark.streaming.reorder import (
-        reordered_bollinger_stream,
-        reordered_corr_stream,
         reordered_fold_stream,
     )
+    from async_stream_processing_spark.streaming.replay import drain
 
     pred_name, pred = rng.choice(PREDS)
     n_parts = rng.choice([2, 3, 4])
-    kind = rng.choice(["cusum", "ewma", "rsi", "ols", "drawdown",
-                       "bollinger", "corr"])
+    kind = rng.choice(list(FOLD_KINDS))
     # delivery shape: ordered replay drives the zero-buffer folds;
     # jittered replay (±2 h, < half the 5 h watermark delay) drives the
     # reorder-buffered twins -- SAME batch oracles for both
@@ -308,95 +316,15 @@ def run_case(spark, rng: random.Random, sf_dir: str) -> str:
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1).parquet(d)
         )
-        base = src.select(
-            "ts", "event_id", "user_id", F.expr(CENTS).alias("x"),
-            F.expr(CENTS).alias("y"),
-        )
-
-        def state_fold(cols, ordered_fn, okind, **kw):
-            s = base.select(*cols)
-            if shuffled:
-                return reordered_fold_stream(s, okind, delay=delay, **kw)
-            return ordered_fn(s, **kw)
-        if kind == "cusum":
-            slack = rng.choice([0, 10, 50, 200])
-            th = rng.choice([500, 1000, 2000, 5000])
-            got = _finals(spark, state_fold(
-                ["ts", "event_id", "user_id", "x"], cusum_fold_stream,
-                "cusum", slack=slack, threshold=th,
-            )).select("user_id", "smax", "n_over", "alarm", "n")
-            want = _batch_cusum(df, slack, th)
-            label = f"cusum(slack={slack},th={th})"
-        elif kind == "ewma":
-            w_old, w_new, den = rng.choice(
-                [(7, 3, 10), (9, 1, 10), (1, 1, 2), (3, 1, 4)])
-            got = _finals(spark, state_fold(
-                ["ts", "event_id", "user_id", "x"], ewma_fold_stream,
-                "ewma", w_old=w_old, w_new=w_new, den=den,
-            )).select("user_id", "ew", "n")
-            want = _batch_ewma(df, w_old, w_new, den)
-            label = f"ewma({w_old},{w_new},{den})"
-        elif kind == "rsi":
-            period = rng.choice([3, 7, 14, 21])
-            got = _finals(spark, state_fold(
-                ["ts", "event_id", "user_id", "y"], rsi_fold_stream,
-                "rsi", period=period,
-            )).filter(F.col("n") >= 2).select(
-                "user_id", (F.col("n") - 1).alias("n_diffs"), "ag", "al")
-            want = _batch_rsi(df, period).select(
-                "user_id", "n_diffs", "ag", "al")
-            label = f"rsi(period={period})"
-        elif kind == "ols":
-            got = _finals(spark, state_fold(
-                ["ts", "event_id", "user_id", "y"], ols_fold_stream,
-                "ols",
-            )).select("user_id", "n", "sy", "sxy", "syy")
-            want = _batch_ols(df)
-            label = "ols"
-        elif kind == "bollinger":
-            # per-ROW series (append mode emits each row once): compare
-            # the whole rolling output, no final-row selection
-            from async_stream_processing_spark.streaming.replay import drain
-
-            s = base.select("ts", "event_id", "user_id", "x")
-            if shuffled:
-                raw = drain(reordered_bollinger_stream(s, delay=delay),
-                            output_mode="append")
-                got = _max_nb(raw).select(
-                    "user_id", "event_id", "n", "sx_c", "sxx_c4")
-            else:
-                got = drain(
-                    bollinger_fold_stream(s), output_mode="append",
-                ).select("user_id", "event_id", "n", "sx_c", "sxx_c4")
-            want = _batch_bollinger(df, BOLLINGER_K).select(
-                "user_id", "event_id", "n", "sx_c", "sxx_c4")
-            label = f"bollinger(k={BOLLINGER_K})"
-        elif kind == "corr":
-            from async_stream_processing_spark.streaming.replay import drain
-
-            s = base.select("ts", "event_id", "user_id", "x")
-            if shuffled:
-                raw = drain(reordered_corr_stream(s, delay=delay),
-                            output_mode="append")
-                got = _max_nb(raw).select(
-                    "user_id", "event_id", "n", "sx_c", "sy_c",
-                    "sxy_c4", "sxx_c4", "syy_c4")
-            else:
-                got = drain(
-                    corr_fold_stream(s), output_mode="append",
-                ).select("user_id", "event_id", "n", "sx_c", "sy_c",
-                         "sxy_c4", "sxx_c4", "syy_c4")
-            want = _batch_corr(df, BOLLINGER_K).select(
-                "user_id", "event_id", "n", "sx_c", "sy_c",
-                "sxy_c4", "sxx_c4", "syy_c4")
-            label = f"corr(k={BOLLINGER_K})"
+        kw, label, want, project = _case(kind, rng, df)
+        s = src.select("ts", "event_id", "user_id",
+                       F.expr(CENTS).alias(FOLD_KINDS[kind].value))
+        if shuffled:
+            folded = reordered_fold_stream(s, kind, delay=delay, **kw)
         else:
-            got = _finals(spark, state_fold(
-                ["ts", "event_id", "user_id", "x"], drawdown_fold_stream,
-                "drawdown",
-            )).select("user_id", "eq", "peak", "dd", "n")
-            want = _batch_drawdown(df)
-            label = "drawdown"
+            folded = fold_stream(s, kind, **kw)
+        got = project(final_rows(drain(folded, output_mode="append"),
+                                 kind, reordered=shuffled))
         g = {tuple(r) for r in got.collect()}
         w = {tuple(r) for r in want.collect()}
         assert g == w, (
