@@ -13,9 +13,13 @@ the reference wires multiple iterables into one run (processor.py:197-206).
 
 from __future__ import annotations
 
+import atexit
+import os
+import shutil
+import tempfile
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from async_stream_processing_spark.operators.dedup import demux_summary, first_seen
@@ -34,6 +38,8 @@ from async_stream_processing_spark.sources.parquet import load_table
 from async_stream_processing_spark.sources.synthetic import timer_ticks
 from async_stream_processing_spark.streaming.replay import (
     await_drain,
+    land_batches,
+    replay_stream,
     shuffle_guard,
 )
 
@@ -854,8 +860,29 @@ def q_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cusum_drift(load_table(spark, sf_dir, "events"))
 
 
-#: Session cache of time-split replay dirs: (sf_dir, n_parts) -> tmpdir.
-_SPLIT_DIRS: dict = {}
+#: Landed replay fixtures, one per key per process: key -> directory.
+_LANDED_DIRS: dict = {}
+
+
+def _landed_dir(key: tuple, prefix: str, n: int,
+                bucketed: Callable[[], DataFrame]) -> str:
+    """The fixture ``bucketed()`` (rows tagged with an int ``__b`` in
+    ``[0, n)``) landed by ``land_batches`` as ``n`` ordered files under
+    a ``prefix`` temp directory.  Landed once per ``key`` per process
+    and shared by every query that replays it; removed at exit."""
+    d = _LANDED_DIRS.get(key)
+    if not (d and os.path.isdir(d)):
+        d = tempfile.mkdtemp(prefix=prefix)
+        atexit.register(shutil.rmtree, d, ignore_errors=True)
+        _LANDED_DIRS[key] = land_batches(bucketed(), "__b", n, d)
+    return d
+
+
+def _replay_landed(spark: SparkSession, d: str) -> DataFrame:
+    """Streaming DataFrame over a landed fixture: one micro-batch per
+    file, in landing order."""
+    return replay_stream(spark, d, spark.read.parquet(d).schema,
+                         max_files_per_trigger=1)
 
 
 def _events_time_split_dir(spark: SparkSession, sf_dir: str,
@@ -870,54 +897,22 @@ def _events_time_split_dir(spark: SparkSession, sf_dir: str,
     n_parts) per session and shared by the five fold queries; the
     global NTILE sort is fixture plumbing only — at 100 TB ingest
     already lands time-partitioned files and this step does not exist."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
     from pyspark.sql import Window
 
-    key = (sf_dir, n_parts)
-    d = _SPLIT_DIRS.get(key)
-    if d and os.path.isdir(d):
-        return d
-    ev = load_table(spark, sf_dir, "events")
-    parts = ev.withColumn(
-        "__b", F.ntile(n_parts).over(Window.orderBy("ts", "event_id")) - 1
+    return _landed_dir(
+        (sf_dir, n_parts), "asp_tsplit_", n_parts,
+        lambda: load_table(spark, sf_dir, "events").withColumn(
+            "__b",
+            F.ntile(n_parts).over(Window.orderBy("ts", "event_id")) - 1,
+        ),
     )
-    d = tempfile.mkdtemp(prefix="asp_tsplit_")
-    atexit.register(shutil.rmtree, d, ignore_errors=True)
-    # ONE write job for all slices (hive-partitioned by bucket), then the
-    # part files are renamed into flat oldest-first order
-    sub = os.path.join(d, "__by_bucket")
-    parts.repartition(n_parts, "__b").write.partitionBy("__b") \
-        .mode("overwrite").parquet(sub)
-    for i in range(n_parts):
-        bdir = os.path.join(sub, f"__b={i}")
-        part = next(
-            f for f in os.listdir(bdir)
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        )
-        dst = os.path.join(d, f"events_{i:03d}.parquet")
-        os.replace(os.path.join(bdir, part), dst)
-        # distinct ascending mtimes pin the file source's oldest-first order
-        os.utime(dst, (1_600_000_000 + i * 10, 1_600_000_000 + i * 10))
-    shutil.rmtree(sub)
-    _SPLIT_DIRS[key] = d
-    return d
 
 
 def _stream_time_ordered(spark: SparkSession, sf_dir: str,
                          n_parts: int = 2) -> DataFrame:
     """Streaming DataFrame over the time-split replay: one micro-batch
     per time-range file, batches arriving in event-time order."""
-    d = _events_time_split_dir(spark, sf_dir, n_parts)
-    schema = spark.read.parquet(d).schema
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
-    )
+    return _replay_landed(spark, _events_time_split_dir(spark, sf_dir, n_parts))
 
 
 def _events_time_shuffled_dir(spark: SparkSession, sf_dir: str,
@@ -933,41 +928,20 @@ def _events_time_shuffled_dir(spark: SparkSession, sf_dir: str,
     (``streaming/reorder.py``): disorder ≤ 2x jitter < the watermark
     delay, so nothing is ever late-dropped and the fold must still
     hash-match the batch oracle."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
     from pyspark.sql import Window
 
-    key = (sf_dir, n_parts, "shuffled", jitter_s)
-    d = _SPLIT_DIRS.get(key)
-    if d and os.path.isdir(d):
-        return d
-    ev = load_table(spark, sf_dir, "events")
-    j_us = jitter_s * 1_000_000
-    jit = F.pmod(F.xxhash64("event_id"), F.lit(2 * j_us + 1)) - F.lit(j_us)
-    parts = ev.withColumn("__jk", F.unix_micros("ts") + jit).withColumn(
-        "__b",
-        F.ntile(n_parts).over(Window.orderBy("__jk", "event_id")) - 1,
-    ).drop("__jk")
-    d = tempfile.mkdtemp(prefix="asp_tshuf_")
-    atexit.register(shutil.rmtree, d, ignore_errors=True)
-    sub = os.path.join(d, "__by_bucket")
-    parts.repartition(n_parts, "__b").write.partitionBy("__b") \
-        .mode("overwrite").parquet(sub)
-    for i in range(n_parts):
-        bdir = os.path.join(sub, f"__b={i}")
-        part = next(
-            f for f in os.listdir(bdir)
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        )
-        dst = os.path.join(d, f"events_{i:03d}.parquet")
-        os.replace(os.path.join(bdir, part), dst)
-        os.utime(dst, (1_600_000_000 + i * 10, 1_600_000_000 + i * 10))
-    shutil.rmtree(sub)
-    _SPLIT_DIRS[key] = d
-    return d
+    def bucketed() -> DataFrame:
+        j_us = jitter_s * 1_000_000
+        jit = F.pmod(F.xxhash64("event_id"), F.lit(2 * j_us + 1)) - F.lit(j_us)
+        return load_table(spark, sf_dir, "events").withColumn(
+            "__jk", F.unix_micros("ts") + jit
+        ).withColumn(
+            "__b",
+            F.ntile(n_parts).over(Window.orderBy("__jk", "event_id")) - 1,
+        ).drop("__jk")
+
+    return _landed_dir((sf_dir, n_parts, "shuffled", jitter_s),
+                       "asp_tshuf_", n_parts, bucketed)
 
 
 #: watermark delay for the reorder-buffered fold queries: must exceed
@@ -979,13 +953,7 @@ def _stream_time_shuffled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming DataFrame over the time-SHUFFLED replay: one
     micro-batch per file, rows interleaving out of event-time order
     across batches within the jitter horizon."""
-    d = _events_time_shuffled_dir(spark, sf_dir)
-    schema = spark.read.parquet(d).schema
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
-    )
+    return _replay_landed(spark, _events_time_shuffled_dir(spark, sf_dir))
 
 
 def _fold_input(stream: DataFrame, kind: str, scale: int = 1) -> DataFrame:
@@ -1929,8 +1897,6 @@ def _stream_outer_join(
     when stats are absent; the one-row sentinel file is written
     driver-side via pyarrow (a Spark write job for one row costs ~0.5 s
     of scheduler round-trips per query)."""
-    import shutil
-    import tempfile
     from datetime import timedelta
 
     from async_stream_processing_spark.sources.parquet import stream_table
@@ -1940,57 +1906,53 @@ def _stream_outer_join(
     max_ts = _parquet_footer_max_ts(f"{sf_dir}/events.parquet", "ts")
     if max_ts is None:
         max_ts = load_table(spark, sf_dir, "events").select(F.max("ts")).first()[0]
-    sent_dir = tempfile.mkdtemp(prefix="asp_sentinel_")
-    _write_sentinel_row(
-        f"{sent_dir}/part-0.parquet", -1, max_ts + timedelta(days=1), -1, 0.0
-    )
+    # the drain writes its own sink, so the sentinel file is done
+    # once it returns or fails
+    with tempfile.TemporaryDirectory(prefix="asp_sentinel_",
+                                     ignore_cleanup_errors=True) as tmp:
+        _write_sentinel_row(
+            f"{tmp}/part-0.parquet", -1, max_ts + timedelta(days=1), -1, 0.0
+        )
 
-    real = stream_table(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "value", "event_type"
-    )
-    sentinel = (
-        spark.readStream.schema(SIDE_SCHEMA)
-        .parquet(sent_dir)
-        .withColumn("event_type", F.lit("__sentinel__"))
-    )
-    src = real.unionByName(sentinel).withWatermark("ts", "2 hours")
+        real = stream_table(spark, sf_dir, "events").select(
+            "event_id", "ts", "user_id", "value", "event_type"
+        )
+        sentinel = (
+            spark.readStream.schema(SIDE_SCHEMA)
+            .parquet(tmp)
+            .withColumn("event_type", F.lit("__sentinel__"))
+        )
+        src = real.unionByName(sentinel).withWatermark("ts", "2 hours")
 
-    def side(kind: str) -> DataFrame:
-        return src.filter(
-            F.col("event_type").isin(kind, "__sentinel__")
-        ).drop("event_type")
+        def side(kind: str) -> DataFrame:
+            return src.filter(
+                F.col("event_type").isin(kind, "__sentinel__")
+            ).drop("event_type")
 
-    j = side("click").alias("l").join(
-        side("purchase").alias("r"),
-        F.expr(
-            "l.user_id = r.user_id AND "
-            "r.ts BETWEEN l.ts - INTERVAL 30 MINUTES "
-            "AND l.ts + INTERVAL 30 MINUTES"
-        ),
-        how,
-    )
-    user_col = {
-        "full_outer": F.coalesce(F.col("l.user_id"), F.col("r.user_id")),
-        "left_outer": F.col("l.user_id"),
-        "right_outer": F.col("r.user_id"),
-    }[how]
-    out = j.select(
-        F.col("l.event_id").alias("click_id"),
-        F.col("l.ts").alias("click_ts"),
-        F.col("l.value").alias("click_value"),
-        F.col("r.event_id").alias("purchase_id"),
-        F.col("r.ts").alias("purchase_ts"),
-        F.col("r.value").alias("purchase_value"),
-        user_col.alias("user_id"),
-    )
-    try:
+        j = side("click").alias("l").join(
+            side("purchase").alias("r"),
+            F.expr(
+                "l.user_id = r.user_id AND "
+                "r.ts BETWEEN l.ts - INTERVAL 30 MINUTES "
+                "AND l.ts + INTERVAL 30 MINUTES"
+            ),
+            how,
+        )
+        user_col = {
+            "full_outer": F.coalesce(F.col("l.user_id"), F.col("r.user_id")),
+            "left_outer": F.col("l.user_id"),
+            "right_outer": F.col("r.user_id"),
+        }[how]
+        out = j.select(
+            F.col("l.event_id").alias("click_id"),
+            F.col("l.ts").alias("click_ts"),
+            F.col("l.value").alias("click_value"),
+            F.col("r.event_id").alias("purchase_id"),
+            F.col("r.ts").alias("purchase_ts"),
+            F.col("r.value").alias("purchase_value"),
+            user_col.alias("user_id"),
+        )
         drained = drain(out, output_mode="append")
-    finally:
-        # the drain has written its own sink (or failed); either way
-        # the sentinel files are done.  Round-11 review fix: this
-        # cleanup sat AFTER a return since r8 and never ran — one
-        # leaked asp_sentinel_* temp dir per outer-join query run.
-        shutil.rmtree(sent_dir, ignore_errors=True)
     # sentinel filter on the DRAINED result -- see docstring
     return drained.filter(F.col("user_id") >= 0)
 
@@ -2270,9 +2232,6 @@ def q_ingest_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
     quoting) breaks the bit-exact compare.  Doubles survive because the
     writer emits shortest-roundtrip decimal strings; timestamps because
     the format pins all six fractional digits."""
-    import shutil
-    import tempfile
-
     from async_stream_processing_spark.sources.files import (
         read_csv,
         read_json,
@@ -2286,18 +2245,18 @@ def q_ingest_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    root = tempfile.mkdtemp(prefix="asp_ingest_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="asp_ingest_",
+                                     ignore_cleanup_errors=True) as tmp:
         ev.write.options(header=True, timestampFormat=tsfmt).mode(
             "overwrite"
-        ).csv(root + "/csv")
+        ).csv(tmp + "/csv")
         ev.write.options(timestampFormat=tsfmt).mode("overwrite").json(
-            root + "/json"
+            tmp + "/json"
         )
         branches = [
-            ("csv", read_csv(spark, root + "/csv", schema,
+            ("csv", read_csv(spark, tmp + "/csv", schema,
                              timestampFormat=tsfmt)),
-            ("json", read_json(spark, root + "/json", schema,
+            ("json", read_json(spark, tmp + "/json", schema,
                                timestampFormat=tsfmt)),
         ]
         aggs = [
@@ -2314,8 +2273,6 @@ def q_ingest_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
             for fmt, b in branches
         ]
         out = aggs[0].unionByName(aggs[1]).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
     return out
 
 
@@ -2985,10 +2942,6 @@ def q_stream_lake_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpointing and pruned reads certified against ONE closed form.
     Reference semantics: processor.py:75-76 (strict time order) +
     e6_persistence-style sink."""
-    import os
-    import shutil
-    import tempfile
-
     from async_stream_processing_spark.plans.versioned import (
         checkpoint_manifest,
         scan_version,
@@ -3012,10 +2965,10 @@ def q_stream_lake_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return reordered_fold_stream(s, "cusum", delay=_REORDER_DELAY)
 
-    lake = tempfile.mkdtemp(prefix="asp_pipeline_")
-    shutil.rmtree(lake, ignore_errors=True)
-    ck = tempfile.mkdtemp(prefix="asp_pipeline_ck_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="asp_pipeline_",
+                                     ignore_cleanup_errors=True) as tmp:
+        lake = os.path.join(tmp, "lake")
+
         def _drain_into_lake(checkpoint: str) -> None:
             # the PRODUCTION sink: exactly-once per-micro-batch commits
             # (Delta txn recipe), per-file user_id stats recorded at
@@ -3032,7 +2985,7 @@ def q_stream_lake_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             await_drain(q, 300)
 
-        _drain_into_lake(os.path.join(ck, "first"))
+        _drain_into_lake(os.path.join(tmp, "ck"))
         # The REDELIVERY PROOF (a second fresh-checkpoint drain whose
         # every batch the txn watermark must skip, head untouched) is
         # pure self-verification: it never changes the returned view,
@@ -3047,9 +3000,6 @@ def q_stream_lake_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = _cusum_from_finals(
             final_rows(scanned, "cusum")
         ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(lake, ignore_errors=True)
-        shutil.rmtree(ck, ignore_errors=True)
     return out
 
 
@@ -3083,6 +3033,15 @@ def q_salted_hot_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _late_bucket() -> Column:
+    """Micro-batch of each event in the late-data fixture: the on-time
+    rows split by event_id parity into batches 0 and 1 (each spanning
+    the full time range), then every event_id % 10 == 7 row arriving
+    LATE as batch 2."""
+    eid = F.col("event_id")
+    return F.when(eid % 10 == 7, 2).otherwise(eid % 2)
+
+
 def q_stream_late_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Late-data semantics as a HASH-GATED result (r8 verdict item 7):
     out-of-order delivery with a real watermark, late rows beyond the
@@ -3101,42 +3060,14 @@ def q_stream_late_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     this drops 99 of 100 late rows and accepts 1 straggler — both
     paths exercised.  (The reference has NO late tolerance at all —
     SURVEY §2 — so any watermark is strictly more forgiving.)"""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
     from async_stream_processing_spark.streaming.replay import drain
 
-    key = (sf_dir, "late3")
-    d = _SPLIT_DIRS.get(key)
-    if not (d and os.path.isdir(d)):
-        ev = load_table(spark, sf_dir, "events")
-        slices = [
-            (F.col("event_id") % 10 != 7) & (F.col("event_id") % 2 == 0),
-            (F.col("event_id") % 10 != 7) & (F.col("event_id") % 2 == 1),
-            F.col("event_id") % 10 == 7,  # the late arrivals
-        ]
-        d = tempfile.mkdtemp(prefix="asp_late_")
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-        for i, pred in enumerate(slices):
-            sub = os.path.join(d, f"__b{i}")
-            ev.filter(pred).coalesce(1).write.mode("overwrite").parquet(sub)
-            part = next(
-                f for f in os.listdir(sub)
-                if f.endswith(".parquet") and not f.startswith(("_", "."))
-            )
-            dst = os.path.join(d, f"events_{i:03d}.parquet")
-            os.replace(os.path.join(sub, part), dst)
-            shutil.rmtree(sub)
-            os.utime(dst, (1_600_000_000 + i * 10, 1_600_000_000 + i * 10))
-        _SPLIT_DIRS[key] = d
-    schema = spark.read.parquet(d).schema
-    s = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
-    )
+    s = _replay_landed(spark, _landed_dir(
+        (sf_dir, "late3"), "asp_late_", 3,
+        lambda: load_table(spark, sf_dir, "events").withColumn(
+            "__b", _late_bucket()
+        ),
+    ))
     agg = (
         s.withWatermark("ts", "30 minutes")
         .groupBy(F.window("ts", "1 hour").alias("win"))
@@ -3250,22 +3181,18 @@ def q_stream_upsert_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition overwrite of touched buckets only) and return the final
     lake state.  The oracle is the same argmax in SQL -- the sink's
     merge discipline, not just a query plan, is what's verified."""
-    import shutil
-    import tempfile
-
     from async_stream_processing_spark.sources.parquet import stream_table
     from async_stream_processing_spark.streaming.upsert import (
         read_current,
         upsert_sink,
     )
 
-    lake = tempfile.mkdtemp(prefix="asp_upsert_lake_")
-    ck = tempfile.mkdtemp(prefix="asp_upsert_ck_")
-    shutil.rmtree(lake)  # sink creates it; mkdtemp only reserved the name
     s = stream_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
-    try:
+    with tempfile.TemporaryDirectory(prefix="asp_upsert_",
+                                     ignore_cleanup_errors=True) as tmp:
+        lake, ck = os.path.join(tmp, "lake"), os.path.join(tmp, "ck")
         with shuffle_guard(spark):
             q = upsert_sink(
                 s, lake, keys=["user_id"], version_col="event_id",
@@ -3275,11 +3202,6 @@ def q_stream_upsert_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = read_current(spark, lake).select(
             "user_id", "event_id", "event_type", "value"
         ).localCheckpoint(eager=True)
-    finally:
-        # exception-safe: the temp lake/checkpoint must not leak when
-        # the sink or the read raises (round-11 review fix)
-        shutil.rmtree(lake, ignore_errors=True)
-        shutil.rmtree(ck, ignore_errors=True)
     return out
 
 
@@ -3724,27 +3646,13 @@ _EVENTS_VOL = f"(SELECT *, {_VOL} AS vol, event_id AS seq FROM events)"
 
 
 def _simhash_pairs_sql() -> str:
-    from async_stream_processing_spark.functions.hashing import sql_stable_hash60
+    from async_stream_processing_spark.llm.dedup import sql_simhash
 
     bits, chunk_bits, max_hamming = 32, 8, 3
-    votes = ",\n                   ".join(
-        f"SUM((h >> {j}) & 1) AS v_{j}" for j in range(bits)
-    )
-    val = " + ".join(
-        f"(CASE WHEN v_{j} * 2 >= n_tok THEN 1 ELSE 0 END * {1 << j})"
-        for j in range(bits)
-    )
     chunk_vals = ", ".join(f"({i})" for i in range(bits // chunk_bits))
     mask = (1 << chunk_bits) - 1
     return f"""
-        WITH toks AS (
-            SELECT DISTINCT doc_id,
-                   unnest(string_split_regex(lower(trim(text)), ' +')) AS tok
-            FROM documents),
-        hashed AS (SELECT doc_id, {sql_stable_hash60('tok')} AS h FROM toks),
-        votes AS (SELECT doc_id, COUNT(*) AS n_tok, {votes}
-                  FROM hashed GROUP BY doc_id),
-        sigs AS (SELECT doc_id, CAST({val} AS BIGINT) AS simhash FROM votes),
+        WITH sigs AS ({sql_simhash(bits=bits)}),
         chunks AS (SELECT doc_id, simhash, i.idx,
                           (simhash >> (i.idx * {chunk_bits})) & {mask} AS val
                    FROM sigs, (VALUES {chunk_vals}) AS i(idx)),

@@ -778,6 +778,30 @@ def simhash(
     return votes.select("doc_id", sig.alias("simhash"), "n_tok")
 
 
+def sql_simhash(src: str = "documents", bits: int = 32) -> str:
+    """DuckDB twin of :func:`simhash` (``hash_mode='md5'``): the same
+    distinct tokens, per-bit votes and majority rule (ties set), as
+    ``(doc_id, simhash, n_tok)``."""
+    votes = ",\n                   ".join(
+        f"SUM((h >> {j}) & 1) AS v_{j}" for j in range(bits)
+    )
+    val = " + ".join(
+        f"(CASE WHEN v_{j} * 2 >= n_tok THEN 1 ELSE 0 END * {1 << j})"
+        for j in range(bits)
+    )
+    return f"""
+        WITH toks AS (
+            SELECT DISTINCT doc_id,
+                   unnest(string_split_regex(lower(trim(text)), ' +')) AS tok
+            FROM {src}),
+        hashed AS (SELECT doc_id, {sql_stable_hash60('tok')} AS h FROM toks),
+        votes AS (SELECT doc_id, COUNT(*) AS n_tok,
+                   {votes}
+                  FROM hashed GROUP BY doc_id)
+        SELECT doc_id, CAST({val} AS BIGINT) AS simhash, n_tok FROM votes
+    """
+
+
 def simhash_pairs(
     docs: DataFrame,
     max_hamming: int = 6,

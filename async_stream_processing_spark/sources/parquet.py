@@ -33,13 +33,10 @@ def _nano_ts_columns(path: str) -> tuple[str, ...]:
     )
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read ``{sf_dir}/{name}.parquet`` with ns-timestamp repair."""
-    path = f"{sf_dir}/{name}.parquet"
-    # Runtime-set so the engine also works under a caller-provided session
-    # (e.g. the driver's) that lacks the config.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+def _repair_timestamps(df: DataFrame, path: str) -> DataFrame:
+    """The one timestamp type for a read of ``path``: its nanos columns
+    (read as longs) become microsecond TIMESTAMPs, and its NTZ columns
+    TIMESTAMPs."""
     for col in _nano_ts_columns(path):
         # integer ns -> us narrowing (DuckDB truncates the same way);
         # MUST be integer DIV -- double division loses ULPs at 1e18.
@@ -51,6 +48,15 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         if field.dataType.typeName() == "timestamp_ntz":
             df = df.withColumn(field.name, F.col(field.name).cast("timestamp"))
     return df
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read ``{sf_dir}/{name}.parquet`` with ns-timestamp repair."""
+    path = f"{sf_dir}/{name}.parquet"
+    # Runtime-set so the engine also works under a caller-provided session
+    # (e.g. the driver's) that lacks the config.
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return _repair_timestamps(spark.read.parquet(path), path)
 
 
 def stream_table(spark: SparkSession, sf_dir: str, name: str,
@@ -67,10 +73,4 @@ def stream_table(spark: SparkSession, sf_dir: str, name: str,
     )
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    df = reader.parquet(sf_dir)
-    for col in _nano_ts_columns(path):
-        df = df.withColumn(col, F.timestamp_micros(F.expr(f"`{col}` DIV 1000")))
-    for field in df.schema.fields:
-        if field.dataType.typeName() == "timestamp_ntz":
-            df = df.withColumn(field.name, F.col(field.name).cast("timestamp"))
-    return df
+    return _repair_timestamps(reader.parquet(sf_dir), path)

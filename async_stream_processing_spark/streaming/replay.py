@@ -10,6 +10,10 @@ Spark-native equivalents, in order of fidelity:
   backlog (the "past" phase) and stops; omitting it keeps the query alive
   for files that arrive later (the "live" phase).  maxFilesPerTrigger
   bounds micro-batch size so backfill paces itself.
+* :func:`land_batches` -- lands a DataFrame as ``n`` ordered files, one
+  per value of an int batch column, so :func:`replay_stream` with
+  ``max_files_per_trigger=1`` delivers them as ``n`` micro-batches in
+  that order: a recorded past whose batch boundaries are fixed.
 * :func:`process_stream` -- the reference's A3 entry point re-expressed:
   bind a per-batch callback (``foreachBatch``), with ``on_start`` /
   ``on_live_start`` lifecycle hooks.  Live-start is detected the way the
@@ -63,6 +67,37 @@ def replay_stream(
     if watermark is not None:
         df = df.withWatermark(ts_col, watermark)
     return df
+
+
+def land_batches(df: DataFrame, batch: str, n: int, path: str) -> str:
+    """Land the rows of ``df`` whose int ``batch`` column equals ``i`` as
+    the ``i``-th parquet file under ``path``, for each ``i`` in
+    ``[0, n)``, and return ``path``.  Every bucket must hold a row.
+
+    One write job lands all buckets (hive-partitioned by ``batch``, one
+    file per bucket); each part file is then moved to
+    ``path/events_<i:03d>.parquet`` and given a distinct ascending
+    mtime, which pins the file source's oldest-first order.  So
+    :func:`replay_stream` over ``path`` with ``max_files_per_trigger=1``
+    delivers bucket ``i`` as micro-batch ``i``.  The ``batch`` column is
+    not in the files."""
+    import os
+    import shutil
+
+    sub = os.path.join(path, "__by_bucket")
+    df.repartition(n, batch).write.partitionBy(batch) \
+        .mode("overwrite").parquet(sub)
+    for i in range(n):
+        bdir = os.path.join(sub, f"{batch}={i}")
+        part = next(
+            f for f in os.listdir(bdir)
+            if f.endswith(".parquet") and not f.startswith(("_", "."))
+        )
+        dst = os.path.join(path, f"events_{i:03d}.parquet")
+        os.replace(os.path.join(bdir, part), dst)
+        os.utime(dst, (1_600_000_000 + i * 10, 1_600_000_000 + i * 10))
+    shutil.rmtree(sub)
+    return path
 
 
 def _data_files(root: str) -> set[str]:
@@ -345,7 +380,9 @@ def drain(stream_df: DataFrame, output_mode: str = "complete",
     other modes (the batches together are the answer).  Nothing passes
     through the driver in any mode, so a result the size of the
     cluster's storage still drains.  The return value is a lazy read of
-    that directory with the stream's schema (zero rows if no batch ran).
+    that directory with the stream's schema (zero rows if no batch ran),
+    so the directory lives until process exit.  A drain that fails -- a
+    timeout or a query exception -- removes it at once and re-raises.
     """
     import atexit
     import shutil
@@ -353,22 +390,25 @@ def drain(stream_df: DataFrame, output_mode: str = "complete",
 
     spark = stream_df.sparkSession
     out_dir = tempfile.mkdtemp(prefix="asp_drain_")
-    # the temp dir lives until process exit, a timed-out drain's included
-    atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
     write_mode = "overwrite" if output_mode == "complete" else "append"
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
         DRAIN_BATCH_TALLY["batches"] += 1
         batch_df.write.mode(write_mode).parquet(out_dir)
 
-    with shuffle_guard(spark):
-        q = (
-            stream_df.writeStream.foreachBatch(_write)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-    await_drain(q, timeout_s)
+    try:
+        with shuffle_guard(spark):
+            q = (
+                stream_df.writeStream.foreachBatch(_write)
+                .outputMode(output_mode)
+                .trigger(availableNow=True)
+                .start()
+            )
+        await_drain(q, timeout_s)
+    except BaseException:
+        shutil.rmtree(out_dir, ignore_errors=True)
+        raise
+    atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
     DRAIN_BATCH_TALLY["drains"] += 1
     return spark.read.schema(stream_df.schema).parquet(out_dir)
 

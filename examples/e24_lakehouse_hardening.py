@@ -18,6 +18,7 @@ reference parity.
 
 from __future__ import annotations
 
+import os
 import tempfile
 
 from pyspark.sql import functions as F
@@ -42,27 +43,28 @@ def _main(spark, tmp: str):
         versions,
     )
     from async_stream_processing_spark.sources.parquet import load_table
-    from async_stream_processing_spark.streaming.replay import await_drain
+    from async_stream_processing_spark.streaming.replay import (
+        await_drain,
+        land_batches,
+        replay_stream,
+    )
 
     docs = load_table(spark, SF_DIR, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
-    lake = tempfile.mkdtemp(prefix="asp_lake_hardening_", dir=tmp)
-    src = tempfile.mkdtemp(prefix="asp_lake_hardening_src_", dir=tmp)
-    ck = tempfile.mkdtemp(prefix="asp_lake_hardening_ck_", dir=tmp)
+    lake = os.path.join(tmp, "lake")
 
     # --- streaming ingest with the maintenance policy: 8 micro-batches,
     # compaction every 3 commits, history vacuumed to the last 3
     # versions -- the week-long stream that does NOT end as 10^5 small
     # files and manifests
-    for p in range(8):
-        docs.filter(F.col("doc_id") % 8 == p).coalesce(1) \
-            .write.mode("append").parquet(src)
-    stream = spark.readStream.schema(
-        spark.read.parquet(src).schema
-    ).option("maxFilesPerTrigger", 1).parquet(src)
-    q = versioned_sink(stream, lake, ck, compact_every=3,
-                       compact_target_files=1, vacuum_keep=3)
+    src = land_batches(docs.withColumn("__b", F.col("doc_id") % 8), "__b",
+                       8, os.path.join(tmp, "src"))
+    stream = replay_stream(spark, src, spark.read.parquet(src).schema,
+                           max_files_per_trigger=1)
+    q = versioned_sink(stream, lake, os.path.join(tmp, "ck"),
+                       compact_every=3, compact_target_files=1,
+                       vacuum_keep=3)
     await_drain(q, 120)
     head_files = len(
         read_version(spark, lake).inputFiles()

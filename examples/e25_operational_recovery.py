@@ -25,6 +25,7 @@ on top of reference parity.
 from __future__ import annotations
 
 import os
+import sys
 import tempfile
 
 from pyspark.sql import functions as F
@@ -48,14 +49,24 @@ def _main(spark, tmp: str):
     from async_stream_processing_spark.streaming.replay import (
         await_drain,
         drain,
+        land_batches,
+        replay_stream,
     )
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))))
+    import __spark_entry__ as entry
+
+    def replay(path):
+        return replay_stream(spark, path, spark.read.parquet(path).schema,
+                             max_files_per_trigger=1)
 
     docs = load_table(spark, SF_DIR, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
 
     # --- 1. bad merge -> RESTORE -> good merge --------------------------
-    lake = tempfile.mkdtemp(prefix="asp_recovery_lake_", dir=tmp)
+    lake = os.path.join(tmp, "lake")
     commit_append(docs, lake)
     bad = docs.select(
         "doc_id", F.lit("CORRUPTED").alias("text"),
@@ -81,19 +92,14 @@ def _main(spark, tmp: str):
     )
 
     # --- 2. two streaming sinks, independent batch-id watermarks --------
-    src_a = tempfile.mkdtemp(prefix="asp_recovery_srcA_", dir=tmp)
-    src_b = tempfile.mkdtemp(prefix="asp_recovery_srcB_", dir=tmp)
-    for p in range(3):
-        docs.filter(F.col("doc_id") % 3 == p).coalesce(1) \
-            .write.mode("append").parquet(src_a)
-    docs.limit(50).coalesce(1).write.mode("append").parquet(src_b)
+    src_a = land_batches(docs.withColumn("__b", F.col("doc_id") % 3),
+                         "__b", 3, os.path.join(tmp, "src_a"))
+    src_b = land_batches(docs.limit(50).withColumn("__b", F.lit(0)),
+                         "__b", 1, os.path.join(tmp, "src_b"))
 
     def sink(src, app):
-        stream = spark.readStream.schema(
-            spark.read.parquet(src).schema
-        ).option("maxFilesPerTrigger", 1).parquet(src)
-        ck = tempfile.mkdtemp(prefix=f"asp_recovery_ck_{app}_", dir=tmp)
-        return versioned_sink(stream, lake, ck, txn_app_id=app)
+        return versioned_sink(replay(src), lake,
+                              os.path.join(tmp, f"ck_{app}"), txn_app_id=app)
 
     await_drain(sink(src_a, "ingest-a"), 120)
     # stream A committed batches 0..2; stream B's batch 0 must NOT be
@@ -110,25 +116,10 @@ def _main(spark, tmp: str):
 
     # --- 3. late data through a real watermark --------------------------
     ev = load_table(spark, SF_DIR, "events")
-    late_dir = tempfile.mkdtemp(prefix="asp_recovery_late_", dir=tmp)
-    slices = [
-        (ev.filter((F.col("event_id") % 10 != 7)
-                   & (F.col("event_id") % 2 == 0)), 0),
-        (ev.filter((F.col("event_id") % 10 != 7)
-                   & (F.col("event_id") % 2 == 1)), 1),
-        (ev.filter(F.col("event_id") % 10 == 7), 2),  # arrives LATE
-    ]
-    for df, i in slices:
-        sub = os.path.join(late_dir, f"__b{i}")
-        df.coalesce(1).write.mode("overwrite").parquet(sub)
-        part = next(f for f in os.listdir(sub)
-                    if f.endswith(".parquet") and not f.startswith(("_", ".")))
-        dst = os.path.join(late_dir, f"events_{i:03d}.parquet")
-        os.replace(os.path.join(sub, part), dst)
-        os.utime(dst, (1_600_000_000 + i * 10, 1_600_000_000 + i * 10))
-    stream = spark.readStream.schema(
-        spark.read.parquet(late_dir).schema
-    ).option("maxFilesPerTrigger", 1).parquet(late_dir)
+    # the registry's late-data fixture: two on-time slices, then the
+    # event_id % 10 == 7 rows arriving LATE as the third micro-batch
+    stream = replay(land_batches(ev.withColumn("__b", entry._late_bucket()),
+                                 "__b", 3, os.path.join(tmp, "late")))
 
     windows = drain(
         stream.withWatermark("ts", "30 minutes")
@@ -148,12 +139,6 @@ def _main(spark, tmp: str):
     )
 
     # --- 4. bounded-state streaming CUSUM == batch CUSUM -----------------
-    import sys
-
-    sys.path.insert(0, os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))))
-    import __spark_entry__ as entry
-
     stream_cusum = entry.q_stream_cusum(spark, SF_DIR)
     batch_cusum = entry.q_cusum_drift(spark, SF_DIR)
     assert stream_cusum.exceptAll(batch_cusum).count() == 0

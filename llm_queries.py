@@ -9,6 +9,9 @@ contracts: md5-based 60-bit hashing, sequential-left-fold float math).
 
 from __future__ import annotations
 
+import os
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -59,7 +62,11 @@ from async_stream_processing_spark.llm.text_analysis import (
     token_counts,
 )
 from async_stream_processing_spark.sources.parquet import load_table
-from async_stream_processing_spark.streaming.replay import await_drain
+from async_stream_processing_spark.streaming.replay import (
+    await_drain,
+    land_batches,
+    replay_stream,
+)
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -747,8 +754,6 @@ def q_stream_incremental_dedup(spark, sf_dir):
     corpus-side exchange (the reference's past->live posture,
     processor.py:185-194, composed with the north-star dedup).  Same
     oracle as the batch query."""
-    import shutil
-    import tempfile
     import uuid
 
     from async_stream_processing_spark.llm.dedup import (
@@ -760,25 +765,25 @@ def q_stream_incremental_dedup(spark, sf_dir):
     from async_stream_processing_spark.streaming.replay import drain
 
     docs = _docs(spark, sf_dir)
-    store_path = tempfile.mkdtemp(prefix="asp_incr_store_")
     table = "asp_corpus_sets_" + uuid.uuid4().hex[:8]
-    write_bucketed(
-        corpus_bucket_sets(docs.filter(F.col("doc_id") % 5 != 0)),
-        table=table, bucket_by="sig", n_buckets=8, sort_by="sig",
-        path=store_path,
-    )
-    try:
-        stored = spark.table(table)
-        s = stream_table(spark, sf_dir, "documents").filter(
-            F.col("doc_id") % 5 == 0
+    with tempfile.TemporaryDirectory(prefix="asp_incr_store_",
+                                     ignore_cleanup_errors=True) as tmp:
+        write_bucketed(
+            corpus_bucket_sets(docs.filter(F.col("doc_id") % 5 != 0)),
+            table=table, bucket_by="sig", n_buckets=8, sort_by="sig",
+            path=os.path.join(tmp, "store"),
         )
-        out = drain(
-            stream_incremental_dedup(s, stored, threshold=0.25),
-            output_mode="append",
-        ).localCheckpoint(eager=True)
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        shutil.rmtree(store_path, ignore_errors=True)
+        try:
+            stored = spark.table(table)
+            s = stream_table(spark, sf_dir, "documents").filter(
+                F.col("doc_id") % 5 == 0
+            )
+            out = drain(
+                stream_incremental_dedup(s, stored, threshold=0.25),
+                output_mode="append",
+            ).localCheckpoint(eager=True)
+        finally:
+            spark.sql(f"DROP TABLE IF EXISTS {table}")
     return out
 
 
@@ -1099,9 +1104,6 @@ def q_ivfpq_upsert(spark, sf_dir):
     corpus, so the serving model equals the full-corpus model and the
     oracle is simply: the final store must equal a clean rebuild over
     the final corpus (``sql_ivfpq_codes``)."""
-    import shutil
-    import tempfile
-
     from async_stream_processing_spark.llm.similarity import (
         ivfpq_encode,
         ivfpq_read_codes,
@@ -1112,15 +1114,13 @@ def q_ivfpq_upsert(spark, sf_dir):
     emb = _emb(spark, sf_dir)
     corpus = emb.filter(F.col("vec_id") % 50 != 37)
     batch = emb.filter(F.col("vec_id") % 50 == 37)
-    store = tempfile.mkdtemp(prefix="asp_ivfpq_store_")
-    shutil.rmtree(store)
-    try:
+    with tempfile.TemporaryDirectory(prefix="asp_ivfpq_store_",
+                                     ignore_cleanup_errors=True) as tmp:
+        store = os.path.join(tmp, "store")
         codes_long, coarse, rcode = ivfpq_encode(corpus)
         ivfpq_write_store(codes_long, store)
         ivfpq_upsert(spark, store, batch, coarse, rcode)
         out = ivfpq_read_codes(spark, store).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(store, ignore_errors=True)
     return out
 
 
@@ -1131,9 +1131,6 @@ def q_knn_ivfpq_served(spark, sf_dir):
     files (pruning asserted in tests/test_llm_ops.py) -- the ANN serving
     posture at billion-vector scale.  Results identical to knn_ivfpq
     (same oracle)."""
-    import shutil
-    import tempfile
-
     from async_stream_processing_spark.llm.similarity import (
         ivfpq_encode,
         ivfpq_read_codes_wide,
@@ -1142,9 +1139,9 @@ def q_knn_ivfpq_served(spark, sf_dir):
     )
 
     emb = _emb(spark, sf_dir)
-    store = tempfile.mkdtemp(prefix="asp_ivfpq_serve_")
-    shutil.rmtree(store)
-    try:
+    with tempfile.TemporaryDirectory(prefix="asp_ivfpq_serve_",
+                                     ignore_cleanup_errors=True) as tmp:
+        store = os.path.join(tmp, "store")
         codes, coarse, rcode = ivfpq_encode(emb)
         ivfpq_write_store(codes, store)
         stored = ivfpq_read_codes_wide(spark, store)
@@ -1152,8 +1149,6 @@ def q_knn_ivfpq_served(spark, sf_dir):
             emb, stored, coarse, rcode,
             n_queries=10, k=5, nprobe=2, prune_cells=True,
         ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(store, ignore_errors=True)
     return out
 
 
@@ -1165,9 +1160,6 @@ def q_stream_ivfpq_upsert(spark, sf_dir):
     exactly-once foreachBatch recipe, the stream_upsert_state pattern).
     The final store must equal a clean rebuild over the final corpus --
     same oracle as the batch ivfpq_upsert."""
-    import shutil
-    import tempfile
-
     from async_stream_processing_spark.llm.similarity import (
         ivfpq_encode,
         ivfpq_read_codes,
@@ -1177,10 +1169,9 @@ def q_stream_ivfpq_upsert(spark, sf_dir):
     from async_stream_processing_spark.sources.parquet import stream_table
 
     emb = _emb(spark, sf_dir)
-    store = tempfile.mkdtemp(prefix="asp_ivfpq_sstore_")
-    ck = tempfile.mkdtemp(prefix="asp_ivfpq_sck_")
-    shutil.rmtree(store)
-    try:
+    with tempfile.TemporaryDirectory(prefix="asp_ivfpq_stream_",
+                                     ignore_cleanup_errors=True) as tmp:
+        store, ck = os.path.join(tmp, "store"), os.path.join(tmp, "ck")
         codes_long, coarse, rcode = ivfpq_encode(
             emb.filter(F.col("vec_id") % 50 != 37)
         )
@@ -1198,9 +1189,6 @@ def q_stream_ivfpq_upsert(spark, sf_dir):
         )
         await_drain(q, 300)
         out = ivfpq_read_codes(spark, store).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(store, ignore_errors=True)
-        shutil.rmtree(ck, ignore_errors=True)
     return out
 
 
@@ -1323,25 +1311,20 @@ def q_versioned_time_travel(spark, sf_dir):
     TIME-TRAVEL read v1 -- which must equal a plain filter of the source
     table even though the head has moved (snapshot isolation as a
     hash-checked result, not just a pytest claim)."""
-    import shutil
-    import tempfile
-
     from async_stream_processing_spark.plans.versioned import (
         commit_append,
         read_version,
     )
 
     docs = _docs(spark, sf_dir)
-    lake = tempfile.mkdtemp(prefix="asp_vlake_")
-    shutil.rmtree(lake, ignore_errors=True)
-    try:
+    with tempfile.TemporaryDirectory(prefix="asp_vlake_",
+                                     ignore_cleanup_errors=True) as tmp:
+        lake = os.path.join(tmp, "lake")
         commit_append(docs.filter(F.col("doc_id") % 5 != 0), lake)
         commit_append(docs.filter(F.col("doc_id") % 5 == 0), lake)
         out = read_version(spark, lake, 1).select(
             "doc_id", "text", "lang", "source", "n_chars"
         ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(lake, ignore_errors=True)
     return out
 
 
@@ -1350,29 +1333,21 @@ def q_stream_versioned_sink(spark, sf_dir):
     commit one lake version each (batch_id in the manifest); the final
     head must equal the whole source table -- and the exactly-once claim
     is hash-gated, not just unit-tested."""
-    import shutil
-    import tempfile
-
     from async_stream_processing_spark.plans.versioned import (
         read_version,
         versioned_sink,
     )
     from async_stream_processing_spark.sources.parquet import stream_table
 
-    lake = tempfile.mkdtemp(prefix="asp_vsink_")
-    shutil.rmtree(lake, ignore_errors=True)
-    ck = tempfile.mkdtemp(prefix="asp_vsink_ck_")
-    shutil.rmtree(ck, ignore_errors=True)
-    try:
+    with tempfile.TemporaryDirectory(prefix="asp_vsink_",
+                                     ignore_cleanup_errors=True) as tmp:
+        lake, ck = os.path.join(tmp, "lake"), os.path.join(tmp, "ck")
         s = stream_table(spark, sf_dir, "documents")
         q = versioned_sink(s, lake, ck)
         await_drain(q, 300)
         out = read_version(spark, lake).select(
             "doc_id", "text", "lang", "source", "n_chars"
         ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(lake, ignore_errors=True)
-        shutil.rmtree(ck, ignore_errors=True)
     return out
 
 
@@ -1384,9 +1359,6 @@ def q_versioned_merge(spark, sf_dir):
     (disjoint from updates).  The post-merge head must equal the plain
     SQL merge expression; only-touched-files-rewritten is pinned in
     pytest, the RESULT is hash-gated here."""
-    import shutil
-    import tempfile
-
     from async_stream_processing_spark.plans.versioned import (
         commit_append,
         merge_into,
@@ -1396,9 +1368,9 @@ def q_versioned_merge(spark, sf_dir):
     docs = _docs(spark, sf_dir).select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
-    lake = tempfile.mkdtemp(prefix="asp_vmerge_")
-    shutil.rmtree(lake, ignore_errors=True)
-    try:
+    with tempfile.TemporaryDirectory(prefix="asp_vmerge_",
+                                     ignore_cleanup_errors=True) as tmp:
+        lake = os.path.join(tmp, "lake")
         commit_append(
             docs.filter(F.col("doc_id") % 3 != 0).repartition(4), lake
         )
@@ -1420,8 +1392,6 @@ def q_versioned_merge(spark, sf_dir):
             delete_col="is_delete",
         )
         out = read_version(spark, lake).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(lake, ignore_errors=True)
     return out
 
 
@@ -1432,9 +1402,6 @@ def q_stream_versioned_merge(spark, sf_dir):
     each, batch_id in the manifest -- the Delta streaming MERGE shape);
     the final head must hash-match the SAME oracle as the one-shot
     batch merge."""
-    import shutil
-    import tempfile
-
     from async_stream_processing_spark.plans.versioned import (
         commit_append,
         read_version,
@@ -1459,29 +1426,22 @@ def q_stream_versioned_merge(spark, sf_dir):
     )
     cdc = ups.unionByName(dels)
 
-    lake = tempfile.mkdtemp(prefix="asp_svmerge_")
-    src = tempfile.mkdtemp(prefix="asp_svmerge_src_")
-    ck = tempfile.mkdtemp(prefix="asp_svmerge_ck_")
-    for d in (lake, src, ck):
-        shutil.rmtree(d, ignore_errors=True)
-    try:
+    with tempfile.TemporaryDirectory(prefix="asp_svmerge_",
+                                     ignore_cleanup_errors=True) as tmp:
+        lake, ck = os.path.join(tmp, "lake"), os.path.join(tmp, "ck")
         commit_append(
             docs.filter(F.col("doc_id") % 3 != 0).repartition(4), lake
         )
-        for m in range(3):  # three files -> three merge micro-batches
-            cdc.filter(F.col("doc_id") % 3 == m).coalesce(1) \
-                .write.mode("append").parquet(src)
-        stream = spark.readStream.schema(
-            spark.read.parquet(src).schema
-        ).option("maxFilesPerTrigger", 1).parquet(src)
+        # three files -> three merge micro-batches
+        src = land_batches(cdc.withColumn("__b", F.col("doc_id") % 3),
+                           "__b", 3, os.path.join(tmp, "src"))
         q = versioned_merge_sink(
-            stream, lake, ["doc_id"], ck, delete_col="is_delete"
+            replay_stream(spark, src, spark.read.parquet(src).schema,
+                          max_files_per_trigger=1),
+            lake, ["doc_id"], ck, delete_col="is_delete",
         )
         await_drain(q, 300)
         out = read_version(spark, lake).localCheckpoint(eager=True)
-    finally:
-        for d in (lake, src, ck):
-            shutil.rmtree(d, ignore_errors=True)
     return out
 
 
@@ -1489,9 +1449,6 @@ def q_versioned_changes(spark, sf_dir):
     """Change-data-feed gate: three appends (doc_id mod 3 slices); the
     v1->v3 feed must be exactly the later two slices as inserts -- the
     version diff reads only the differenced files, never the table."""
-    import shutil
-    import tempfile
-
     from async_stream_processing_spark.plans.versioned import (
         commit_append,
         table_changes,
@@ -1500,14 +1457,12 @@ def q_versioned_changes(spark, sf_dir):
     docs = _docs(spark, sf_dir).select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
-    lake = tempfile.mkdtemp(prefix="asp_vcdf_")
-    shutil.rmtree(lake, ignore_errors=True)
-    try:
+    with tempfile.TemporaryDirectory(prefix="asp_vcdf_",
+                                     ignore_cleanup_errors=True) as tmp:
+        lake = os.path.join(tmp, "lake")
         for m in range(3):
             commit_append(docs.filter(F.col("doc_id") % 3 == m), lake)
         out = table_changes(spark, lake, 1, 3).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(lake, ignore_errors=True)
     return out
 
 
@@ -1521,9 +1476,6 @@ def q_versioned_prune_read(spark, sf_dir):
     first, FLOAT query bounds) so the sharded checkpoint write and the
     integer-exact BIGINT bound comparison are themselves
     driver-gated."""
-    import shutil
-    import tempfile
-
     from async_stream_processing_spark.plans.versioned import (
         checkpoint_manifest,
         commit_append,
@@ -1534,9 +1486,9 @@ def q_versioned_prune_read(spark, sf_dir):
         "doc_id", "text", "lang", "source", "n_chars"
     )
     n = docs.count()
-    lake = tempfile.mkdtemp(prefix="asp_vprune_")
-    shutil.rmtree(lake, ignore_errors=True)
-    try:
+    with tempfile.TemporaryDirectory(prefix="asp_vprune_",
+                                     ignore_cleanup_errors=True) as tmp:
+        lake = os.path.join(tmp, "lake")
         third = (n + 2) // 3
         for i in range(3):
             commit_append(
@@ -1551,8 +1503,6 @@ def q_versioned_prune_read(spark, sf_dir):
         lo, hi = float(third // 2) - 0.5, float(third + third // 2) + 0.5
         out = scan_version(spark, lake, "doc_id", lo, hi) \
             .localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(lake, ignore_errors=True)
     return out
 
 
@@ -1565,9 +1515,6 @@ def q_versioned_point_lookup(spark, sf_dir):
     DISTRIBUTED checkpoint path (checkpoint_manifest first) so the
     Arrow-batched bloom probe over the sharded checkpoint is itself
     driver-gated."""
-    import shutil
-    import tempfile
-
     from async_stream_processing_spark.plans.versioned import (
         checkpoint_manifest,
         commit_append,
@@ -1578,9 +1525,9 @@ def q_versioned_point_lookup(spark, sf_dir):
         "doc_id", "text", "lang", "source", "n_chars"
     )
     n = docs.count()
-    lake = tempfile.mkdtemp(prefix="asp_vlookup_")
-    shutil.rmtree(lake, ignore_errors=True)
-    try:
+    with tempfile.TemporaryDirectory(prefix="asp_vlookup_",
+                                     ignore_cleanup_errors=True) as tmp:
+        lake = os.path.join(tmp, "lake")
         third = (n + 2) // 3
         for i in range(3):
             commit_append(
@@ -1599,8 +1546,6 @@ def q_versioned_point_lookup(spark, sf_dir):
         for p in parts[1:]:
             out = out.unionByName(p)
         out = out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(lake, ignore_errors=True)
     return out
 
 
@@ -1608,9 +1553,6 @@ def q_versioned_compact(spark, sf_dir):
     """OPTIMIZE gate: three appends (doc_id mod 3 slices) then a compact
     rewrite into one file as a new version -- the head must still equal
     the whole source table (compaction changes bytes, never content)."""
-    import shutil
-    import tempfile
-
     from async_stream_processing_spark.plans.versioned import (
         commit_append,
         compact,
@@ -1620,15 +1562,13 @@ def q_versioned_compact(spark, sf_dir):
     docs = _docs(spark, sf_dir).select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
-    lake = tempfile.mkdtemp(prefix="asp_vcompact_")
-    shutil.rmtree(lake, ignore_errors=True)
-    try:
+    with tempfile.TemporaryDirectory(prefix="asp_vcompact_",
+                                     ignore_cleanup_errors=True) as tmp:
+        lake = os.path.join(tmp, "lake")
         for m in range(3):
             commit_append(docs.filter(F.col("doc_id") % 3 == m), lake)
         compact(spark, lake, target_files=1)
         out = read_version(spark, lake).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(lake, ignore_errors=True)
     return out
 
 
@@ -1639,9 +1579,6 @@ def q_versioned_merge_composite(spark, sf_dir):
     updates/deletes/inserts by the two-column key.  The stat pre-prune
     ANDs the per-column interval tests (corruption-proven in pytest);
     here the merged VALUES are hash-gated cross-engine."""
-    import shutil
-    import tempfile
-
     from async_stream_processing_spark.plans.versioned import (
         commit_append,
         merge_into,
@@ -1652,9 +1589,9 @@ def q_versioned_merge_composite(spark, sf_dir):
         "doc_id", "text", "lang", "source", "n_chars"
     )
     n = docs.count()
-    lake = tempfile.mkdtemp(prefix="asp_vmergec_")
-    shutil.rmtree(lake, ignore_errors=True)
-    try:
+    with tempfile.TemporaryDirectory(prefix="asp_vmergec_",
+                                     ignore_cleanup_errors=True) as tmp:
+        lake = os.path.join(tmp, "lake")
         third = (n + 2) // 3
         for i in range(3):
             commit_append(
@@ -1685,8 +1622,6 @@ def q_versioned_merge_composite(spark, sf_dir):
         out = read_version(spark, lake).select(
             "doc_id", "text", "lang", "source", "n_chars"
         ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(lake, ignore_errors=True)
     return out
 
 
@@ -1698,9 +1633,6 @@ def q_versioned_changes_rows(spark, sf_dir):
     differenced files.  The surviving feed must be EXACTLY the update
     pre+post images and the deletes -- hash-gated against a DuckDB
     diff-by-key oracle."""
-    import shutil
-    import tempfile
-
     from async_stream_processing_spark.plans.versioned import (
         commit_append,
         merge_into,
@@ -1711,9 +1643,9 @@ def q_versioned_changes_rows(spark, sf_dir):
     docs = _docs(spark, sf_dir).select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
-    lake = tempfile.mkdtemp(prefix="asp_vcdfrl_")
-    shutil.rmtree(lake, ignore_errors=True)
-    try:
+    with tempfile.TemporaryDirectory(prefix="asp_vcdfrl_",
+                                     ignore_cleanup_errors=True) as tmp:
+        lake = os.path.join(tmp, "lake")
         commit_append(docs.repartition(4), lake)
         ups = docs.filter(F.col("doc_id") % 4 == 0).select(
             "doc_id",
@@ -1736,8 +1668,6 @@ def q_versioned_changes_rows(spark, sf_dir):
         out = table_changes(
             spark, lake, v1, v2, row_level=True
         ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(lake, ignore_errors=True)
     return out
 
 
@@ -1747,9 +1677,6 @@ def q_versioned_merge_schema(spark, sf_dir):
     merged head (read with merge_schema=True) must show the source rows
     with their scores and every carried row with score NULL -- untouched
     files keep their old schema on disk."""
-    import shutil
-    import tempfile
-
     from async_stream_processing_spark.plans.versioned import (
         commit_append,
         merge_into,
@@ -1759,9 +1686,9 @@ def q_versioned_merge_schema(spark, sf_dir):
     docs = _docs(spark, sf_dir).select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
-    lake = tempfile.mkdtemp(prefix="asp_vmergesc_")
-    shutil.rmtree(lake, ignore_errors=True)
-    try:
+    with tempfile.TemporaryDirectory(prefix="asp_vmergesc_",
+                                     ignore_cleanup_errors=True) as tmp:
+        lake = os.path.join(tmp, "lake")
         commit_append(
             docs.filter(F.col("doc_id") % 3 != 0).repartition(4), lake
         )
@@ -1780,8 +1707,6 @@ def q_versioned_merge_schema(spark, sf_dir):
         out = read_version(spark, lake, merge_schema=True).select(
             "doc_id", "text", "lang", "source", "n_chars", "score"
         ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(lake, ignore_errors=True)
     return out
 
 
@@ -1791,9 +1716,6 @@ def q_versioned_clone(spark, sf_dir):
     batch into the CLONE -- the clone's head must equal the SQL merge
     expression while the source lake stays byte-untouched (pinned in
     pytest; the VALUES are hash-gated here)."""
-    import shutil
-    import tempfile
-
     from async_stream_processing_spark.plans.versioned import (
         commit_append,
         merge_into,
@@ -1804,11 +1726,9 @@ def q_versioned_clone(spark, sf_dir):
     docs = _docs(spark, sf_dir).select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
-    src = tempfile.mkdtemp(prefix="asp_vclone_src_")
-    dst = tempfile.mkdtemp(prefix="asp_vclone_dst_")
-    for d in (src, dst):
-        shutil.rmtree(d, ignore_errors=True)
-    try:
+    with tempfile.TemporaryDirectory(prefix="asp_vclone_",
+                                     ignore_cleanup_errors=True) as tmp:
+        src, dst = os.path.join(tmp, "src"), os.path.join(tmp, "dst")
         for m in range(3):
             commit_append(docs.filter(F.col("doc_id") % 3 == m), src)
         shallow_clone(src, dst)
@@ -1827,9 +1747,6 @@ def q_versioned_clone(spark, sf_dir):
         merge_into(spark, dst, ups.unionByName(dels), ["doc_id"],
                    delete_col="is_delete")
         out = read_version(spark, dst).localCheckpoint(eager=True)
-    finally:
-        for d in (src, dst):
-            shutil.rmtree(d, ignore_errors=True)
     return out
 
 
@@ -1843,9 +1760,6 @@ def q_versioned_restore(spark, sf_dir):
     post-restore merge still lands on top.  Stats/bloom carry and
     point-lookup-after-restore are pinned in pytest; the VALUES are
     gated here."""
-    import shutil
-    import tempfile
-
     from async_stream_processing_spark.plans.versioned import (
         commit_append,
         merge_into,
@@ -1856,9 +1770,9 @@ def q_versioned_restore(spark, sf_dir):
     docs = _docs(spark, sf_dir).select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
-    lake = tempfile.mkdtemp(prefix="asp_vrestore_")
-    shutil.rmtree(lake, ignore_errors=True)
-    try:
+    with tempfile.TemporaryDirectory(prefix="asp_vrestore_",
+                                     ignore_cleanup_errors=True) as tmp:
+        lake = os.path.join(tmp, "lake")
         commit_append(
             docs.filter(F.col("doc_id") % 5 != 0).repartition(4), lake
         )
@@ -1875,8 +1789,6 @@ def q_versioned_restore(spark, sf_dir):
         )
         merge_into(spark, lake, good, ["doc_id"])
         out = read_version(spark, lake).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(lake, ignore_errors=True)
     return out
 
 
@@ -1890,9 +1802,6 @@ def q_versioned_delete(spark, sf_dir):
     pushdown.  The head must equal the corpus minus both predicates;
     NULL-predicate semantics and audit counters are pinned in pytest,
     the VALUES are hash-gated here."""
-    import shutil
-    import tempfile
-
     from async_stream_processing_spark.plans.versioned import (
         _read_manifest,
         commit_append,
@@ -1903,9 +1812,9 @@ def q_versioned_delete(spark, sf_dir):
     docs = _docs(spark, sf_dir).select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
-    lake = tempfile.mkdtemp(prefix="asp_vdel_")
-    shutil.rmtree(lake, ignore_errors=True)
-    try:
+    with tempfile.TemporaryDirectory(prefix="asp_vdel_",
+                                     ignore_cleanup_errors=True) as tmp:
+        lake = os.path.join(tmp, "lake")
         commit_append(
             docs.repartitionByRange(8, "doc_id"), lake,
             stats_cols=["doc_id", "n_chars"],
@@ -1918,8 +1827,6 @@ def q_versioned_delete(spark, sf_dir):
         assert m["carried_files"] >= 1, "untouched files must carry"
         delete_where(spark, lake, "n_chars < 250")
         out = read_version(spark, lake).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(lake, ignore_errors=True)
     return out
 
 
@@ -1933,9 +1840,6 @@ def q_versioned_delete_mor(spark, sf_dir):
     files (asserted: post-compact manifest carries no DVs).  The final
     head is hash-gated against the corpus minus both predicates —
     proving delete-as-metadata and delete-materialization agree."""
-    import shutil
-    import tempfile
-
     from async_stream_processing_spark.plans.versioned import (
         _read_manifest,
         commit_append,
@@ -1948,9 +1852,9 @@ def q_versioned_delete_mor(spark, sf_dir):
     docs = _docs(spark, sf_dir).select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
-    lake = tempfile.mkdtemp(prefix="asp_vdelmor_")
-    shutil.rmtree(lake, ignore_errors=True)
-    try:
+    with tempfile.TemporaryDirectory(prefix="asp_vdelmor_",
+                                     ignore_cleanup_errors=True) as tmp:
+        lake = os.path.join(tmp, "lake")
         commit_append(
             docs.repartitionByRange(8, "doc_id"), lake,
             stats_cols=["doc_id", "n_chars"],
@@ -1969,8 +1873,6 @@ def q_versioned_delete_mor(spark, sf_dir):
         mc = _read_manifest(lake, versions(lake)[-1])
         assert not mc.get("dvs"), "compact must materialize DVs away"
         out = read_version(spark, lake).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(lake, ignore_errors=True)
     return out
 
 
@@ -1983,9 +1885,6 @@ def q_versioned_update_mor(spark, sf_dir):
     (asserted: no DVs left).  Hash-gated against the same two CASE
     WHEN passes in SQL — metadata-only update and materialized update
     must agree row for row."""
-    import shutil
-    import tempfile
-
     from async_stream_processing_spark.plans.versioned import (
         _read_manifest,
         commit_append,
@@ -1998,9 +1897,9 @@ def q_versioned_update_mor(spark, sf_dir):
     docs = _docs(spark, sf_dir).select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
-    lake = tempfile.mkdtemp(prefix="asp_vupdmor_")
-    shutil.rmtree(lake, ignore_errors=True)
-    try:
+    with tempfile.TemporaryDirectory(prefix="asp_vupdmor_",
+                                     ignore_cleanup_errors=True) as tmp:
+        lake = os.path.join(tmp, "lake")
         commit_append(
             docs.repartitionByRange(8, "doc_id"), lake,
             stats_cols=["doc_id", "n_chars"],
@@ -2020,8 +1919,6 @@ def q_versioned_update_mor(spark, sf_dir):
         mc = _read_manifest(lake, versions(lake)[-1])
         assert not mc.get("dvs"), "compact must materialize DVs away"
         out = read_version(spark, lake).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(lake, ignore_errors=True)
     return out
 
 
@@ -2041,9 +1938,6 @@ def q_versioned_mv_incremental(spark, sf_dir):
     a full recompute were ~half this query's jobs, all redundant with
     the oracle hash).  This is the O(changed rows) refresh a reporting
     layer runs instead of an O(table) recompute at 100 TB."""
-    import shutil
-    import tempfile
-
     from async_stream_processing_spark.plans.mv import (
         maintain_view,
         sum_count_view,
@@ -2062,9 +1956,9 @@ def q_versioned_mv_incremental(spark, sf_dir):
         .alias("x_c"),
     )
     keys = ["user_id", "event_type"]
-    lake = tempfile.mkdtemp(prefix="asp_vmv_")
-    shutil.rmtree(lake, ignore_errors=True)
-    try:
+    with tempfile.TemporaryDirectory(prefix="asp_vmv_",
+                                     ignore_cleanup_errors=True) as tmp:
+        lake = os.path.join(tmp, "lake")
         commit_append(ev.filter(F.col("user_id") % 3 == 0), lake,
                       stats_cols=["user_id"])
         base = sum_count_view(
@@ -2077,8 +1971,6 @@ def q_versioned_mv_incremental(spark, sf_dir):
         mv = maintain_view(
             spark, lake, base, keys, "x_c", 1, 4, step=1
         ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(lake, ignore_errors=True)
     return mv
 
 
@@ -2092,9 +1984,6 @@ def q_versioned_update(spark, sf_dir):
     proving updates compose across versions.  Untouched rows must
     survive byte-identical through the rewritten files; the head is
     hash-gated against the same two CASE WHEN passes in SQL."""
-    import shutil
-    import tempfile
-
     from async_stream_processing_spark.plans.versioned import (
         commit_append,
         read_version,
@@ -2104,9 +1993,9 @@ def q_versioned_update(spark, sf_dir):
     docs = _docs(spark, sf_dir).select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
-    lake = tempfile.mkdtemp(prefix="asp_vupd_")
-    shutil.rmtree(lake, ignore_errors=True)
-    try:
+    with tempfile.TemporaryDirectory(prefix="asp_vupd_",
+                                     ignore_cleanup_errors=True) as tmp:
+        lake = os.path.join(tmp, "lake")
         commit_append(docs.repartitionByRange(4, "doc_id"), lake,
                       stats_cols=["doc_id"])
         update_where(
@@ -2118,8 +2007,6 @@ def q_versioned_update(spark, sf_dir):
             {"lang": "'jumbo'"},
         )
         out = read_version(spark, lake).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(lake, ignore_errors=True)
     return out
 
 
@@ -2131,9 +2018,6 @@ def q_versioned_history(spark, sf_dir):
     time travel are hash-checked together (a history row claiming an
     operation whose snapshot doesn't match its expected count fails the
     gate)."""
-    import shutil
-    import tempfile
-
     from async_stream_processing_spark.plans.versioned import (
         commit_append,
         history,
@@ -2145,9 +2029,9 @@ def q_versioned_history(spark, sf_dir):
     docs = _docs(spark, sf_dir).select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
-    lake = tempfile.mkdtemp(prefix="asp_vhist_")
-    shutil.rmtree(lake, ignore_errors=True)
-    try:
+    with tempfile.TemporaryDirectory(prefix="asp_vhist_",
+                                     ignore_cleanup_errors=True) as tmp:
+        lake = os.path.join(tmp, "lake")
         commit_append(docs.filter(F.col("doc_id") % 2 == 0), lake)
         commit_append(docs.filter(F.col("doc_id") % 2 != 0), lake)
         ups = docs.filter(F.col("doc_id") % 3 == 0).select(
@@ -2164,8 +2048,6 @@ def q_versioned_history(spark, sf_dir):
         out = spark.createDataFrame(
             rows, "version long, operation string, n_rows long"
         ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(lake, ignore_errors=True)
     return out
 
 
@@ -2177,41 +2059,30 @@ def q_stream_versioned_maintained(spark, sf_dir):
     and small files were rewritten/vacuumed mid-stream (maintenance
     changes bytes, never content; the exactly-once watermark survives
     vacuum)."""
-    import shutil
-    import tempfile
-
     from async_stream_processing_spark.plans.versioned import (
         read_version,
         versioned_sink,
     )
 
-    lake = tempfile.mkdtemp(prefix="asp_vmaint_")
-    src = tempfile.mkdtemp(prefix="asp_vmaint_src_")
-    ck = tempfile.mkdtemp(prefix="asp_vmaint_ck_")
-    for d in (lake, src, ck):
-        shutil.rmtree(d, ignore_errors=True)
-    try:
+    with tempfile.TemporaryDirectory(prefix="asp_vmaint_",
+                                     ignore_cleanup_errors=True) as tmp:
+        lake, ck = os.path.join(tmp, "lake"), os.path.join(tmp, "ck")
         docs = _docs(spark, sf_dir).select(
             "doc_id", "text", "lang", "source", "n_chars"
         )
         # ten source files -> ten micro-batches, so compaction fires
         # repeatedly mid-stream (the driver table is ONE file = one
         # trigger, which would never exercise the policy)
-        for p in range(10):
-            docs.filter(F.col("doc_id") % 10 == p).coalesce(1) \
-                .write.mode("append").parquet(src)
-        s = spark.readStream.schema(
-            spark.read.parquet(src).schema
-        ).option("maxFilesPerTrigger", 1).parquet(src)
+        src = land_batches(docs.withColumn("__b", F.col("doc_id") % 10),
+                           "__b", 10, os.path.join(tmp, "src"))
+        s = replay_stream(spark, src, spark.read.parquet(src).schema,
+                          max_files_per_trigger=1)
         q = versioned_sink(s, lake, ck, compact_every=4,
                            compact_target_files=1, vacuum_keep=3)
         await_drain(q, 300)
         out = read_version(spark, lake).select(
             "doc_id", "text", "lang", "source", "n_chars"
         ).localCheckpoint(eager=True)
-    finally:
-        for d in (lake, src, ck):
-            shutil.rmtree(d, ignore_errors=True)
     return out
 
 
@@ -2346,9 +2217,6 @@ def q_versioned_compact_zorder(spark, sf_dir):
     still equal the whole source table (clustering changes layout,
     never content; that the recomputed stats prune both columns is
     corruption-proven in pytest)."""
-    import shutil
-    import tempfile
-
     from async_stream_processing_spark.plans.versioned import (
         commit_append,
         compact,
@@ -2358,17 +2226,15 @@ def q_versioned_compact_zorder(spark, sf_dir):
     docs = _docs(spark, sf_dir).select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
-    lake = tempfile.mkdtemp(prefix="asp_vzorder_")
-    shutil.rmtree(lake, ignore_errors=True)
-    try:
+    with tempfile.TemporaryDirectory(prefix="asp_vzorder_",
+                                     ignore_cleanup_errors=True) as tmp:
+        lake = os.path.join(tmp, "lake")
         for m in range(3):
             commit_append(docs.filter(F.col("doc_id") % 3 == m), lake,
                           stats_cols=["doc_id", "n_chars"])
         compact(spark, lake, target_files=4,
                 cluster_by=["doc_id", "n_chars"], zorder_bits=12)
         out = read_version(spark, lake).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(lake, ignore_errors=True)
     return out
 
 
@@ -2747,14 +2613,6 @@ def llm_oracle_sql() -> dict[str, str]:
     winner = "LEAST(" + ", ".join(
         f"CASE WHEN h_{lang} = {max_hits} THEN '{lang}' END" for lang in langs
     ) + ")"
-    simhash_bits = 32
-    simhash_votes = ",\n                   ".join(
-        f"SUM((h >> {j}) & 1) AS v_{j}" for j in range(simhash_bits)
-    )
-    simhash_val = " + ".join(
-        f"(CASE WHEN v_{j} * 2 >= n_tok THEN 1 ELSE 0 END * {1 << j})"
-        for j in range(simhash_bits)
-    )
     from async_stream_processing_spark.llm.curation import (
         sql_chunk_documents,
         sql_gopher_quality,
@@ -2764,6 +2622,7 @@ def llm_oracle_sql() -> dict[str, str]:
     )
     from async_stream_processing_spark.llm.dedup import (
         sql_line_dedup,
+        sql_simhash,
         sql_substring_dups,
         sql_substring_dup_spans,
         sql_substring_dedup_apply,
@@ -3397,18 +3256,7 @@ def llm_oracle_sql() -> dict[str, str]:
             WHERE CAST(n_common AS DOUBLE)
                       / CAST(LEAST(za.n, zb.n) AS DOUBLE) >= 0.4
         """,
-        "simhash_fingerprint": f"""
-            WITH toks AS (
-                SELECT DISTINCT doc_id,
-                       unnest(string_split_regex(lower(trim(text)), ' +')) AS tok
-                FROM documents),
-            hashed AS (SELECT doc_id, {sql_stable_hash60('tok')} AS h FROM toks),
-            votes AS (SELECT doc_id, COUNT(*) AS n_tok,
-                   {simhash_votes}
-                FROM hashed GROUP BY doc_id)
-            SELECT doc_id, CAST({simhash_val} AS BIGINT) AS simhash, n_tok
-            FROM votes
-        """,
+        "simhash_fingerprint": sql_simhash(bits=32),
         "knn_range_search": sql_range_search(n_queries=10, tau=0.25),
         "knn_bruteforce": f"""
             WITH q AS (SELECT vec_id AS query_id, embedding AS q_emb

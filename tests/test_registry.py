@@ -4,7 +4,9 @@ session is needed: the registry only maps names to plan builders."""
 
 from __future__ import annotations
 
+import ast
 import hashlib
+from pathlib import Path
 
 import pytest
 
@@ -62,3 +64,44 @@ def test_gate_window():
     from tools import check_window
 
     check_window.main()
+
+
+ROOT = Path(__file__).resolve().parents[1]
+
+
+def _dotted(func: ast.expr) -> str:
+    if isinstance(func, ast.Attribute):
+        return f"{_dotted(func.value)}.{func.attr}"
+    return func.id if isinstance(func, ast.Name) else ""
+
+
+def _sets_max_files(call: ast.Call) -> bool:
+    args = [a.value for a in call.args if isinstance(a, ast.Constant)]
+    return _dotted(call.func).endswith((".option", ".options")) and (
+        "maxFilesPerTrigger" in args
+        or any(k.arg == "maxFilesPerTrigger" for k in call.keywords)
+    )
+
+
+def test_one_way_to_land_replay_batches_and_scratch_dirs():
+    """Replay batch files are landed only by ``land_batches`` and read
+    back only through ``replay_stream``: no registry, fuzzer or example
+    code sets mtimes or ``maxFilesPerTrigger`` itself.  And a query's
+    scratch lake is one ``TemporaryDirectory`` scope, so no ``q_*``
+    function reserves a directory with ``mkdtemp``."""
+    files = ["__spark_entry__.py", "llm_queries.py", "tools/fuzz_folds.py",
+             *sorted(str(p.relative_to(ROOT))
+                     for p in (ROOT / "examples").glob("*.py"))]
+    bad = []
+    for rel in files:
+        tree = ast.parse((ROOT / rel).read_text())
+        for call in (n for n in ast.walk(tree) if isinstance(n, ast.Call)):
+            if _dotted(call.func) in ("os.utime", "utime") or \
+                    _sets_max_files(call):
+                bad.append(f"{rel}:{call.lineno}")
+        for fn in ast.walk(tree):
+            if isinstance(fn, ast.FunctionDef) and fn.name.startswith("q_"):
+                bad += [f"{rel}:{n.lineno} {fn.name}" for n in ast.walk(fn)
+                        if isinstance(n, ast.Call)
+                        and _dotted(n.func) == "tempfile.mkdtemp"]
+    assert not bad, bad

@@ -1025,15 +1025,46 @@ def test_reorder_buffer_hot_key_state_bounded():
 def test_drain_timeout_raises_and_stops_query(spark, tmp_path, output_mode):
     """A drain that outlives its timeout must fail, not hand back a
     partial snapshot, and must leave no stream running behind it."""
+    import os
+    import tempfile
+
     from async_stream_processing_spark.streaming.replay import drain
 
     src = str(tmp_path / "src")
     _write_events(spark, src, _rows(40), n_files=4)
     counts = replay_stream(spark, src, EVENTS_SCHEMA,
                            max_files_per_trigger=1).groupBy("user_id").count()
+    before = set(os.listdir(tempfile.gettempdir()))
     with pytest.raises(TimeoutError, match="lastProgress"):
         drain(counts, output_mode=output_mode, timeout_s=0.001)
     assert spark.streams.active == []
+    left = set(os.listdir(tempfile.gettempdir())) - before
+    assert not [e for e in left if e.startswith("asp_drain_")], left
+
+
+def test_land_batches_replays_one_batch_per_bucket(spark, tmp_path):
+    """``land_batches`` lands each bucket as one file, and
+    ``replay_stream`` at one file per trigger delivers them as that many
+    micro-batches, in bucket order, each holding its bucket's rows."""
+    from async_stream_processing_spark.streaming.replay import land_batches
+
+    rows = _rows(12)
+    df = spark.createDataFrame(rows, EVENTS_SCHEMA).withColumn(
+        "b", (F.col("value") - 10).cast("int") % 3
+    )
+    d = land_batches(df, "b", 3, str(tmp_path / "landed"))
+    batches = []
+
+    def cb(batch_df, batch_id):
+        batches.append(sorted(r["value"] for r in batch_df.collect()))
+
+    q = process_stream(
+        replay_stream(spark, d, EVENTS_SCHEMA, max_files_per_trigger=1), cb
+    )
+    q.awaitTermination(120)
+    assert batches == [
+        sorted(r[3] for r in rows if int(r[3] - 10) % 3 == b) for b in range(3)
+    ]
 
 
 def test_drain_partitions_cover_only_start(spark, tmp_path):

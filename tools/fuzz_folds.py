@@ -25,9 +25,7 @@ Also driven by tests/test_streaming.py with pinned seeds.
 
 from __future__ import annotations
 
-import os
 import random
-import shutil
 import sys
 import tempfile
 
@@ -40,45 +38,6 @@ from async_stream_processing_spark.streaming.folds import (  # noqa: E402
 )
 
 CENTS = "CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)"
-
-
-def _split_write(spark, df, n_parts: int, jitter_s: int = 0) -> str:
-    """Land ``df`` as n_parts files with ascending mtimes (one
-    micro-batch each, oldest-first).  ``jitter_s=0``: strict
-    (ts, event_id) order across files (the ordered folds' contract);
-    ``jitter_s>0``: files bucket by a deterministically JITTERED event
-    time, so consecutive micro-batches interleave out of order within
-    ±jitter — the reorder-buffered twins' fixture shape."""
-    from pyspark.sql import Window
-
-    d = tempfile.mkdtemp(prefix="asp_foldfuzz_")
-    if jitter_s:
-        j_us = jitter_s * 1_000_000
-        jit = (F.pmod(F.xxhash64("event_id"), F.lit(2 * j_us + 1))
-               - F.lit(j_us))
-        key = F.unix_micros(F.col("ts")) + jit
-        parts = df.withColumn(
-            "__b", F.ntile(n_parts).over(Window.orderBy(key, "event_id")) - 1
-        )
-    else:
-        parts = df.withColumn(
-            "__b",
-            F.ntile(n_parts).over(Window.orderBy("ts", "event_id")) - 1,
-        )
-    sub = os.path.join(d, "__by_bucket")
-    parts.repartition(n_parts, "__b").write.partitionBy("__b") \
-        .mode("overwrite").parquet(sub)
-    for i in range(n_parts):
-        bdir = os.path.join(sub, f"__b={i}")
-        part = next(
-            f for f in os.listdir(bdir)
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        )
-        dst = os.path.join(d, f"events_{i:03d}.parquet")
-        os.replace(os.path.join(bdir, part), dst)
-        os.utime(dst, (1_600_000_000 + i * 10, 1_600_000_000 + i * 10))
-    shutil.rmtree(sub)
-    return d
 
 
 def _arr(x_alias: str):
@@ -289,6 +248,8 @@ def _case(kind: str, rng: random.Random, df):
 
 
 def run_case(spark, rng: random.Random, sf_dir: str) -> str:
+    from pyspark.sql import Window
+
     from async_stream_processing_spark.sources.parquet import load_table
     from async_stream_processing_spark.streaming.folds import (
         FOLD_KINDS,
@@ -298,7 +259,11 @@ def run_case(spark, rng: random.Random, sf_dir: str) -> str:
     from async_stream_processing_spark.streaming.reorder import (
         reordered_fold_stream,
     )
-    from async_stream_processing_spark.streaming.replay import drain
+    from async_stream_processing_spark.streaming.replay import (
+        drain,
+        land_batches,
+        replay_stream,
+    )
 
     pred_name, pred = rng.choice(PREDS)
     n_parts = rng.choice([2, 3, 4])
@@ -309,13 +274,23 @@ def run_case(spark, rng: random.Random, sf_dir: str) -> str:
     shuffled = rng.random() < 0.5
     delay = "18000 seconds"
     df = load_table(spark, sf_dir, "events").filter(F.expr(pred))
-    d = _split_write(spark, df, n_parts, jitter_s=7200 if shuffled else 0)
-    try:
-        schema = spark.read.parquet(d).schema
-        src = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1).parquet(d)
-        )
+    # n_parts files, one micro-batch each: strict (ts, event_id) order
+    # across files, or bucketed by a deterministically JITTERED event
+    # time so consecutive micro-batches interleave out of order
+    key = F.col("ts")
+    if shuffled:
+        j_us = 7200 * 1_000_000
+        jit = (F.pmod(F.xxhash64("event_id"), F.lit(2 * j_us + 1))
+               - F.lit(j_us))
+        key = F.unix_micros(F.col("ts")) + jit
+    bucketed = df.withColumn(
+        "__b", F.ntile(n_parts).over(Window.orderBy(key, "event_id")) - 1
+    )
+    with tempfile.TemporaryDirectory(prefix="asp_foldfuzz_",
+                                     ignore_cleanup_errors=True) as tmp:
+        d = land_batches(bucketed, "__b", n_parts, tmp)
+        src = replay_stream(spark, d, spark.read.parquet(d).schema,
+                            max_files_per_trigger=1)
         kw, label, want, project = _case(kind, rng, df)
         s = src.select("ts", "event_id", "user_id",
                        F.expr(CENTS).alias(FOLD_KINDS[kind].value))
@@ -326,16 +301,14 @@ def run_case(spark, rng: random.Random, sf_dir: str) -> str:
         got = project(final_rows(drain(folded, output_mode="append"),
                                  kind, reordered=shuffled))
         g = {tuple(r) for r in got.collect()}
-        w = {tuple(r) for r in want.collect()}
-        assert g == w, (
-            f"{label} pred={pred_name} parts={n_parts}: "
-            f"extra={list(g - w)[:3]} missing={list(w - g)[:3]}"
-        )
-        shape = "shuffled" if shuffled else "ordered"
-        return (f"{label:24s} pred={pred_name:12s} parts={n_parts} "
-                f"{shape:8s} keys={len(w)}")
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    w = {tuple(r) for r in want.collect()}
+    assert g == w, (
+        f"{label} pred={pred_name} parts={n_parts}: "
+        f"extra={list(g - w)[:3]} missing={list(w - g)[:3]}"
+    )
+    shape = "shuffled" if shuffled else "ordered"
+    return (f"{label:24s} pred={pred_name:12s} parts={n_parts} "
+            f"{shape:8s} keys={len(w)}")
 
 
 def main() -> None:
