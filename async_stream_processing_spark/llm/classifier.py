@@ -256,7 +256,7 @@ def perceptron_eval(
     holdout_mod: int = 5,
 ) -> DataFrame:
     """Held-out eval of the quality classifier -- the MEASURE row that
-    decides whether the trained scorer ships (the ann_recall discipline
+    decides whether the trained scorer ships (the recall_at_k discipline
     applied to the classifier family): train on ``doc_id % holdout_mod
     != 0``, score the held-out rest, report the confusion counts and
     precision / recall / accuracy against the Gopher teacher labels.

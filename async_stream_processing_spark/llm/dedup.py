@@ -434,10 +434,6 @@ def minhash_dedup_pairs(
     )
 
 
-_PAIRS_CACHE: dict = {}
-_PAIRS_CACHE_MAX = 8
-
-
 def verified_pairs_cached(
     docs: DataFrame,
     threshold: float = 0.25,
@@ -457,38 +453,16 @@ def verified_pairs_cached(
     structure a production pipeline would use (compute pairs once,
     write them, fan consumers out from the table).
 
-    Cache key = (Spark application, semantic hash of the input plan,
-    input-file fingerprint, params); ``sameSemantics`` re-verifies on
-    hit so a hash collision can only cause a recompute, never a wrong
-    reuse, and the file fingerprint (paths+mtimes+sizes, round-9
-    advice) makes a rewritten/appended source MISS instead of serving
-    the stale pair graph.  Falls back to a plain recompute whenever the
-    plan can't be hashed (e.g. Connect)."""
-    from ._cache import data_fingerprint
+    Keyed and re-verified by :func:`._cache.cached_artifact` (plan
+    semantics plus input-file fingerprint), so a rewritten or appended
+    source recomputes instead of serving the stale pair graph."""
+    from ._cache import cached_artifact
 
-    try:
-        key = (
-            docs.sparkSession.sparkContext.applicationId,
-            docs.semanticHash(), data_fingerprint(docs),
-            threshold, n_hashes, bands, hash_mode,
-        )
-    except Exception:
-        key = None
-    if key is not None and key in _PAIRS_CACHE:
-        stored_docs, pairs = _PAIRS_CACHE[key]
-        try:
-            if docs.sameSemantics(stored_docs):
-                return pairs
-        except Exception:
-            pass
-    pairs = minhash_dedup_pairs(
-        docs, threshold, n_hashes, bands, hash_mode
-    ).localCheckpoint(eager=True)
-    if key is not None:
-        while len(_PAIRS_CACHE) >= _PAIRS_CACHE_MAX:
-            _PAIRS_CACHE.pop(next(iter(_PAIRS_CACHE)))
-        _PAIRS_CACHE[key] = (docs, pairs)
-    return pairs
+    return cached_artifact(
+        docs, (threshold, n_hashes, bands, hash_mode),
+        lambda: minhash_dedup_pairs(
+            docs, threshold, n_hashes, bands, hash_mode),
+    )
 
 
 def corpus_bucket_sets(
@@ -598,7 +572,7 @@ def lsh_pair_recall(
     hash_mode: str = "md5",
 ) -> DataFrame:
     """Candidate-quality eval of the MinHash-LSH blocker against exact
-    ground truth -- the dedup counterpart of ``similarity.ann_recall``
+    ground truth -- the dedup counterpart of ``similarity.recall_at_k``
     ("measure, don't guess"): before trusting banded LSH to replace the
     exact shared-shingle join at scale, measure what fraction of true
     >=threshold Jaccard pairs its candidate set covers (recall) and how

@@ -16,6 +16,14 @@
   O(N*Q / 2^planes) with recall tunable by ``n_planes`` / multi-probe.
   At 100 TB: bucket the corpus once (write bucketed parquet), then each
   query batch joins on ``bucket`` -- a co-partitioned join, no broadcast.
+* :func:`recall_at_k` -- the one eval harness: any index's top-k against
+  the exact top-k (computed once per session by
+  :func:`knn_bruteforce_cached`).
+* :func:`exact_rerank` -- the one exact second stage: cosine over a
+  per-query shortlist from any cheap index, then top-k.
+
+Each has one DuckDB twin (``sql_knn_bruteforce``, ``sql_recall_at_k``,
+``sql_exact_rerank``); every ANN oracle is composed of these fragments.
 """
 
 from __future__ import annotations
@@ -66,6 +74,61 @@ def sql_cosine(a: str, b: str) -> str:
     return f"({sql_dot(a, b)} / ({sql_norm(a)} * {sql_norm(b)}))"
 
 
+def _query_side(
+    embeddings: DataFrame, n_queries: int, *extra: Column
+) -> DataFrame:
+    """The first ``n_queries`` vectors as (query_id, q_emb, q_n, *extra).
+
+    Norms are hoisted to one column per side: each (query, candidate)
+    pair costs a dot and one multiply/divide, not two norm
+    re-derivations.  ``dot/(q_n*c_n)`` is the expression tree
+    :func:`cosine` builds, so :func:`_hoisted_cos` is bit-identical."""
+    return embeddings.filter(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_emb"),
+        norm(F.col("embedding")).alias("q_n"),
+        *extra,
+    )
+
+
+def _corpus_side(embeddings: DataFrame, *extra: Column) -> DataFrame:
+    """Every vector as (neighbor_id, c_emb, c_n, *extra)."""
+    return embeddings.select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("c_emb"),
+        norm(F.col("embedding")).alias("c_n"),
+        *extra,
+    )
+
+
+def _hoisted_cos() -> Column:
+    return dot(F.col("q_emb"), F.col("c_emb")) / (F.col("q_n") * F.col("c_n"))
+
+
+def _cosine_topk(scored: DataFrame, k: int) -> DataFrame:
+    """Per-query top-k of scored (query, candidate) pairs, ties broken
+    (cosine DESC, neighbor_id ASC).  Bounded (r8 verdict item 5):
+    partial per-partition rank then merge, no corpus-sized exchange
+    into n_queries partitions."""
+    return topk_by_group(
+        scored.withColumn("cos", _hoisted_cos()),
+        ["query_id"], [F.desc("cos"), F.asc("neighbor_id")], k,
+    )
+
+
+def _sql_cosine_topk(scored: str, k: int) -> str:
+    """Per-query top-k of a (query_id, neighbor_id, cosine) query, same
+    tie rule as :func:`_cosine_topk`."""
+    return f"""
+        SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank, cosine
+        FROM (SELECT *, ROW_NUMBER() OVER (
+                  PARTITION BY query_id
+                  ORDER BY cosine DESC, neighbor_id ASC) AS rank
+              FROM ({scored}))
+        WHERE rank <= {k}
+    """
+
+
 def knn_bruteforce(
     embeddings: DataFrame, n_queries: int = 10, k: int = 5
 ) -> DataFrame:
@@ -74,83 +137,135 @@ def knn_bruteforce(
     The query side is broadcast (it is small by construction); the corpus
     streams through one stage -- no shuffle of the corpus itself.
     """
-    # norms hoisted to one column per side: each (query, candidate) pair
-    # costs a dot + one multiply/divide, not two norm re-derivations
-    # (dot/(qn*cn) is the same expression tree cosine() builds, so the
-    # value is bit-identical)
-    q = embeddings.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        norm(F.col("embedding")).alias("q_n"),
+    scored = _corpus_side(embeddings).join(
+        F.broadcast(_query_side(embeddings, n_queries)),
+        F.col("neighbor_id") != F.col("query_id"),
     )
-    c = embeddings.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_emb"),
-        norm(F.col("embedding")).alias("c_n"),
+    return _cosine_topk(scored, k).select(
+        "query_id", "neighbor_id", "rank", F.col("cos").alias("cosine")
     )
-    scored = (
-        c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cos",
-            dot(F.col("q_emb"), F.col("c_emb"))
-            / (F.col("q_n") * F.col("c_n")),
-        )
-    )
-    # bounded top-k (r8 verdict item 5): partial per-partition rank then
-    # merge — no corpus-sized exchange into n_queries partitions
-    return topk_by_group(
-        scored, ["query_id"], [F.desc("cos"), F.asc("neighbor_id")], k
-    ).select("query_id", "neighbor_id", "rank", F.col("cos").alias("cosine"))
 
 
-
-_GT_CACHE: dict = {}
+def sql_knn_bruteforce(
+    n_queries: int = 10, k: int = 5, src: str = "embeddings"
+) -> str:
+    """DuckDB twin of :func:`knn_bruteforce`: the one exact top-k
+    fragment every ANN oracle ranks its ground truth with."""
+    return _sql_cosine_topk(f"""
+        SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
+               {sql_cosine('q.embedding', 'e.embedding')} AS cosine
+        FROM {src} e
+        CROSS JOIN (SELECT * FROM {src} WHERE vec_id < {n_queries}) q
+        WHERE e.vec_id != q.vec_id""", k)
 
 
 def knn_bruteforce_cached(
     embeddings: DataFrame, n_queries: int = 10, k: int = 5
 ) -> DataFrame:
-    """The exact top-k ground truth as ONE session-scoped persisted
-    artifact (the ``llm.dedup.verified_pairs_cached`` discipline):
-    every recall eval on the ladder (LSH, 1-bit Hamming, SQ8, PQ,
-    rotated PQ, IVF-PQ, Matryoshka prefix) compares against the SAME
-    (corpus, n_queries, k) exact search, and each previously re-ran the
-    full brute-force pass.  The artifact is n_queries*k rows (tiny), so
-    keeping it localCheckpointed costs nothing and every eval after the
-    first reads a materialized relation — a production eval harness
-    computes ground truth once and writes it, for the same reason.
+    """The exact top-k ground truth as ONE session-scoped artifact
+    (:func:`._cache.cached_artifact`): every recall eval on the ladder
+    compares against the SAME (corpus, n_queries, k) exact search, and
+    the artifact is n_queries*k rows, so every eval after the first
+    reads a materialized relation -- a production eval harness computes
+    ground truth once and writes it, for the same reason."""
+    from ._cache import cached_artifact
 
-    ``sameSemantics`` re-verifies every cache hit, so a semanticHash
-    collision can only cause a recompute, never a wrong reuse; the
-    input-file fingerprint (paths+mtimes+sizes, round-9 advice) makes a
-    rewritten/appended source MISS instead of serving stale ground
-    truth; falls back to a plain recompute when the plan can't be
-    hashed."""
-    from ._cache import data_fingerprint
+    return cached_artifact(
+        embeddings, (n_queries, k),
+        lambda: knn_bruteforce(embeddings, n_queries=n_queries, k=k),
+    )
 
-    try:
-        key = (
-            embeddings.sparkSession.sparkContext.applicationId,
-            embeddings.semanticHash(), data_fingerprint(embeddings),
-            n_queries, k,
+
+def recall_at_k(
+    embeddings: DataFrame, found: DataFrame, n_queries: int, k: int
+) -> DataFrame:
+    """Recall@k of any index's top-k ``found`` (query_id, neighbor_id,
+    ...) against the exact cosine top-k of ``embeddings`` -- the one
+    eval harness for every rung of the ANN ladder (LSH, 1-bit Hamming,
+    SQ8, PQ, rotated PQ, IVF-PQ, Matryoshka prefix, rerank), so their
+    recall rows are measured the same way ("measure, don't guess").
+
+    Per query: how many of the true top-k neighbors ``found`` returned,
+    and that count over k.  Ground truth is n_queries * k rows (tiny),
+    so the left join broadcasts and the expensive side remains whatever
+    the index search costs."""
+    bf = knn_bruteforce_cached(embeddings, n_queries=n_queries, k=k).select(
+        "query_id", "neighbor_id"
+    )
+    idx = found.select("query_id", F.col("neighbor_id").alias("got_id"))
+    hits = (
+        bf.join(
+            idx,
+            (bf["query_id"] == idx["query_id"])
+            & (bf["neighbor_id"] == idx["got_id"]),
+            "left",
         )
-    except Exception:
-        key = None
-    if key is not None and key in _GT_CACHE:
-        stored, gt = _GT_CACHE[key]
-        try:
-            if embeddings.sameSemantics(stored):
-                return gt
-        except Exception:
-            pass
-    gt = knn_bruteforce(
-        embeddings, n_queries=n_queries, k=k
-    ).localCheckpoint(eager=True)
-    if key is not None:
-        while len(_GT_CACHE) >= 8:
-            _GT_CACHE.pop(next(iter(_GT_CACHE)))
-        _GT_CACHE[key] = (embeddings, gt)
-    return gt
+        .groupBy(bf["query_id"])
+        .agg(F.count("got_id").alias("n_hits"))
+    )
+    return hits.select(
+        "query_id",
+        "n_hits",
+        (F.col("n_hits").cast("double") / F.lit(float(k))).alias("recall"),
+    )
+
+
+def sql_recall_at_k(
+    found_sql: str, n_queries: int, k: int, src: str = "embeddings"
+) -> str:
+    """DuckDB twin of :func:`recall_at_k` over any top-k query text."""
+    return f"""
+        WITH bf AS ({sql_knn_bruteforce(n_queries, k, src)}),
+        idx AS ({found_sql})
+        SELECT bf.query_id, COUNT(idx.neighbor_id) AS n_hits,
+               CAST(COUNT(idx.neighbor_id) AS DOUBLE) / {float(k)} AS recall
+        FROM bf LEFT JOIN idx
+          ON idx.query_id = bf.query_id
+         AND idx.neighbor_id = bf.neighbor_id
+        GROUP BY bf.query_id
+    """
+
+
+def exact_rerank(
+    embeddings: DataFrame, cand: DataFrame, n_queries: int, k: int
+) -> DataFrame:
+    """Exact cosine top-k over a per-query candidate shortlist ``cand``
+    (query_id, neighbor_id, ...) -- the second stage of every
+    shortlist-then-rerank pipeline (:func:`knn_refine`,
+    :func:`knn_hamming_rerank`).  Float math touches only the
+    shortlist, never the corpus.
+
+    Plan: the shortlist (n_queries * R rows) broadcasts back onto the
+    corpus scan, so the rerank reads only matching rows.  A candidate's
+    norm is taken after that join (per shortlisted pair, not per corpus
+    vector), the query norms are hoisted, and the top-k is the bounded
+    :func:`_cosine_topk`.  Output: (query_id, neighbor_id, rank,
+    cosine)."""
+    scored = (
+        embeddings.select(
+            F.col("vec_id").alias("neighbor_id"),
+            F.col("embedding").alias("c_emb"),
+        )
+        .join(F.broadcast(cand.select("query_id", "neighbor_id")),
+              "neighbor_id")
+        .withColumn("c_n", norm(F.col("c_emb")))
+        .join(F.broadcast(_query_side(embeddings, n_queries)), "query_id")
+    )
+    return _cosine_topk(scored, k).select(
+        "query_id", "neighbor_id", "rank", F.col("cos").alias("cosine")
+    )
+
+
+def sql_exact_rerank(cand_sql: str, k: int, src: str = "embeddings") -> str:
+    """DuckDB twin of :func:`exact_rerank` over any shortlist query."""
+    return _sql_cosine_topk(f"""
+        WITH cand AS ({cand_sql})
+        SELECT c.query_id, c.neighbor_id,
+               {sql_cosine('q.embedding', 'e.embedding')} AS cosine
+        FROM cand c
+        JOIN {src} e ON e.vec_id = c.neighbor_id
+        JOIN {src} q ON q.vec_id = c.query_id""", k)
+
 
 def range_search(
     embeddings: DataFrame, n_queries: int = 10, tau: float = 0.5
@@ -166,23 +281,11 @@ def range_search(
     exchange-free (pinned by test).  At 100 TB the same predicate runs
     on the IVF-probed shortlist (ivfpq_search) instead of the full
     scan; the threshold semantics are identical."""
-    q = embeddings.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        norm(F.col("embedding")).alias("q_n"),
-    )
-    c = embeddings.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_emb"),
-        norm(F.col("embedding")).alias("c_n"),
-    )
     return (
-        c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cos",
-            dot(F.col("q_emb"), F.col("c_emb"))
-            / (F.col("q_n") * F.col("c_n")),
-        )
+        _corpus_side(embeddings)
+        .join(F.broadcast(_query_side(embeddings, n_queries)),
+              F.col("neighbor_id") != F.col("query_id"))
+        .withColumn("cos", _hoisted_cos())
         .filter(F.col("cos") >= tau)
         .select("query_id", "neighbor_id", F.col("cos").alias("cosine"))
     )
@@ -219,29 +322,15 @@ def hard_negatives(
     window over the scored pairs.  At 100 TB the brute-force scorer swaps
     for :func:`ivfpq_search`'s shortlist with this same label predicate
     as the post-filter."""
-    q = embeddings.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        norm(F.col("embedding")).alias("q_n"),
-        F.col("label").alias("query_label"),
-    )
-    c = embeddings.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_emb"),
-        norm(F.col("embedding")).alias("c_n"),
-        F.col("label").alias("neighbor_label"),
-    )
+    q = _query_side(
+        embeddings, n_queries, F.col("label").alias("query_label"))
+    c = _corpus_side(embeddings, F.col("label").alias("neighbor_label"))
     scored = c.join(
         F.broadcast(q),
         (F.col("neighbor_id") != F.col("query_id"))
         & (F.col("neighbor_label") != F.col("query_label")),
-    ).withColumn(
-        "cos",
-        dot(F.col("q_emb"), F.col("c_emb")) / (F.col("q_n") * F.col("c_n")),
     )
-    return topk_by_group(
-        scored, ["query_id"], [F.desc("cos"), F.asc("neighbor_id")], k
-    ).select(
+    return _cosine_topk(scored, k).select(
         "query_id",
         "neighbor_id",
         "query_label",
@@ -317,30 +406,29 @@ def knn_lsh(
     """Approximate top-k: candidates restricted to the query's LSH bucket."""
     b = lsh_buckets(embeddings, n_planes)
     withb = embeddings.join(b.select("vec_id", "bucket"), "vec_id")
-    q = withb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        norm(F.col("embedding")).alias("q_n"),
-        F.col("bucket"),
-    )
-    c = withb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_emb"),
-        norm(F.col("embedding")).alias("c_n"),
-        F.col("bucket"),
-    )
     scored = (
-        c.join(q, "bucket")
+        _corpus_side(withb, F.col("bucket"))
+        .join(_query_side(withb, n_queries, F.col("bucket")), "bucket")
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cos",
-            dot(F.col("q_emb"), F.col("c_emb"))
-            / (F.col("q_n") * F.col("c_n")),
-        )
     )
-    return topk_by_group(
-        scored, ["query_id"], [F.desc("cos"), F.asc("neighbor_id")], k
-    ).select("query_id", "neighbor_id", "rank", F.col("cos").alias("cosine"))
+    return _cosine_topk(scored, k).select(
+        "query_id", "neighbor_id", "rank", F.col("cos").alias("cosine")
+    )
+
+
+def sql_knn_lsh(
+    n_queries: int = 10, k: int = 3, n_planes: int = 6,
+    src: str = "embeddings",
+) -> str:
+    """DuckDB twin of :func:`knn_lsh` (same buckets, same tie rule)."""
+    return _sql_cosine_topk(f"""
+        WITH b AS (SELECT vec_id, embedding,
+                          {sql_lsh_bucket('embedding', n_planes)} AS bucket
+                   FROM {src})
+        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+               {sql_cosine('q.embedding', 'c.embedding')} AS cosine
+        FROM b c JOIN b q ON c.bucket = q.bucket
+        WHERE q.vec_id < {n_queries} AND c.vec_id != q.vec_id""", k)
 
 
 def _seed_centroids(embeddings: DataFrame, n_centroids: int) -> DataFrame:
@@ -613,38 +701,17 @@ def knn_lsh_multiprobe(
         F.col("bucket"),
         *[F.col("bucket").bitwiseXOR(F.lit(1 << j)) for j in range(n_planes)],
     )
-    q = (
-        withb.filter(F.col("vec_id") < n_queries)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            norm(F.col("embedding")).alias("q_n"),
-            F.explode(probes).alias("bucket"),
-        )
-    )
-    c = withb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_emb"),
-        norm(F.col("embedding")).alias("c_n"),
-        F.col("bucket"),
-    )
-    # norms hoisted once per side (q_n/c_n are functions of the embedding
-    # columns, so carrying them through the distinct leaves the distinct
-    # pair set unchanged); dot/(q_n*c_n) == cosine() bit-for-bit
+    q = _query_side(withb, n_queries, F.explode(probes).alias("bucket"))
+    # q_n/c_n are functions of the embedding columns, so carrying them
+    # through the distinct leaves the distinct pair set unchanged
     scored = (
-        c.join(q, "bucket")
+        _corpus_side(withb, F.col("bucket"))
+        .join(q, "bucket")
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id", "q_emb", "c_emb", "q_n", "c_n")
         .distinct()
-        .withColumn(
-            "cos",
-            dot(F.col("q_emb"), F.col("c_emb"))
-            / (F.col("q_n") * F.col("c_n")),
-        )
     )
-    return topk_by_group(
-        scored, ["query_id"], [F.desc("cos"), F.asc("neighbor_id")], k
-    ).select(
+    return _cosine_topk(scored, k).select(
         "query_id", "neighbor_id", "rank", F.col("cos").alias("cosine"),
     )
 
@@ -933,45 +1000,6 @@ def sql_knn_pq_adc(
         SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank, adc_q
         FROM ranked WHERE rank <= {k}
     """
-
-
-def ann_recall(
-    embeddings: DataFrame,
-    n_queries: int = 10,
-    k: int = 3,
-    n_planes: int = 6,
-) -> DataFrame:
-    """Recall@k of the LSH index against exact brute force -- the eval
-    harness every approximate index needs before it replaces the exact
-    path ("measure, don't guess"): per query, how many of the true top-k
-    cosine neighbors the bucketed search returned.
-
-    Composition of two existing operators joined on (query, neighbor);
-    ground truth is n_queries * k rows (tiny), so the join broadcasts
-    and the expensive side remains whatever the index search costs.  A
-    recall regression after re-tuning n_planes shows up here as a
-    changed row, not a hunch."""
-    bf = knn_bruteforce_cached(embeddings, n_queries=n_queries, k=k).select(
-        "query_id", "neighbor_id"
-    )
-    idx = knn_lsh(
-        embeddings, n_queries=n_queries, k=k, n_planes=n_planes
-    ).select("query_id", F.col("neighbor_id").alias("got_id"))
-    hits = (
-        bf.join(
-            idx,
-            (bf["query_id"] == idx["query_id"])
-            & (bf["neighbor_id"] == idx["got_id"]),
-            "left",
-        )
-        .groupBy(bf["query_id"])
-        .agg(F.count("got_id").alias("n_hits"))
-    )
-    return hits.select(
-        "query_id",
-        "n_hits",
-        (F.col("n_hits").cast("double") / F.lit(float(k))).alias("recall"),
-    )
 
 
 def pq_dedup_groups(
@@ -1678,39 +1706,14 @@ def knn_refine(
     key, which is why PQ stores keep the raw vectors row-addressable.
 
     Portability: the shortlist is :func:`knn_pq_adc`'s integer-exact
-    ADC ranking; the re-rank is the same fixed-IEEE-tree ``cosine``
-    every exact-kNN query here uses, so both stages replay identically
-    in the oracle.  Output: (query_id, neighbor_id, rank, cos_exact).
+    ADC ranking; the re-rank is :func:`exact_rerank`, the same
+    fixed-IEEE-tree cosine every exact-kNN query here uses, so both
+    stages replay identically in the oracle.  Output: (query_id,
+    neighbor_id, rank, cos_exact).
     """
     short = knn_pq_adc(embeddings, n_queries, shortlist, m, ksub, d)
-    q = embeddings.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
-    cand = (
-        short.select("query_id", "neighbor_id")
-        .join(
-            embeddings.select(
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("embedding").alias("n_emb"),
-            ),
-            "neighbor_id",
-        )
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine(F.col("q_emb"), F.col("n_emb")).alias("cos_exact"),
-        )
-    )
-    # plain window is fine here: the rerank input is the R-candidate
-    # shortlist (R*n_queries rows), already bounded upstream
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_exact"), F.asc("neighbor_id")
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos_exact")
+    return exact_rerank(embeddings, short, n_queries, k).withColumnRenamed(
+        "cosine", "cos_exact"
     )
 
 
@@ -1725,96 +1728,10 @@ def sql_knn_refine(
 ) -> str:
     """DuckDB twin of :func:`knn_refine` (ADC shortlist CTE + exact
     cosine re-rank)."""
-    inner = sql_knn_pq_adc(n_queries, shortlist, m, ksub, d, src)
+    short = sql_knn_pq_adc(n_queries, shortlist, m, ksub, d, src)
     return f"""
-        WITH short AS ({inner}),
-        rer AS (
-            SELECT s.query_id, s.neighbor_id,
-                   {sql_cosine('q.embedding', 'e.embedding')} AS cos_exact
-            FROM short s
-            JOIN {src} e ON e.vec_id = s.neighbor_id
-            JOIN {src} q ON q.vec_id = s.query_id),
-        ranked AS (
-            SELECT query_id, neighbor_id, cos_exact,
-                   ROW_NUMBER() OVER (PARTITION BY query_id
-                       ORDER BY cos_exact DESC, neighbor_id ASC) AS rank
-            FROM rer)
-        SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank,
-               cos_exact
-        FROM ranked WHERE rank <= {k}
-    """
-
-
-def ivfpq_recall(
-    embeddings: DataFrame,
-    n_queries: int = 10,
-    k: int = 5,
-    n_coarse: int = 8,
-    nprobe: int = 2,
-    m: int = 8,
-    ksub: int = 16,
-    d: int = 64,
-) -> DataFrame:
-    """Recall@k of the IVF-PQ index against exact brute force -- the
-    same eval-harness shape as :func:`ann_recall`, applied to the
-    billion-vector composition: how much of the true top-k does the
-    nprobe-cell + residual-code search return?  Re-tuning nprobe /
-    n_coarse / m shows up here as a changed row ("measure, don't
-    guess"), which is how the 100 TB index's parameters get chosen on a
-    slice before the full build."""
-    bf = knn_bruteforce_cached(embeddings, n_queries=n_queries, k=k).select(
-        "query_id", "neighbor_id"
-    )
-    idx = knn_ivfpq(
-        embeddings, n_queries, k, n_coarse, nprobe, m, ksub, d
-    ).select("query_id", F.col("neighbor_id").alias("got_id"))
-    hits = (
-        bf.join(
-            idx,
-            (bf["query_id"] == idx["query_id"])
-            & (bf["neighbor_id"] == idx["got_id"]),
-            "left",
-        )
-        .groupBy(bf["query_id"])
-        .agg(F.count("got_id").alias("n_hits"))
-    )
-    return hits.select(
-        "query_id",
-        "n_hits",
-        (F.col("n_hits").cast("double") / F.lit(float(k))).alias("recall"),
-    )
-
-
-def sql_ivfpq_recall(
-    n_queries: int = 10,
-    k: int = 5,
-    n_coarse: int = 8,
-    nprobe: int = 2,
-    m: int = 8,
-    ksub: int = 16,
-    d: int = 64,
-    src: str = "embeddings",
-) -> str:
-    """DuckDB twin of :func:`ivfpq_recall` (brute-force CTE + the full
-    IVF-PQ pipeline CTE, joined on (query, neighbor))."""
-    ivf = sql_knn_ivfpq(n_queries, k, n_coarse, nprobe, m, ksub, d, src)
-    return f"""
-        WITH bf AS (
-            SELECT query_id, neighbor_id FROM (
-                SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-                       ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                           ORDER BY {sql_cosine('q.embedding', 'e.embedding')}
-                               DESC, e.vec_id ASC) AS rnk
-                FROM {src} e CROSS JOIN {src} q
-                WHERE q.vec_id < {n_queries} AND e.vec_id != q.vec_id)
-            WHERE rnk <= {k}),
-        idx AS ({ivf})
-        SELECT bf.query_id, COUNT(idx.neighbor_id) AS n_hits,
-               CAST(COUNT(idx.neighbor_id) AS DOUBLE) / {float(k)} AS recall
-        FROM bf LEFT JOIN idx
-          ON idx.query_id = bf.query_id
-         AND idx.neighbor_id = bf.neighbor_id
-        GROUP BY bf.query_id
+        SELECT query_id, neighbor_id, rank, cosine AS cos_exact
+        FROM ({sql_exact_rerank(short, k, src)})
     """
 
 
@@ -1964,7 +1881,7 @@ def kmeans_silhouette(
     (nearest) centroid, ``b`` = distance to second-nearest, ``s =
     (b - a) / max(a, b)`` in [0, 1]; higher = tighter, more separated
     cells.  The measured row a ``n_centroids`` re-tune of the
-    IVF/SemDeDup cell count reads (the ann_recall discipline applied to
+    IVF/SemDeDup cell count reads (the recall_at_k discipline applied to
     the clustering family).
 
     Plan: the centroid matrix rides as ONE broadcast data row (the
@@ -2243,147 +2160,6 @@ def sql_knn_sq8(
     """
 
 
-def sq8_recall(
-    embeddings: DataFrame,
-    n_queries: int = 10,
-    k: int = 5,
-    d: int = 64,
-) -> DataFrame:
-    """Recall@k of the SQ8 symmetric-distance search against exact
-    brute force -- the :func:`ann_recall` eval-harness shape applied to
-    the scalar-quantization rung, completing the measured ladder
-    (LSH -> SQ8 -> PQ -> IVF-PQ): pick the cheapest compression whose
-    recall row is acceptable BEFORE building the 100 TB index."""
-    bf = knn_bruteforce_cached(embeddings, n_queries=n_queries, k=k).select(
-        "query_id", "neighbor_id"
-    )
-    idx = knn_sq8(embeddings, n_queries=n_queries, k=k, d=d).select(
-        "query_id", F.col("neighbor_id").alias("got_id")
-    )
-    hits = (
-        bf.join(
-            idx,
-            (bf["query_id"] == idx["query_id"])
-            & (bf["neighbor_id"] == idx["got_id"]),
-            "left",
-        )
-        .groupBy(bf["query_id"])
-        .agg(F.count("got_id").alias("n_hits"))
-    )
-    return hits.select(
-        "query_id",
-        "n_hits",
-        (F.col("n_hits").cast("double") / F.lit(float(k))).alias("recall"),
-    )
-
-
-def sql_sq8_recall(
-    n_queries: int = 10, k: int = 5, d: int = 64, src: str = "embeddings"
-) -> str:
-    """DuckDB twin of :func:`sq8_recall`."""
-    idx = sql_knn_sq8(n_queries, k, d, src)
-    return f"""
-        WITH bf AS (
-            SELECT query_id, neighbor_id FROM (
-                SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-                       ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                           ORDER BY {sql_cosine('q.embedding', 'e.embedding')}
-                               DESC, e.vec_id ASC) AS rnk
-                FROM {src} e CROSS JOIN {src} q
-                WHERE q.vec_id < {n_queries} AND e.vec_id != q.vec_id)
-            WHERE rnk <= {k}),
-        idx AS ({idx})
-        SELECT bf.query_id, COUNT(idx.neighbor_id) AS n_hits,
-               CAST(COUNT(idx.neighbor_id) AS DOUBLE) / {float(k)} AS recall
-        FROM bf LEFT JOIN idx
-          ON idx.query_id = bf.query_id
-         AND idx.neighbor_id = bf.neighbor_id
-        GROUP BY bf.query_id
-    """
-
-
-# -- Matryoshka prefix truncation (the dimension-reduction rung) -------------
-
-def matryoshka_recall(
-    embeddings: DataFrame,
-    n_queries: int = 10,
-    k: int = 5,
-    d_prefix: int = 16,
-) -> DataFrame:
-    """Recall@k of exact search over only the FIRST ``d_prefix``
-    dimensions vs full-dimension exact search — the Matryoshka
-    representation question (Kusupati et al. 2022): how much of the
-    neighbor structure survives truncating the embedding to a prefix?
-    MRL-trained embeddings front-load information, so serving at a
-    prefix is a 4x storage/compute cut IF this row says recall holds —
-    the same measure-before-deploy discipline as the quantization
-    rungs (:func:`sq8_recall`, :func:`hamming_recall`).
-
-    Plan: the truncation is a narrow ``slice`` projection (zero
-    shuffle); both searches broadcast the query side and stream the
-    corpus once."""
-    trunc = embeddings.select(
-        "vec_id", F.slice("embedding", 1, d_prefix).alias("embedding")
-    )
-    bf = knn_bruteforce_cached(embeddings, n_queries=n_queries, k=k).select(
-        "query_id", "neighbor_id"
-    )
-    idx = knn_bruteforce(trunc, n_queries=n_queries, k=k).select(
-        "query_id", F.col("neighbor_id").alias("got_id")
-    )
-    hits = (
-        bf.join(
-            idx,
-            (bf["query_id"] == idx["query_id"])
-            & (bf["neighbor_id"] == idx["got_id"]),
-            "left",
-        )
-        .groupBy(bf["query_id"])
-        .agg(F.count("got_id").alias("n_hits"))
-    )
-    return hits.select(
-        "query_id",
-        "n_hits",
-        (F.col("n_hits").cast("double") / F.lit(float(k))).alias("recall"),
-    )
-
-
-def sql_matryoshka_recall(
-    n_queries: int = 10, k: int = 5, d_prefix: int = 16,
-    src: str = "embeddings",
-) -> str:
-    """DuckDB twin of :func:`matryoshka_recall` (same prefix slice,
-    same fold order, same tie rule)."""
-    pa = f"q.embedding[1:{d_prefix}]"
-    pb = f"e.embedding[1:{d_prefix}]"
-    return f"""
-        WITH bf AS (
-            SELECT query_id, neighbor_id FROM (
-                SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-                       ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                           ORDER BY {sql_cosine('q.embedding', 'e.embedding')}
-                               DESC, e.vec_id ASC) AS rnk
-                FROM {src} e CROSS JOIN {src} q
-                WHERE q.vec_id < {n_queries} AND e.vec_id != q.vec_id)
-            WHERE rnk <= {k}),
-        idx AS (
-            SELECT query_id, neighbor_id FROM (
-                SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-                       ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                           ORDER BY {sql_cosine(pa, pb)}
-                               DESC, e.vec_id ASC) AS rnk
-                FROM {src} e CROSS JOIN {src} q
-                WHERE q.vec_id < {n_queries} AND e.vec_id != q.vec_id)
-            WHERE rnk <= {k})
-        SELECT bf.query_id, COUNT(idx.neighbor_id) AS n_hits,
-               CAST(COUNT(idx.neighbor_id) AS DOUBLE) / {float(k)} AS recall
-        FROM bf LEFT JOIN idx
-          ON idx.query_id = bf.query_id
-         AND idx.neighbor_id = bf.neighbor_id
-        GROUP BY bf.query_id
-    """
-
-
 # -- binary sign hashing (the 1-bit quantization rung) -----------------------
 
 def binary_sign_codes(embeddings: DataFrame, d: int = 64) -> DataFrame:
@@ -2425,8 +2201,6 @@ def knn_hamming(
     side broadcasts, the corpus streams through one stage, ranking is
     one per-query window over k-bounded candidates.  Ties break by
     (hamming, vec_id) so the result is deterministic cross-engine."""
-    from pyspark.sql import Window
-
     codes = binary_sign_codes(embeddings, d)
     n_words = d // 32
     q = codes.filter(F.col("vec_id") < n_queries).select(
@@ -2453,38 +2227,6 @@ def knn_hamming(
     ).select("query_id", "neighbor_id", "rank", "hamming")
 
 
-def hamming_recall(
-    embeddings: DataFrame,
-    n_queries: int = 10,
-    k: int = 5,
-    d: int = 64,
-) -> DataFrame:
-    """Recall@k of the 1-bit Hamming search against exact cosine brute
-    force — the eval row that places sign hashing on the measured
-    compression ladder (LSH -> 1-bit -> SQ8 -> PQ -> IVF-PQ)."""
-    bf = knn_bruteforce_cached(embeddings, n_queries=n_queries, k=k).select(
-        "query_id", "neighbor_id"
-    )
-    idx = knn_hamming(embeddings, n_queries=n_queries, k=k, d=d).select(
-        "query_id", F.col("neighbor_id").alias("got_id")
-    )
-    hits = (
-        bf.join(
-            idx,
-            (bf["query_id"] == idx["query_id"])
-            & (bf["neighbor_id"] == idx["got_id"]),
-            "left",
-        )
-        .groupBy(bf["query_id"])
-        .agg(F.count("got_id").alias("n_hits"))
-    )
-    return hits.select(
-        "query_id",
-        "n_hits",
-        (F.col("n_hits").cast("double") / F.lit(float(k))).alias("recall"),
-    )
-
-
 def knn_hamming_rerank(
     embeddings: DataFrame,
     n_queries: int = 10,
@@ -2496,74 +2238,12 @@ def knn_hamming_rerank(
     exists for (r8 verdict item 3): 1-bit Hamming top-R PREFILTER
     (16 B/vector codes, XOR+popcount integer ALU over the whole
     corpus) -> EXACT cosine rerank of ONLY the R candidates per query
-    -> top-k.  Float math touches R*n_queries rows, never the corpus;
-    recall vs exact search is MEASURED by
-    :func:`hamming_rerank_recall`, not assumed.
-
-    Plan: the candidate list (R*n_queries rows) BROADCASTS back onto
-    the corpus scan, so the rerank reads only matching rows — one
-    corpus pass for codes, one semi-join-shaped pass for candidate
-    embeddings, bounded top-k ranks.  Ties break (cosine DESC,
-    neighbor_id ASC), deterministic cross-engine."""
-    cand = knn_hamming(embeddings, n_queries=n_queries, k=r, d=d).select(
-        "query_id", "neighbor_id"
-    )
-    q = embeddings.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        norm(F.col("embedding")).alias("q_n"),
-    )
-    c = embeddings.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_emb"),
-        norm(F.col("embedding")).alias("c_n"),
-    )
-    rerank = (
-        c.join(F.broadcast(cand), "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .withColumn(
-            "cos",
-            dot(F.col("q_emb"), F.col("c_emb"))
-            / (F.col("q_n") * F.col("c_n")),
-        )
-    )
-    return topk_by_group(
-        rerank, ["query_id"], [F.desc("cos"), F.asc("neighbor_id")], k
-    ).select("query_id", "neighbor_id", "rank", F.col("cos").alias("cosine"))
-
-
-def hamming_rerank_recall(
-    embeddings: DataFrame,
-    n_queries: int = 10,
-    k: int = 5,
-    r: int = 20,
-    d: int = 64,
-) -> DataFrame:
-    """Recall@k of the Hamming-prefilter + exact-rerank pipeline against
-    exact cosine brute force — the deploy/no-deploy row for the
-    binary-then-rerank serving path (a candidate set of R that loses
-    true neighbors shows up here, and raising R is the knob)."""
-    bf = knn_bruteforce_cached(embeddings, n_queries=n_queries, k=k).select(
-        "query_id", "neighbor_id"
-    )
-    idx = knn_hamming_rerank(
-        embeddings, n_queries=n_queries, k=k, r=r, d=d
-    ).select("query_id", F.col("neighbor_id").alias("got_id"))
-    hits = (
-        bf.join(
-            idx,
-            (bf["query_id"] == idx["query_id"])
-            & (bf["neighbor_id"] == idx["got_id"]),
-            "left",
-        )
-        .groupBy(bf["query_id"])
-        .agg(F.count("got_id").alias("n_hits"))
-    )
-    return hits.select(
-        "query_id",
-        "n_hits",
-        (F.col("n_hits").cast("double") / F.lit(float(k))).alias("recall"),
-    )
+    -> top-k (:func:`exact_rerank`).  Float math touches R*n_queries
+    rows, never the corpus; recall vs exact search is MEASURED by
+    :func:`recall_at_k`, not assumed.  One corpus pass for codes, one
+    semi-join-shaped pass for candidate embeddings."""
+    cand = knn_hamming(embeddings, n_queries=n_queries, k=r, d=d)
+    return exact_rerank(embeddings, cand, n_queries, k)
 
 
 def _sql_binary_codes_cte(d: int = 64, src: str = "embeddings") -> str:
@@ -2608,81 +2288,13 @@ def sql_knn_hamming(
     """
 
 
-def sql_hamming_recall(
-    n_queries: int = 10, k: int = 5, d: int = 64, src: str = "embeddings"
-) -> str:
-    """DuckDB twin of :func:`hamming_recall`."""
-    idx = sql_knn_hamming(n_queries, k, d, src)
-    return f"""
-        WITH bf AS (
-            SELECT query_id, neighbor_id FROM (
-                SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-                       ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                           ORDER BY {sql_cosine('q.embedding', 'e.embedding')}
-                               DESC, e.vec_id ASC) AS rnk
-                FROM {src} e CROSS JOIN {src} q
-                WHERE q.vec_id < {n_queries} AND e.vec_id != q.vec_id)
-            WHERE rnk <= {k}),
-        idx AS ({idx})
-        SELECT bf.query_id, COUNT(idx.neighbor_id) AS n_hits,
-               CAST(COUNT(idx.neighbor_id) AS DOUBLE) / {float(k)} AS recall
-        FROM bf LEFT JOIN idx
-          ON idx.query_id = bf.query_id
-         AND idx.neighbor_id = bf.neighbor_id
-        GROUP BY bf.query_id
-    """
-
-
 def sql_knn_hamming_rerank(
     n_queries: int = 10, k: int = 5, r: int = 20, d: int = 64,
     src: str = "embeddings",
 ) -> str:
     """DuckDB twin of :func:`knn_hamming_rerank` (same codes, same
     candidate set, same cosine tree, same tie rules)."""
-    cand = sql_knn_hamming(n_queries, r, d, src)
-    return f"""
-        WITH cand AS ({cand}),
-        rr AS (
-            SELECT c.query_id, c.neighbor_id,
-                   {sql_cosine('q.embedding', 'e.embedding')} AS cos
-            FROM cand c
-            JOIN {src} e ON e.vec_id = c.neighbor_id
-            JOIN {src} q ON q.vec_id = c.query_id),
-        ranked AS (
-            SELECT query_id, neighbor_id, cos,
-                   ROW_NUMBER() OVER (PARTITION BY query_id
-                       ORDER BY cos DESC, neighbor_id ASC) AS rank
-            FROM rr)
-        SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank,
-               cos AS cosine
-        FROM ranked WHERE rank <= {k}
-    """
-
-
-def sql_hamming_rerank_recall(
-    n_queries: int = 10, k: int = 5, r: int = 20, d: int = 64,
-    src: str = "embeddings",
-) -> str:
-    """DuckDB twin of :func:`hamming_rerank_recall`."""
-    idx = sql_knn_hamming_rerank(n_queries, k, r, d, src)
-    return f"""
-        WITH bf AS (
-            SELECT query_id, neighbor_id FROM (
-                SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-                       ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                           ORDER BY {sql_cosine('q.embedding', 'e.embedding')}
-                               DESC, e.vec_id ASC) AS rnk
-                FROM {src} e CROSS JOIN {src} q
-                WHERE q.vec_id < {n_queries} AND e.vec_id != q.vec_id)
-            WHERE rnk <= {k}),
-        idx AS ({idx})
-        SELECT bf.query_id, COUNT(idx.neighbor_id) AS n_hits,
-               CAST(COUNT(idx.neighbor_id) AS DOUBLE) / {float(k)} AS recall
-        FROM bf LEFT JOIN idx
-          ON idx.query_id = bf.query_id
-         AND idx.neighbor_id = bf.neighbor_id
-        GROUP BY bf.query_id
-    """
+    return sql_exact_rerank(sql_knn_hamming(n_queries, r, d, src), k, src)
 
 
 # -- rotated PQ (the OPQ "random rotation" rung) -----------------------------
@@ -2798,42 +2410,20 @@ def pq_rotation_recall(
     """Does rotation help PQ on THIS corpus?  Per query: recall@k of
     plain PQ-ADC and of rotated PQ-ADC, both against the exact cosine
     top-k in the ORIGINAL space -- the measured row that decides whether
-    the rotation ships (the ann_recall discipline; note the rotated
+    the rotation ships (two :func:`recall_at_k` rows; note the rotated
     ranking also absorbs the sign matrix's JL distortion, which is
     exactly why it must be measured, not assumed)."""
-    exact = knn_bruteforce_cached(embeddings, n_queries, k).select(
-        "query_id", "neighbor_id"
-    )
-    plain = knn_pq_adc(embeddings, n_queries, k, m, ksub, d).select(
-        "query_id", F.col("neighbor_id").alias("pq_id")
-    )
-    rot = knn_pq_rotated(embeddings, n_queries, k, m, ksub, d, seed).select(
-        "query_id", F.col("neighbor_id").alias("rot_id")
-    )
-    hits_p = exact.join(
-        plain,
-        (exact.query_id == plain.query_id)
-        & (F.col("neighbor_id") == F.col("pq_id")),
-        "left",
-    ).groupBy(exact.query_id.alias("query_id")).agg(
-        F.count("pq_id").alias("n_hits_pq")
-    )
-    hits_r = exact.join(
-        rot,
-        (exact.query_id == rot.query_id)
-        & (F.col("neighbor_id") == F.col("rot_id")),
-        "left",
-    ).groupBy(exact.query_id.alias("query_id")).agg(
-        F.count("rot_id").alias("n_hits_rot")
-    )
-    return hits_p.join(hits_r, "query_id").select(
-        "query_id",
-        "n_hits_pq",
-        "n_hits_rot",
-        (F.col("n_hits_pq").cast("double") / F.lit(float(k)))
-        .alias("recall_pq"),
-        (F.col("n_hits_rot").cast("double") / F.lit(float(k)))
-        .alias("recall_rotated"),
+    plain = recall_at_k(
+        embeddings, knn_pq_adc(embeddings, n_queries, k, m, ksub, d),
+        n_queries, k,
+    ).toDF("query_id", "n_hits_pq", "recall_pq")
+    rot = recall_at_k(
+        embeddings,
+        knn_pq_rotated(embeddings, n_queries, k, m, ksub, d, seed),
+        n_queries, k,
+    ).toDF("query_id", "n_hits_rot", "recall_rotated")
+    return plain.join(rot, "query_id").select(
+        "query_id", "n_hits_pq", "n_hits_rot", "recall_pq", "recall_rotated"
     )
 
 
@@ -2847,32 +2437,12 @@ def sql_pq_rotation_recall(
     src: str = "embeddings",
 ) -> str:
     """DuckDB twin of :func:`pq_rotation_recall`."""
+    pq = sql_knn_pq_adc(n_queries, k, m, ksub, d, src=src)
+    rot = sql_knn_pq_rotated(n_queries, k, m, ksub, d, seed, src)
     return f"""
-        WITH exact AS (
-            SELECT query_id, neighbor_id FROM (
-                SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-                       ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                           ORDER BY {sql_cosine('q.embedding', 'e.embedding')}
-                               DESC, e.vec_id ASC) AS rnk
-                FROM {src} e
-                CROSS JOIN (SELECT * FROM {src}
-                            WHERE vec_id < {n_queries}) q
-                WHERE e.vec_id != q.vec_id)
-            WHERE rnk <= {k}),
-        pq AS ({sql_knn_pq_adc(n_queries, k, m, ksub, d, src=src)}),
-        rot AS ({sql_knn_pq_rotated(n_queries, k, m, ksub, d, seed, src)}),
-        hp AS (SELECT e.query_id, COUNT(p.neighbor_id) AS n_hits_pq
-               FROM exact e LEFT JOIN pq p
-                 ON e.query_id = p.query_id
-                AND e.neighbor_id = p.neighbor_id
-               GROUP BY e.query_id),
-        hr AS (SELECT e.query_id, COUNT(r.neighbor_id) AS n_hits_rot
-               FROM exact e LEFT JOIN rot r
-                 ON e.query_id = r.query_id
-                AND e.neighbor_id = r.neighbor_id
-               GROUP BY e.query_id)
-        SELECT query_id, n_hits_pq, n_hits_rot,
-               CAST(n_hits_pq AS DOUBLE) / {float(k)} AS recall_pq,
-               CAST(n_hits_rot AS DOUBLE) / {float(k)} AS recall_rotated
+        WITH hp AS ({sql_recall_at_k(pq, n_queries, k, src)}),
+        hr AS ({sql_recall_at_k(rot, n_queries, k, src)})
+        SELECT query_id, hp.n_hits AS n_hits_pq, hr.n_hits AS n_hits_rot,
+               hp.recall AS recall_pq, hr.recall AS recall_rotated
         FROM hp JOIN hr USING (query_id)
     """

@@ -239,12 +239,6 @@ def sql_token_rarity(src: str = "documents") -> str:
     """
 
 
-#: session-scoped (doc_id, tok, tf) aggregates, keyed like
-#: dedup._PAIRS_CACHE (application, plan hash, file fingerprint)
-_TF_CACHE: dict = {}
-_TF_CACHE_MAX = 8
-
-
 def tf_postings_cached(docs: DataFrame, text: str = "text") -> DataFrame:
     """The per-document term-frequency relation ``(doc_id, tok, tf)``
     as ONE session-scoped persisted artifact (r9 verdict item 3):
@@ -257,44 +251,23 @@ def tf_postings_cached(docs: DataFrame, text: str = "text") -> DataFrame:
     from a materialized artifact — the "compute postings once, fan
     consumers out" structure of a production indexing pipeline.
 
-    Cache key and safety mirror ``verified_pairs_cached``: semantic
-    plan hash + input-file fingerprint, ``sameSemantics`` re-verified
-    on hit (a collision can only recompute, never serve wrong data);
-    unhashable plans (Connect, streaming) fall back to a plain
-    recompute."""
-    from ._cache import data_fingerprint
+    Keyed and re-verified by :func:`._cache.cached_artifact`; a
+    streaming input has no plan hash to key on and is aggregated
+    directly."""
+    from ._cache import cached_artifact
     from .dedup import fan_out
 
     if docs.isStreaming:
         return docs.select(
             "doc_id", F.explode(tokens(text)).alias("tok")
         ).groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
-    try:
-        key = (
-            docs.sparkSession.sparkContext.applicationId,
-            docs.semanticHash(), data_fingerprint(docs), text,
-        )
-    except Exception:
-        key = None
-    if key is not None and key in _TF_CACHE:
-        stored_docs, tf = _TF_CACHE[key]
-        try:
-            if docs.sameSemantics(stored_docs):
-                return tf
-        except Exception:
-            pass
-    tf = (
-        fan_out(docs)
+    return cached_artifact(
+        docs, (text,),
+        lambda: fan_out(docs)
         .select("doc_id", F.explode(tokens(text)).alias("tok"))
         .groupBy("doc_id", "tok")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint(eager=True)
+        .agg(F.count(F.lit(1)).alias("tf")),
     )
-    if key is not None:
-        while len(_TF_CACHE) >= _TF_CACHE_MAX:
-            _TF_CACHE.pop(next(iter(_TF_CACHE)))
-        _TF_CACHE[key] = (docs, tf)
-    return tf
 
 
 def tfidf_top_terms(docs: DataFrame, text: str = "text", k: int = 5) -> DataFrame:
@@ -1628,7 +1601,7 @@ def bpe_coverage(
 ) -> DataFrame:
     """Tokenizer EVAL: per-source compression achieved by the learned
     BPE merges -- the measured row that decides whether a vocabulary is
-    worth shipping (the ann_recall discipline applied to the tokenizer
+    worth shipping (the recall_at_k discipline applied to the tokenizer
     family: train / apply / MEASURE).  ``compression`` is tokens-after
     over symbols-before; 1.0 means the merges never fired on that
     source.  One narrow encode pass + a doc-level join to recover the
@@ -1765,7 +1738,7 @@ def sql_pmi_pairs(
 
 
 def langid_confusion(docs: DataFrame, text: str = "text") -> DataFrame:
-    """Eval harness for :func:`lang_id` (the ann_recall discipline applied
+    """Eval harness for :func:`lang_id` (the recall_at_k discipline applied
     to the language-ID family): confusion matrix of predicted vs stored
     language label, with each cell's share of its true-label total --
     per-language recall sits on the diagonal.  Two #langs^2-bounded

@@ -91,6 +91,10 @@ def get_spark(
         # repair in sources.parquet.load_table.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
+        # PySpark starts its JVM as ``pyspark-shell``, which turns the
+        # console progress bar on; its \r-rewritten ``[Stage N:...]``
+        # lines would glue onto every result line a tool prints.
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         # A session that plans hundreds of DISTINCT heavy queries blows
         # through the 100-entry whole-stage-codegen cache and starts

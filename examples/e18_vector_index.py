@@ -21,11 +21,11 @@ SF_DIR = "/root/testdata/sf0.001"
 
 def main(spark):
     from async_stream_processing_spark.llm.similarity import (
-        ann_recall,
-        knn_bruteforce,
+        knn_lsh,
         knn_pq_adc,
         pq_codes,
         pq_dedup_groups,
+        recall_at_k,
     )
     from async_stream_processing_spark.sources.parquet import load_table
 
@@ -38,15 +38,10 @@ def main(spark):
     show(adc, n=6, label="ADC top-3 per query (integer adds, no float math)")
 
     # how good is the cheap index? measure, don't guess
-    exact = knn_bruteforce(emb, n_queries=5, k=3).select(
-        "query_id", "neighbor_id"
-    )
-    pq_hits = adc.join(exact, ["query_id", "neighbor_id"]).groupBy(
-        "query_id"
-    ).agg(F.count(F.lit(1)).alias("pq_hits"))
-    show(pq_hits, n=5, label="PQ-ADC hits vs exact top-3 (per query)")
+    show(recall_at_k(emb, adc, 5, 3), n=5,
+         label="PQ-ADC recall@3 vs exact (per query)")
     show(
-        ann_recall(emb, n_queries=5, k=3, n_planes=6),
+        recall_at_k(emb, knn_lsh(emb, n_queries=5, k=3, n_planes=6), 5, 3),
         n=5,
         label="LSH index recall@3 vs exact",
     )

@@ -29,8 +29,9 @@ def main(spark):
         dedup_source_matrix,
     )
     from async_stream_processing_spark.llm.similarity import (
-        ivfpq_recall,
+        knn_ivfpq,
         knn_refine,
+        recall_at_k,
     )
     from async_stream_processing_spark.llm.text_analysis import (
         bpe_apply,
@@ -88,7 +89,7 @@ def main(spark):
         n=9,
         label="Two-stage ANN: PQ shortlist -> exact re-rank",
     )
-    recall = ivfpq_recall(emb, n_queries=5, k=3)
+    recall = recall_at_k(emb, knn_ivfpq(emb, n_queries=5, k=3), 5, 3)
     show(recall, n=5, label="IVF-PQ recall@3 vs exact brute force")
     return recall
 

@@ -36,10 +36,11 @@ def main(spark):
         lsh_s_curve,
     )
     from async_stream_processing_spark.llm.similarity import (
-        ann_recall,
-        ivfpq_recall,
         kmeans_silhouette,
-        sq8_recall,
+        knn_ivfpq,
+        knn_lsh,
+        knn_sq8,
+        recall_at_k,
     )
     from async_stream_processing_spark.llm.text_analysis import (
         bpe_coverage,
@@ -51,12 +52,13 @@ def main(spark):
     emb = load_table(spark, SF_DIR, "embeddings")
 
     # 1. the ANN compression ladder, measured rung by rung
-    show(ann_recall(emb, n_queries=5, k=3), n=5,
-         label="LSH bucket index: recall@3 vs exact")
-    show(ivfpq_recall(emb, n_queries=5, k=3), n=5,
-         label="IVF-PQ: recall@3 vs exact")
-    show(sq8_recall(emb, n_queries=5, k=3), n=5,
-         label="SQ8 integer SDC: recall@3 vs exact")
+    for label, index in [
+        ("LSH bucket index", knn_lsh),
+        ("IVF-PQ", knn_ivfpq),
+        ("SQ8 integer SDC", knn_sq8),
+    ]:
+        show(recall_at_k(emb, index(emb, n_queries=5, k=3), 5, 3), n=5,
+             label=f"{label}: recall@3 vs exact")
 
     # 2. the dedup blocker: one aggregate row, then WHERE the cliff sits
     show(lsh_pair_recall(docs, threshold=0.25), n=1,

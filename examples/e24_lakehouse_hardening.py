@@ -30,8 +30,8 @@ SF_DIR = "/root/testdata/sf0.001"
 
 def _main(spark, tmp: str):
     from async_stream_processing_spark.llm.similarity import (
-        hamming_recall,
         knn_hamming,
+        recall_at_k,
     )
     from async_stream_processing_spark.plans.versioned import (
         compact,
@@ -119,7 +119,8 @@ def _main(spark, tmp: str):
     emb = load_table(spark, SF_DIR, "embeddings")
     show(knn_hamming(emb, n_queries=3, k=3),
          label="Hamming top-3 over packed sign bits (16 B/vector)")
-    recall_row = hamming_recall(emb, n_queries=10, k=5).agg(
+    recall_row = recall_at_k(
+        emb, knn_hamming(emb, n_queries=10, k=5), 10, 5).agg(
         F.avg("recall").alias("mean_recall_at_5")
     )
     show(recall_row,

@@ -146,13 +146,13 @@ def _main(spark, tmp: str):
 
     # --- 5. binary prefilter + exact rerank, recall measured ------------
     from async_stream_processing_spark.llm.similarity import (
-        hamming_rerank_recall,
         knn_hamming_rerank,
+        recall_at_k,
     )
 
     emb = load_table(spark, SF_DIR, "embeddings")
     top = knn_hamming_rerank(emb, n_queries=10, k=5, r=20)
-    recall = hamming_rerank_recall(emb, n_queries=10, k=5, r=20).agg(
+    recall = recall_at_k(emb, top, 10, 5).agg(
         F.avg("recall").alias("mean_recall_at_5")
     )
     show(top, n=5, label="Hamming top-R prefilter -> exact cosine rerank")

@@ -49,10 +49,14 @@ from async_stream_processing_spark.llm.similarity import (
     knn_bruteforce,
     knn_lsh,
     lsh_buckets,
+    recall_at_k,
     sql_cosine,
+    sql_knn_bruteforce,
+    sql_knn_lsh,
     sql_lsh_bucket,
     sql_norm,
     sql_range_search,
+    sql_recall_at_k,
 )
 from async_stream_processing_spark.llm.text_analysis import (
     fingerprints,
@@ -967,9 +971,8 @@ def q_knn_pq_adc(spark, sf_dir):
 def q_ann_recall(spark, sf_dir):
     """Recall@3 of the LSH index vs exact brute force, per query -- the
     ANN eval harness as a first-class query."""
-    from async_stream_processing_spark.llm.similarity import ann_recall
-
-    return ann_recall(_emb(spark, sf_dir), n_queries=10, k=3, n_planes=6)
+    emb = _emb(spark, sf_dir)
+    return recall_at_k(emb, knn_lsh(emb, n_queries=10, k=3, n_planes=6), 10, 3)
 
 
 def q_bpe_train(spark, sf_dir):
@@ -1195,9 +1198,10 @@ def q_stream_ivfpq_upsert(spark, sf_dir):
 def q_ivfpq_recall(spark, sf_dir):
     """Recall@5 of the IVF-PQ index vs exact brute force -- the eval row
     that justifies nprobe/n_coarse/m before a full 100 TB index build."""
-    from async_stream_processing_spark.llm.similarity import ivfpq_recall
+    from async_stream_processing_spark.llm.similarity import knn_ivfpq
 
-    return ivfpq_recall(_emb(spark, sf_dir), n_queries=10, k=5)
+    emb = _emb(spark, sf_dir)
+    return recall_at_k(emb, knn_ivfpq(emb, n_queries=10, k=5), 10, 5)
 
 
 def q_filter_audit(spark, sf_dir):
@@ -2204,11 +2208,9 @@ def q_matryoshka_recall(spark, sf_dir):
     """Recall@k of exact search over the first 16 dims vs the full 64
     (Matryoshka prefix truncation): the measure-before-deploy row for
     serving embeddings at a prefix."""
-    from async_stream_processing_spark.llm.similarity import (
-        matryoshka_recall,
-    )
-
-    return matryoshka_recall(_emb(spark, sf_dir))
+    emb = _emb(spark, sf_dir)
+    prefix = emb.select("vec_id", F.slice("embedding", 1, 16).alias("embedding"))
+    return recall_at_k(emb, knn_bruteforce(prefix, n_queries=10, k=5), 10, 5)
 
 
 def q_versioned_compact_zorder(spark, sf_dir):
@@ -2250,9 +2252,10 @@ def q_knn_hamming(spark, sf_dir):
 def q_hamming_recall(spark, sf_dir):
     """Recall@k of the 1-bit Hamming search vs exact cosine brute force
     (the measured-ladder discipline: place the rung before using it)."""
-    from async_stream_processing_spark.llm.similarity import hamming_recall
+    from async_stream_processing_spark.llm.similarity import knn_hamming
 
-    return hamming_recall(_emb(spark, sf_dir))
+    emb = _emb(spark, sf_dir)
+    return recall_at_k(emb, knn_hamming(emb, n_queries=10, k=5, d=64), 10, 5)
 
 
 def q_knn_hamming_rerank(spark, sf_dir):
@@ -2271,10 +2274,12 @@ def q_hamming_rerank_recall(spark, sf_dir):
     the deploy/no-deploy row for the binary serving path (R is the
     knob when this drops)."""
     from async_stream_processing_spark.llm.similarity import (
-        hamming_rerank_recall,
+        knn_hamming_rerank,
     )
 
-    return hamming_rerank_recall(_emb(spark, sf_dir))
+    emb = _emb(spark, sf_dir)
+    return recall_at_k(
+        emb, knn_hamming_rerank(emb, n_queries=10, k=5, r=20, d=64), 10, 5)
 
 
 def q_stream_binary_codes(spark, sf_dir):
@@ -2339,9 +2344,10 @@ def q_sq8_recall(spark, sf_dir):
     """Recall@5 of the SQ8 symmetric-distance search vs exact brute
     force -- completes the measured ANN-compression ladder (LSH/SQ8/
     PQ/IVF-PQ each carry a recall row)."""
-    from async_stream_processing_spark.llm.similarity import sq8_recall
+    from async_stream_processing_spark.llm.similarity import knn_sq8
 
-    return sq8_recall(_emb(spark, sf_dir), n_queries=10, k=5, d=64)
+    emb = _emb(spark, sf_dir)
+    return recall_at_k(emb, knn_sq8(emb, n_queries=10, k=5, d=64), 10, 5)
 
 
 def q_trigram_backoff(spark, sf_dir):
@@ -2680,7 +2686,6 @@ def llm_oracle_sql() -> dict[str, str]:
     )
 
     from async_stream_processing_spark.llm.similarity import (
-        sql_ivfpq_recall,
         sql_ivfpq_codes,
         sql_knn_refine,
         sql_semdedup,
@@ -2704,14 +2709,10 @@ def llm_oracle_sql() -> dict[str, str]:
 
     from async_stream_processing_spark.llm.similarity import (
         sql_binary_sign_codes,
-        sql_hamming_recall,
-        sql_hamming_rerank_recall,
-        sql_matryoshka_recall,
         sql_knn_hamming,
         sql_knn_hamming_rerank,
         sql_knn_sq8,
         sql_sq8_codes,
-        sql_sq8_recall,
     )
     from async_stream_processing_spark.llm.text_analysis import (
         sql_source_tv_distance,
@@ -2996,17 +2997,22 @@ def llm_oracle_sql() -> dict[str, str]:
         """,
         "sq8_codes": sql_sq8_codes(d=64),
         "knn_hamming": sql_knn_hamming(),
-        "matryoshka_recall": sql_matryoshka_recall(),
+        "matryoshka_recall": sql_recall_at_k(sql_knn_bruteforce(
+            10, 5,
+            src="(SELECT vec_id, embedding[1:16] AS embedding FROM embeddings)",
+        ), 10, 5),
         "versioned_compact_zorder": """
             SELECT doc_id, text, lang, source, n_chars FROM documents
         """,
-        "hamming_recall": sql_hamming_recall(),
+        "hamming_recall": sql_recall_at_k(sql_knn_hamming(10, 5, 64), 10, 5),
         "knn_hamming_rerank": sql_knn_hamming_rerank(),
-        "hamming_rerank_recall": sql_hamming_rerank_recall(),
+        "hamming_rerank_recall": sql_recall_at_k(
+            sql_knn_hamming_rerank(10, 5, 20, 64), 10, 5),
         "stream_binary_codes": sql_binary_sign_codes(d=64),
         "knn_sq8": sql_knn_sq8(n_queries=10, k=5, d=64),
         "stream_sq8_codes": sql_sq8_codes(d=64),
-        "sq8_recall": sql_sq8_recall(n_queries=10, k=5, d=64),
+        "sq8_recall": sql_recall_at_k(
+            sql_knn_sq8(n_queries=10, k=5, d=64), 10, 5),
         "doremi_mixture": sql_doremi_mixture(n_rounds=3),
         "bpe_coverage": sql_bpe_coverage(n_merges=3),
         "packing_efficiency": sql_packing_efficiency(budget=512),
@@ -3034,7 +3040,8 @@ def llm_oracle_sql() -> dict[str, str]:
         """,
         "bigram_predictability": sql_bigram_predictability(),
         "semdedup": sql_semdedup(n_centroids=8, tau=0.4),
-        "ivfpq_recall": sql_ivfpq_recall(n_queries=10, k=5),
+        "ivfpq_recall": sql_recall_at_k(
+            sql_knn_ivfpq(n_queries=10, k=5), 10, 5),
         "ivfpq_upsert": sql_ivfpq_codes(),
         "perceptron_train": sql_perceptron_train(
             n_buckets=64, n_rounds=3),
@@ -3084,38 +3091,7 @@ def llm_oracle_sql() -> dict[str, str]:
         "pq_dedup_groups": sql_pq_dedup_groups(m=8, ksub=16, d=64, block_m=4),
         "bpe_merge_pairs": sql_bpe_merge_pairs(k=20),
         "bpe_train": sql_bpe_train(n_merges=3),
-        "ann_recall": f"""
-            WITH b AS (SELECT vec_id, embedding,
-                              {sql_lsh_bucket('embedding', 6)} AS bucket
-                       FROM embeddings),
-            q AS (SELECT vec_id AS query_id, embedding AS q_emb, bucket
-                  FROM b WHERE vec_id < 10),
-            bf AS (
-                SELECT query_id, neighbor_id FROM (
-                    SELECT q.query_id, e.vec_id AS neighbor_id,
-                           ROW_NUMBER() OVER (
-                               PARTITION BY q.query_id
-                               ORDER BY {sql_cosine('q.q_emb', 'e.embedding')}
-                                   DESC, e.vec_id ASC) AS rank
-                    FROM embeddings e CROSS JOIN q
-                    WHERE e.vec_id != q.query_id)
-                WHERE rank <= 3),
-            idx AS (
-                SELECT query_id, neighbor_id AS got_id FROM (
-                    SELECT q.query_id, c.vec_id AS neighbor_id,
-                           ROW_NUMBER() OVER (
-                               PARTITION BY q.query_id
-                               ORDER BY {sql_cosine('q.q_emb', 'c.embedding')}
-                                   DESC, c.vec_id ASC) AS rank
-                    FROM b c JOIN q ON c.bucket = q.bucket
-                    WHERE c.vec_id != q.query_id)
-                WHERE rank <= 3)
-            SELECT bf.query_id, COUNT(idx.got_id) AS n_hits,
-                   CAST(COUNT(idx.got_id) AS DOUBLE) / 3.0 AS recall
-            FROM bf LEFT JOIN idx
-              ON bf.query_id = idx.query_id AND bf.neighbor_id = idx.got_id
-            GROUP BY bf.query_id
-        """,
+        "ann_recall": sql_recall_at_k(sql_knn_lsh(10, 3, 6), 10, 3),
         "pq_codes": sql_pq_codes(m=8, ksub=16, d=64),
         "dedup_pair_recall": f"""
             WITH {_sql_doc_shingles()},
@@ -3258,42 +3234,13 @@ def llm_oracle_sql() -> dict[str, str]:
         """,
         "simhash_fingerprint": sql_simhash(bits=32),
         "knn_range_search": sql_range_search(n_queries=10, tau=0.25),
-        "knn_bruteforce": f"""
-            WITH q AS (SELECT vec_id AS query_id, embedding AS q_emb
-                       FROM embeddings WHERE vec_id < 10),
-            scored AS (SELECT q.query_id, e.vec_id AS neighbor_id,
-                              {sql_cosine('q.q_emb', 'e.embedding')} AS cosine
-                       FROM embeddings e CROSS JOIN q
-                       WHERE e.vec_id != q.query_id),
-            ranked AS (SELECT *, ROW_NUMBER() OVER (
-                           PARTITION BY query_id
-                           ORDER BY cosine DESC, neighbor_id ASC) AS rank
-                       FROM scored)
-            SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank, cosine
-            FROM ranked WHERE rank <= 5
-        """,
+        "knn_bruteforce": sql_knn_bruteforce(10, 5),
         "ann_lsh_buckets": f"""
             SELECT vec_id, label,
                    CAST({sql_lsh_bucket('embedding', 6)} AS BIGINT) AS bucket
             FROM embeddings
         """,
-        "knn_lsh": f"""
-            WITH b AS (SELECT vec_id, embedding,
-                              {sql_lsh_bucket('embedding', 6)} AS bucket
-                       FROM embeddings),
-            q AS (SELECT vec_id AS query_id, embedding AS q_emb, bucket
-                  FROM b WHERE vec_id < 10),
-            scored AS (SELECT q.query_id, c.vec_id AS neighbor_id,
-                              {sql_cosine('q.q_emb', 'c.embedding')} AS cosine
-                       FROM b c JOIN q ON c.bucket = q.bucket
-                       WHERE c.vec_id != q.query_id),
-            ranked AS (SELECT *, ROW_NUMBER() OVER (
-                           PARTITION BY query_id
-                           ORDER BY cosine DESC, neighbor_id ASC) AS rank
-                       FROM scored)
-            SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank, cosine
-            FROM ranked WHERE rank <= 3
-        """,
+        "knn_lsh": sql_knn_lsh(10, 3, 6),
         "knn_lsh_multiprobe": f"""
             WITH b AS (SELECT vec_id, embedding,
                               {sql_lsh_bucket('embedding', 6)} AS bucket

@@ -965,12 +965,14 @@ def test_dedup_source_matrix_counts_cross_source_pairs(spark):
 
 
 def test_ivfpq_recall_bounds_and_self_consistency(spark):
-    from async_stream_processing_spark.llm.similarity import ivfpq_recall
-
+    from async_stream_processing_spark.llm.similarity import (
+        knn_ivfpq,
+        recall_at_k,
+    )
     from async_stream_processing_spark.sources.parquet import load_table
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    rows = ivfpq_recall(emb, n_queries=5, k=3).collect()
+    rows = recall_at_k(emb, knn_ivfpq(emb, n_queries=5, k=3), 5, 3).collect()
     assert len(rows) == 5
     for r in rows:
         assert 0 <= r["n_hits"] <= 3
@@ -1816,41 +1818,58 @@ def test_ivfpq_upsert_driver_traffic_is_o_model(spark, tmp_path,
 
 
 def test_session_caches_miss_on_rewritten_source(spark, tmp_path):
-    """Round-9 advice (low): the session artifact caches key on the
+    """Round-9 advice (low): the session artifact cache keys on the
     LOGICAL PLAN's semantics, which don't see data changes — rewriting
     the source parquet within one application must MISS (via the
     input-file fingerprint) and recompute, not serve the stale
-    artifact."""
+    artifact.  Checked for each artifact built through it: the exact
+    ANN ground truth, the verified near-dup pairs and the TF postings."""
     import numpy as np
 
+    from async_stream_processing_spark.llm.dedup import verified_pairs_cached
     from async_stream_processing_spark.llm.similarity import (
         knn_bruteforce_cached,
     )
+    from async_stream_processing_spark.llm.text_analysis import (
+        tf_postings_cached,
+    )
 
-    path = str(tmp_path / "emb")
-
-    def write(seed):
+    def vectors(seed):
         rng = np.random.default_rng(seed)
-        rows = [
-            (i, [float(x) for x in rng.standard_normal(8)])
-            for i in range(40)
-        ]
-        spark.createDataFrame(
-            rows, "vec_id long, embedding array<double>"
-        ).coalesce(1).write.mode("overwrite").parquet(path)
+        return spark.createDataFrame(
+            [(i, [float(x) for x in rng.standard_normal(8)])
+             for i in range(40)],
+            "vec_id long, embedding array<double>")
 
-    write(7)
-    df = spark.read.parquet(path)
-    gt1 = {tuple(r) for r in knn_bruteforce_cached(
-        df, n_queries=3, k=2).collect()}
-    # overwrite the SAME path with different vectors: identical plan
-    # semantics, different data — the fingerprint must force a MISS
-    write(8)
-    df2 = spark.read.parquet(path)
-    gt2 = {tuple(r) for r in knn_bruteforce_cached(
-        df2, n_queries=3, k=2).collect()}
-    assert gt2 and gt1 != gt2, (
-        "stale ground truth served after source rewrite")
+    def docs(seed):
+        # docs seed%4 and seed%4+1 are copies: the pair graph moves too
+        rng = np.random.default_rng(seed)
+        texts = [" ".join(rng.choice([f"w{j}" for j in range(200)], 40))
+                 for _ in range(8)]
+        texts[seed % 4 + 1] = texts[seed % 4]
+        return spark.createDataFrame(list(enumerate(texts)),
+                                     "doc_id long, text string")
+
+    cases = [
+        ("ground truth", vectors,
+         lambda df: knn_bruteforce_cached(df, n_queries=3, k=2)),
+        ("near-dup pairs", docs,
+         lambda df: verified_pairs_cached(df, threshold=0.25)),
+        ("tf postings", docs, tf_postings_cached),
+    ]
+    for what, make, artifact in cases:
+        path = str(tmp_path / what.replace(" ", "_"))
+
+        def write(seed):
+            make(seed).coalesce(1).write.mode("overwrite").parquet(path)
+
+        write(7)
+        got1 = {tuple(r) for r in artifact(spark.read.parquet(path)).collect()}
+        # overwrite the SAME path with different rows: identical plan
+        # semantics, different data — the fingerprint must force a MISS
+        write(8)
+        got2 = {tuple(r) for r in artifact(spark.read.parquet(path)).collect()}
+        assert got2 and got1 != got2, f"stale {what} served after rewrite"
 
 
 def test_pipeline_canon_registry_bounded_unpersist(spark):
@@ -1902,16 +1921,15 @@ def test_hamming_rerank_reads_only_candidates(spark):
     # recall sanity: rerank can only IMPROVE on raw hamming order; with
     # R=4k candidates the pipeline recovers most exact neighbors
     from async_stream_processing_spark.llm.similarity import (
-        hamming_rerank_recall,
+        knn_hamming,
+        recall_at_k,
     )
 
-    rec = hamming_rerank_recall(emb, n_queries=10, k=5, r=20)
+    rec = recall_at_k(emb, out, 10, 5)
     # the exact rerank of the top-R candidate set can only IMPROVE on
     # taking hamming's own top-k (same candidates, better metric); the
     # absolute level is a property of the (random) fixture embeddings
-    from async_stream_processing_spark.llm.similarity import hamming_recall
-
-    raw = hamming_recall(emb, n_queries=10, k=5)
+    raw = recall_at_k(emb, knn_hamming(emb, n_queries=10, k=5), 10, 5)
     avg_rerank = rec.agg(F.avg("recall")).first()[0]
     avg_raw = raw.agg(F.avg("recall")).first()[0]
     assert avg_rerank >= avg_raw

@@ -105,3 +105,64 @@ def test_one_way_to_land_replay_batches_and_scratch_dirs():
                         if isinstance(n, ast.Call)
                         and _dotted(n.func) == "tempfile.mkdtemp"]
     assert not bad, bad
+
+
+ANN_ORACLE_KEYS = (
+    "knn_bruteforce", "knn_lsh", "ann_recall", "ivfpq_recall", "sq8_recall",
+    "matryoshka_recall", "hamming_recall", "hamming_rerank_recall",
+    "pq_rotation_recall", "knn_refine", "knn_hamming_rerank",
+)
+
+
+def _module_functions(rel: str) -> dict[str, ast.FunctionDef]:
+    tree = ast.parse((ROOT / rel).read_text())
+    return {n.name: n for n in tree.body if isinstance(n, ast.FunctionDef)}
+
+
+def _left_joins(fn: ast.FunctionDef) -> bool:
+    """Does ``fn`` build a DataFrame ``"left"`` join or SQL ``LEFT JOIN``
+    (docstrings aside)?"""
+    doc = fn.body[0].value if fn.body and isinstance(fn.body[0], ast.Expr) \
+        else None
+    for n in ast.walk(fn):
+        if isinstance(n, ast.Call) and _dotted(n.func).endswith(".join"):
+            args = [*n.args, *(k.value for k in n.keywords)]
+            if any(isinstance(a, ast.Constant) and a.value == "left"
+                   for a in args):
+                return True
+        if (isinstance(n, ast.Constant) and n is not doc
+                and isinstance(n.value, str) and "LEFT JOIN" in n.value):
+            return True
+    return False
+
+
+def test_one_recall_harness_and_composed_ann_oracles():
+    """Every ANN recall row is measured one way: in ``similarity.py``
+    only ``recall_at_k`` reads the cached exact ground truth, and only
+    it and its DuckDB twin ``sql_recall_at_k`` left-join an index's
+    top-k onto that ground truth (``semdedup``'s left join marks
+    dominated vectors and is the one other).  The ANN oracles are
+    calls composing the shared ``sql_*`` fragments, never inline SQL."""
+    funcs = _module_functions("async_stream_processing_spark/llm/similarity.py")
+    gt_readers = {
+        name for name, fn in funcs.items()
+        if any(isinstance(n, ast.Call)
+               and _dotted(n.func) == "knn_bruteforce_cached"
+               for n in ast.walk(fn))
+    }
+    assert gt_readers == {"recall_at_k"}
+    left = {name for name, fn in funcs.items() if _left_joins(fn)}
+    assert left == {"recall_at_k", "sql_recall_at_k",
+                    "semdedup", "sql_semdedup"}
+
+    tree = ast.parse((ROOT / "llm_queries.py").read_text())
+    oracles: dict[str, list[ast.expr]] = {}
+    for d in (n for n in ast.walk(tree) if isinstance(n, ast.Dict)):
+        for k, v in zip(d.keys, d.values):
+            if isinstance(k, ast.Constant) and k.value in ANN_ORACLE_KEYS:
+                oracles.setdefault(k.value, []).append(v)
+    assert sorted(oracles) == sorted(ANN_ORACLE_KEYS)
+    inline = [key for key, vals in oracles.items()
+              if len(vals) != 1 or not isinstance(vals[0], ast.Call)
+              or not _dotted(vals[0].func).startswith("sql_")]
+    assert not inline, inline

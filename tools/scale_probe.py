@@ -404,6 +404,7 @@ def main() -> None:
     from async_stream_processing_spark.llm.sampling import train_val_split
     from async_stream_processing_spark.llm.similarity import (
         knn_pq_adc,
+        knn_refine,
         pq_codes,
     )
     from async_stream_processing_spark.llm.text_analysis import (
@@ -433,7 +434,8 @@ def main() -> None:
         "temperature_mixture": (lambda d: _temp_mix(d), docs1, docs8),
         "bpe_apply": (lambda d: _bpe_apply(d), docs1, docs8),
         "filter_audit": (lambda d: _filter_audit(d), docs1, docs8),
-        "knn_refine": (lambda e: _knn_refine(e), emb1, emb8),
+        "knn_refine": (lambda e: knn_refine(e, n_queries=10, k=5,
+                                            shortlist=20), emb1, emb8),
         "max_drawdown": (lambda ev: _max_dd(ev), ev1, ev8),
         "bollinger_bands": (lambda ev: _bollinger(ev), ev1, ev8),
     }
@@ -686,12 +688,6 @@ def _filter_audit(docs):
     from async_stream_processing_spark.llm.curation import filter_audit
 
     return filter_audit(docs)
-
-
-def _knn_refine(emb):
-    from async_stream_processing_spark.llm.similarity import knn_refine
-
-    return knn_refine(emb, n_queries=10, k=5, shortlist=20)
 
 
 def _sub_spans(docs):
