@@ -238,9 +238,12 @@ def exact_rerank(
     Plan: the shortlist (n_queries * R rows) broadcasts back onto the
     corpus scan, so the rerank reads only matching rows.  A candidate's
     norm is taken after that join (per shortlisted pair, not per corpus
-    vector), the query norms are hoisted, and the top-k is the bounded
-    :func:`_cosine_topk`.  Output: (query_id, neighbor_id, rank,
-    cosine)."""
+    vector), the query norms are hoisted, and the top-k is ONE plain
+    ``row_number`` window, the shape of :func:`_sql_cosine_topk`: its
+    input is already bounded at n_queries * R rows, so the partial
+    per-partition pass of :func:`_cosine_topk` (for corpus-sized
+    inputs) would only add an exchange.  Output: (query_id,
+    neighbor_id, rank, cosine)."""
     scored = (
         embeddings.select(
             F.col("vec_id").alias("neighbor_id"),
@@ -250,9 +253,15 @@ def exact_rerank(
               "neighbor_id")
         .withColumn("c_n", norm(F.col("c_emb")))
         .join(F.broadcast(_query_side(embeddings, n_queries)), "query_id")
+        .withColumn("cos", _hoisted_cos())
     )
-    return _cosine_topk(scored, k).select(
-        "query_id", "neighbor_id", "rank", F.col("cos").alias("cosine")
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("cos"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w).cast("long"))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank",
+                F.col("cos").alias("cosine"))
     )
 
 

@@ -70,6 +70,7 @@ from __future__ import annotations
 from collections.abc import Callable
 from typing import Any, NamedTuple
 
+import numpy as np
 import pandas as pd
 
 __all__ = [
@@ -422,6 +423,20 @@ def ddl_columns(ddl: str) -> list[str]:
     return [field.split(" ", 1)[0] for field in ddl.split(", ")]
 
 
+def read_group(pdfs, value: str):
+    """A key's rows in one micro-batch as (ts_ns, event_id, value) numpy
+    columns, read without copying: ``pdfs`` is the Arrow-chunk iterator
+    ``applyInPandasWithState`` hands a fold (or one DataFrame), and the
+    chunks are concatenated only when the key arrived in more than one.
+    ``ts`` is the datetime64[ns] column viewed as int64 epoch-ns."""
+    if not isinstance(pdfs, pd.DataFrame):
+        pdfs = list(pdfs)
+        pdfs = pdfs[0] if len(pdfs) == 1 else pd.concat(
+            pdfs, ignore_index=True)
+    return (pdfs["ts"].to_numpy().view("int64"),
+            pdfs["event_id"].to_numpy(), pdfs[value].to_numpy())
+
+
 def apply_fold(stream, fold, output: str, state: str, delay: str):
     """Key ``stream`` by user and run ``fold`` under a ``delay``
     watermark: append mode, no timeout."""
@@ -452,11 +467,11 @@ def fold_stream(stream, kind: str, **kw):
     def fold(key, pdfs, state):
         uid = int(key[0])
         core = k.unpack(state.get) if state.exists else k.init
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort")
+        ts, eid, v = read_group(pdfs, k.value)
+        order = np.lexsort((eid, ts))  # stable, (ts, event_id) order
         core, rows = k.kernel(
-            core, uid, pdf["ts"].astype("int64").tolist(),
-            pdf["event_id"].tolist(), pdf[k.value].tolist(), kw,
+            core, uid, ts[order].tolist(), eid[order].tolist(),
+            v[order].tolist(), kw,
         )
         state.update(k.pack(core))
         yield pd.DataFrame(rows, columns=cols, dtype=object)

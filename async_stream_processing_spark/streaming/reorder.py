@@ -37,9 +37,20 @@ One table: every kind comes from ``streaming.folds.FOLD_KINDS``, so
 one :func:`reorder_step` and one :func:`reordered_fold_stream` serve
 all seven.  The state schema is DERIVED from the ordered fold's: its
 fixed-width core, then ``nb`` for the per-event kinds, then the
-pending-row parallel arrays (``_BUF_FIELDS``, bounded by the watermark
-horizon).  Output rows match the ordered fold's (plus ``nb`` for the
-per-event kinds), so the same oracles and ``folds.final_rows`` apply.
+pending rows packed into ONE ``buf BINARY`` field (bounded by the
+watermark horizon).  Output rows match the ordered fold's (plus ``nb``
+for the per-event kinds), so the same oracles and ``folds.final_rows``
+apply.
+
+State layout: ``buf`` is little-endian int64, ``[ts_ns…, event_id…,
+value…]`` — three equal runs, each in (ts, event_id) order.  It is not
+three ``ARRAY<BIGINT>`` fields because Spark builds the state encoder
+for an array with ``MapObjects``, whose lambda-variable ids come from a
+global counter: the generated codec source differed every micro-batch,
+so each batch paid two extra Janino compiles.  A fixed-width row plus
+one binary field holds no lambda, so batch N+1 reuses batch N's
+compiled codec.  :func:`_pack_buf` / :func:`_unpack_buf` convert at the
+state boundary only; :func:`reorder_step` works on lists.
 
 Exactness: both paths call the SAME pure kernels as the ordered folds
 (``streaming/folds.py``), so the recurrences cannot drift; the
@@ -51,16 +62,17 @@ from __future__ import annotations
 
 from bisect import bisect_left
 
+import numpy as np
 import pandas as pd
 
-from .folds import FOLD_KINDS, apply_fold, ddl_columns
+from .folds import FOLD_KINDS, apply_fold, ddl_columns, read_group
 
 __all__ = [
     "reordered_fold_stream",
     "REORDER_STATE_SCHEMAS",
 ]
 
-_BUF_FIELDS = "bt ARRAY<BIGINT>, be ARRAY<BIGINT>, bv ARRAY<BIGINT>"
+_BUF_FIELD = "buf BINARY"
 
 
 def _nb(kind) -> str:
@@ -69,15 +81,27 @@ def _nb(kind) -> str:
 
 
 #: reorder-buffered state schemas: the ordered fold's fixed-width core,
-#: the per-event kinds' emission counter, then the pending-row parallel
-#: arrays (bounded by the watermark horizon).
+#: the per-event kinds' emission counter, then the packed pending rows
+#: (bounded by the watermark horizon).
 REORDER_STATE_SCHEMAS = {
-    name: kind.state + _nb(kind) + ", " + _BUF_FIELDS
+    name: kind.state + _nb(kind) + ", " + _BUF_FIELD
     for name, kind in FOLD_KINDS.items()
 }
 
 
-def _merge_pending(state_tail, pdf: pd.DataFrame, vcol: str):
+def _pack_buf(bt, be, bv) -> bytes:
+    """Pending rows -> the state's ``buf``: little-endian int64,
+    ``[ts_ns…, event_id…, value…]``."""
+    return np.array((bt, be, bv), dtype="<i8").tobytes()
+
+
+def _unpack_buf(blob) -> tuple[list, list, list]:
+    """The state's ``buf`` -> (ts_ns, event_id, value) lists."""
+    bt, be, bv = np.frombuffer(blob, dtype="<i8").reshape(3, -1)
+    return bt.tolist(), be.tolist(), bv.tolist()
+
+
+def _merge_pending(state_tail, pdf, vcol: str):
     """Merge the carried pending buffer with the batch's rows, sorted
     by (ts, event_id).  The carried buffer is ALREADY sorted (it is
     this function's own output from the previous batch), so only the
@@ -90,9 +114,8 @@ def _merge_pending(state_tail, pdf: pd.DataFrame, vcol: str):
 
     carry = zip(state_tail[0] or (), state_tail[1] or (),
                 state_tail[2] or ())
-    new = sorted(zip(pdf["ts"].astype("int64").tolist(),
-                     pdf["event_id"].tolist(),
-                     pdf[vcol].tolist()))
+    ts, eid, v = read_group(pdf, vcol)
+    new = sorted(zip(ts.tolist(), eid.tolist(), v.tolist()))
     merged = list(_heap_merge(carry, new))
     if not merged:
         return [], [], []
@@ -100,9 +123,11 @@ def _merge_pending(state_tail, pdf: pd.DataFrame, vcol: str):
     return bt, be, bv
 
 
-def reorder_step(kind: str, core, nb, buf, pdf: pd.DataFrame,
-                 wm_ns: int, uid, kw: dict):
+def reorder_step(kind: str, core, nb, buf, pdf, wm_ns: int, uid,
+                 kw: dict):
     """Pure reorder step — exposed for Spark-free differential testing.
+    ``pdf`` is the key's batch rows: one DataFrame, or the chunks
+    ``applyInPandasWithState`` hands the fold (``folds.read_group``).
     Merges the batch into the pending buffer, folds the rows older than
     the watermark into ``core``, and returns (core', nb', buf', rows).
     Per-key kinds emit one speculative row: the fold over core' ⊕
@@ -141,17 +166,16 @@ def reordered_fold_stream(stream, kind: str, delay: str = "10 minutes",
         uid = int(key[0])
         if state.exists:
             st = state.get
-            core, buf = k.unpack(st[:width]), st[-3:]
+            core, buf = k.unpack(st[:width]), _unpack_buf(st[-1])
             nb = st[width] if k.rows else 0
         else:
             core, nb, buf = k.init, 0, (None, None, None)
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        core, nb, (bt, be, bv), rows = reorder_step(
-            kind, core, nb, buf, pdf,
+        core, nb, buf, rows = reorder_step(
+            kind, core, nb, buf, pdfs,
             state.getCurrentWatermarkMs() * 1_000_000, uid, kw,
         )
         state.update((*k.pack(core), *((nb,) if k.rows else ()),
-                      bt, be, bv))
+                      _pack_buf(*buf)))
         yield pd.DataFrame(rows, columns=cols, dtype=object)
 
     return apply_fold(stream, fold, output, REORDER_STATE_SCHEMAS[kind],
